@@ -23,9 +23,11 @@ Three layouts come out of one row generator:
 
 from __future__ import annotations
 
-import multiprocessing
+import json
 import os
 import shutil
+import subprocess
+import sys
 from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
@@ -51,7 +53,7 @@ SERIES_IDS = tuple(((i + 1) * 0x9E3779B97F4A7C15) % 2**64 for i in range(len(EVE
 #: cache entries kept; older ones are deleted when a new one is written
 CACHE_KEEP = 6
 #: part of every cache key: bump it when the generator's output changes
-DATA_VERSION = 1
+DATA_VERSION = 2
 
 
 def gen_events(rng: np.random.Generator, n: int, t0_us: int, span_us: int) -> dict:
@@ -150,27 +152,22 @@ def build_month(path: str, seed: int, rows: int, with_hbase: bool) -> None:
            os.path.join(path, "delta", "events.parquet", "part-000.parquet"))
 
 
-#: arrival window of one stream file, and files in the short warm-up replay
+#: arrival window of one stream file
 STREAM_FILE_S = 7200
-STREAM_SHORT_FILES = 2
 
 
 def build_stream(path: str, seed: int, files: int, rows_per_file: int) -> None:
     """``files`` arrival files of ``rows_per_file`` events, each covering
-    the next :data:`STREAM_FILE_S` seconds. ``arrivals/events.parquet``
-    holds all of them; ``short/events.parquet`` the first few, for warm-up
-    and layer probes."""
+    the next :data:`STREAM_FILE_S` seconds, in ``arrivals/events.parquet``."""
     rng = np.random.default_rng([seed, files, rows_per_file, 2])
     for f in range(files):
         t0 = (MONTH_START_S + f * STREAM_FILE_S) * US
         ev = gen_events(rng, rows_per_file, t0, STREAM_FILE_S * US)
         table = columnar_table(ev, 0, rows_per_file)
-        subdirs = ("arrivals", "short") if f < STREAM_SHORT_FILES else ("arrivals",)
-        for sub in subdirs:
-            p = os.path.join(path, sub, "events.parquet", f"part-{f:03d}.parquet")
-            _write(table, p)
-            # the file source orders files by modification time
-            os.utime(p, (1_700_000_000 + f, 1_700_000_000 + f))
+        p = os.path.join(path, "arrivals", "events.parquet", f"part-{f:03d}.parquet")
+        _write(table, p)
+        # the file source orders files by modification time
+        os.utime(p, (1_700_000_000 + f, 1_700_000_000 + f))
 
 
 # -- cache -------------------------------------------------------------------
@@ -179,11 +176,12 @@ def build_stream(path: str, seed: int, files: int, rows_per_file: int) -> None:
 class DataCache:
     """Datasets on disk under ``root``, keyed by their generator arguments.
 
-    An entry is written by a child process, so the generator's arrays never
-    count toward the benchmark's own peak memory, into a temporary directory
-    renamed into place once complete, so a run cut short never leaves a
-    half-written entry behind a valid name. At most :data:`CACHE_KEEP`
-    entries are kept.
+    An entry is written by a child interpreter (``python3 datagen.py``),
+    waited for before :meth:`get` returns, so the generator's arrays never
+    count toward the benchmark's own peak memory and no helper process
+    outlives the call. It writes into a temporary directory renamed into
+    place once complete, so a run cut short never leaves a half-written
+    entry behind a valid name. At most :data:`CACHE_KEEP` entries are kept.
     """
 
     def __init__(self, root: str):
@@ -198,11 +196,11 @@ class DataCache:
             return path
         tmp = path + ".tmp"
         shutil.rmtree(tmp, ignore_errors=True)
-        child = multiprocessing.get_context("spawn").Process(target=generate, args=(tmp, *args))
-        child.start()
-        child.join()
-        if child.exitcode != 0:
-            raise RuntimeError(f"generating {name} failed with exit code {child.exitcode}")
+        # run() kills and waits for the child if the wait is interrupted
+        code = subprocess.run([sys.executable, os.path.abspath(__file__), generate.__name__,
+                               tmp, json.dumps(args)]).returncode
+        if code != 0:
+            raise RuntimeError(f"generating {name} failed with exit code {code}")
         os.rename(tmp, path)
         self._evict()
         return path
@@ -212,3 +210,10 @@ class DataCache:
         entries.sort(key=os.path.getmtime, reverse=True)
         for stale in entries[CACHE_KEEP:]:
             shutil.rmtree(stale, ignore_errors=True)
+
+
+if __name__ == "__main__":
+    # python3 datagen.py <generator> <path> <JSON list of its other arguments>
+    _, generator, out_path, generator_args = sys.argv
+    {"build_month": build_month, "build_stream": build_stream}[generator](
+        out_path, *json.loads(generator_args))

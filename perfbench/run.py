@@ -13,11 +13,14 @@ metrics with ``--trace 0``, the per-layer ones with ``--trace 1``.
 from __future__ import annotations
 
 import argparse
+import ctypes
 import json
 import os
 import shutil
+import signal
 import sys
 import time
+from collections import defaultdict
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -65,23 +68,110 @@ def vm_hwm_mb(pid: int | str) -> float:
     raise RuntimeError(f"no VmHWM for process {pid}")
 
 
-def stop_jvm(spark) -> None:
-    """Stop the session, then the gateway JVM, and wait for it to exit."""
-    from pyspark import SparkContext
+#: prctl option: orphaned processes below this one are re-parented to it
+PR_SET_CHILD_SUBREAPER = 36
 
+
+def become_subreaper() -> None:
+    """Adopt every orphan below this process, so a process started by a
+    child (Spark's launcher, started by the JVM) can still be waited for
+    once its parent has ended."""
+    libc = ctypes.CDLL(None, use_errno=True)
+    libc.prctl.argtypes = [ctypes.c_int] + [ctypes.c_ulong] * 4
+    libc.prctl.restype = ctypes.c_int
+    if libc.prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0) != 0:
+        raise OSError(ctypes.get_errno(), "prctl(PR_SET_CHILD_SUBREAPER)")
+
+
+def descendants(pid: int) -> list[int]:
+    """Every live process below ``pid``, from the parent links in ``/proc``."""
+    children = defaultdict(list)
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/stat") as f:
+                # "pid (comm) state ppid ...": comm may hold spaces and parentheses
+                state, ppid = f.read().rsplit(")", 1)[1].split()[:2]
+        except (OSError, IndexError, ValueError):
+            continue  # ended while listed
+        if state != "Z":
+            children[int(ppid)].append(int(entry))
+    out, todo = [], [pid]
+    while todo:
+        below = children[todo.pop()]
+        out += below
+        todo += below
+    return out
+
+
+def reap() -> bool:
+    """Reap every child that has ended; False once no child is left."""
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return False
+        if pid == 0:
+            return True
+
+
+def end_descendants(grace_s: float) -> None:
+    """Wait until no process below this one is left, reaping each: after
+    ``grace_s`` seconds terminate the ones still running, then kill them."""
+    for sig, wait_s in ((None, grace_s), (signal.SIGTERM, 10.0), (signal.SIGKILL, 10.0)):
+        for pid in descendants(os.getpid()) if sig else ():
+            try:
+                os.kill(pid, sig)
+            except OSError:
+                pass  # ended meanwhile
+        deadline = time.monotonic() + wait_s
+        while reap():
+            if time.monotonic() > deadline:
+                break
+            time.sleep(0.05)
+        else:
+            return
+
+
+def stop_jvm() -> None:
+    """Stop the session and the gateway JVM, if one was started, and wait
+    for the JVM and every process it started to end."""
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+
+    try:
+        if SparkSession._instantiatedSession is not None:
+            SparkSession._instantiatedSession.stop()
+        elif SparkContext._active_spark_context is not None:
+            SparkContext._active_spark_context.stop()
+    except Exception as e:  # noqa: BLE001 - the JVM is stopped below either way
+        print(f"perfbench: stopping the session failed: {e}", file=sys.stderr)
     gateway = SparkContext._gateway
-    spark.stop()
     if gateway is None:
         return
-    proc = gateway.proc
     gateway.shutdown()
-    if proc is not None:
-        proc.stdin.close()  # the JVM exits when its stdin closes
-        proc.wait(timeout=60)
+    SparkContext._gateway = SparkContext._jvm = None
+    if gateway.proc is not None:
+        gateway.proc.stdin.close()  # the JVM exits when its stdin closes
+    end_descendants(grace_s=60.0)
 
 
 def main(argv=None) -> int:
+    """Run one workload; on every way out, stop every process it started."""
     args = parse_args(argv)
+    become_subreaper()
+    # a terminating signal unwinds the stack, so the clean-up below runs
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
+    try:
+        return run(args)
+    finally:
+        if "pyspark" in sys.modules:
+            stop_jvm()
+        end_descendants(grace_s=1.0)
+
+
+def run(args) -> int:
     if not os.path.isdir(os.path.join(ROOT, "hbase_taggregator_spark")):
         print(f"perfbench: engine package not found under {ROOT}", file=sys.stderr)
         return 2
@@ -109,11 +199,7 @@ def main(argv=None) -> int:
     wl.prepare()
     phases["prepare"] = time.perf_counter()
 
-    try:
-        return measure(args, ctx, wl, tracer, nproc, work, phases)
-    finally:
-        if ctx.spark is not None:
-            stop_jvm(ctx.spark)
+    return measure(args, ctx, wl, tracer, nproc, work, phases)
 
 
 def measure(args, ctx, wl, tracer, nproc: int, work: str, phases: dict) -> int:
@@ -171,7 +257,7 @@ def measure(args, ctx, wl, tracer, nproc: int, work: str, phases: dict) -> int:
     counts = [job_counts(ctx.spark.sparkContext, op.job_group)
               for op in ops + probe_ops if op.job_group and op.kind in W.QUERY_KINDS]
     phases["timed"] = time.perf_counter()
-    stop_jvm(ctx.spark)
+    stop_jvm()
     ctx.spark = None
     phases["stop"] = time.perf_counter()
 

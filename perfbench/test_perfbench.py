@@ -1,6 +1,7 @@
 """Tests of the benchmark itself: generator determinism, the seeded query
-mix, the oracle's restated semantics, span bookkeeping and the metric
-declarations in ``BENCHMARK.json``.
+mix, the oracle's restated semantics, span bookkeeping, the metric
+declarations in ``BENCHMARK.json`` and the ending of every process a run
+starts.
 
     python3 -m pytest perfbench -q
 """
@@ -103,6 +104,14 @@ def test_cache_reuses_and_evicts(tmp_path):
     assert not os.path.exists(first)
 
 
+def test_cache_generation_leaves_no_process(tmp_path):
+    import run
+
+    before = set(run.descendants(os.getpid()))
+    datagen.DataCache(str(tmp_path / "cache")).get(datagen.build_stream, 1, 2, 10)
+    assert set(run.descendants(os.getpid())) == before
+
+
 # -- query mix ---------------------------------------------------------------
 
 
@@ -130,6 +139,15 @@ def test_query_mix_is_reproducible_and_balanced():
     for q in mix:
         upper = oracle.upper_bound_us(q["lo"], q["hi"], q["iv"], q["cutoff"])
         assert datagen.MONTH_START_S <= q["lo"] and upper <= MONTH_END_S
+
+
+def test_bulk_scan_reports_whole_cycles():
+    from workloads import Op, unit_latencies_ms
+
+    ops = [Op(kind, s) for kind, s in zip(["columnar", "rowkey", "rollup"] * 2,
+                                           [0.5, 2.0, 2.5, 0.7, 2.1, 2.2])]
+    assert unit_latencies_ms("bulk_scan", ops) == pytest.approx([5000.0, 5000.0])
+    assert unit_latencies_ms("dashboard", ops[:2]) == pytest.approx([500.0, 2000.0])
 
 
 # -- oracle ------------------------------------------------------------------
@@ -261,3 +279,19 @@ def test_refuses_to_run_without_the_engine(tmp_path):
     )
     assert p.returncode != 0
     assert '"metrics"' not in p.stdout
+
+
+def test_end_descendants_ends_orphans_too():
+    # the shell exits at once, orphaning two sleeps below the subreaper
+    script = (
+        "import subprocess, run\n"
+        "run.become_subreaper()\n"
+        "subprocess.run(['sh', '-c', 'sleep 60 & sleep 60 &'], check=True)\n"
+        "assert len(run.descendants(run.os.getpid())) == 2\n"
+        "run.end_descendants(grace_s=0.2)\n"
+        "print(run.descendants(run.os.getpid()), run.reap())\n"
+    )
+    p = subprocess.run([sys.executable, "-c", script], cwd=HERE, capture_output=True, text=True,
+                       timeout=60)
+    assert p.returncode == 0, p.stderr
+    assert p.stdout.split() == ["[]", "False"]
