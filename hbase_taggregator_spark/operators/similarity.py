@@ -54,38 +54,17 @@ def norm(a: Column) -> Column:
     return F.sqrt(_dec_sum(sq))
 
 
-def _ddot(a: Column, b: Column, width: int | None = None) -> Column:
+def _ddot(a: Column, b: Column) -> Column:
     """Plain-double dot product — 2 interpreted FP ops per element vs the
     exact path's ~5 Decimal ops. NOT oracle-exact on its own; used only
     where a proven error bound lets it decide for the exact algebra
     (:func:`ivf_assign`'s argmax prune, :func:`cos_ge`, the two-level
-    candidate prune).
-
-    ``width`` (r16): the statically-known array length unrolls the fold
-    into a flat chain of double multiply-adds — ``zip_with`` +
-    ``aggregate`` are CodegenFallback expressions evaluated interpreted
-    per row with a per-row array allocation, while the unrolled chain is
-    codegen-resident arithmetic (the `_pq_sqdist` discipline; decimal
-    unrolling regresses at dim 64, plain doubles don't — measured
-    0.87 s HOF vs 0.64 s unrolled on the 64k-row two-level candidate
-    join, 0 value mismatches). BIT-IDENTICAL by construction: the chain
-    adds the same products in the same left-to-right order as the fold,
-    and rows where either side's length differs from ``width`` fall
-    back to the HOF form, preserving the zip_with null-padding
-    semantics on ragged/odd-length rows."""
-    hof = F.aggregate(
+    two-phase top-k's double ranking)."""
+    return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    if width is None or not 0 < width <= 256:
-        return hof
-    acc = F.lit(0.0)
-    for j in range(width):
-        acc = acc + F.get(a, j).cast("double") * F.get(b, j).cast("double")
-    return F.when(
-        (F.size(a) == width) & (F.size(b) == width), acc
-    ).otherwise(hof)
 
 
 def _nz(den: Column) -> Column:

@@ -28,8 +28,10 @@ partition) → final HashAggregate: exactly the reference's region-partial +
 client-merge topology (``TimeseriesAggregationClient.java:167-195``) but
 executed by Tungsten with map-side combine, so shuffled bytes are bounded by
 bucket-count × partitions, independent of input rows. At 100 TB the plan is
-scan → codegen'd project/filter (pushed to parquet row groups where the raw
-column allows) → partial agg → tiny shuffle → final agg.
+scan → codegen'd project/filter → partial agg → tiny shuffle → final agg.
+The range filter compares the stored timestamp column with literal bounds
+(:func:`_in_range`), so a query over a plain parquet read skips row groups
+by its own range.
 """
 
 from __future__ import annotations
@@ -53,6 +55,25 @@ _VERB_EXPRS = {
     "avg": lambda v: F.avg(v),
     "count": lambda v: F.count(v),
 }
+
+
+def _in_range(ts_col: str, lo_us: int, hi_us: int) -> Column:
+    """Half-open ``lo ≤ ts < hi`` on the timestamp column itself, against
+    foldable ``timestamp_micros`` literals: on a parquet read this reaches
+    the scan as ``PushedFilters`` (row-group skipping — the reference's
+    scan-range bound, ``TimeseriesAggregationClient.java:576-581``), which
+    ``unix_micros(ts) >= lo`` never does."""
+    ts = F.col(ts_col)
+    return (ts >= F.timestamp_micros(F.lit(lo_us))) & (
+        ts < F.timestamp_micros(F.lit(hi_us))
+    )
+
+
+def _bucket_start(us_sql: str, lo_us: int, ival_us: int) -> Column:
+    """t_min-aligned bucket start of the epoch-µs SQL expression ``us_sql``:
+    ``lo + ((us − lo) div ival)·ival`` — pure int64 arithmetic (codegen'd,
+    O(1)/row); integer ``div`` keeps exactness for any epoch range."""
+    return F.expr(f"{lo_us} + (({us_sql} - {lo_us}) div {ival_us}) * {ival_us}")
 
 
 def to_epoch_us(t: Any) -> int:
@@ -136,13 +157,6 @@ class TimeseriesQuery:
             if c not in cols:
                 raise ValueError(f"column {c!r} not in input ({sorted(cols)})")
 
-    def _check(self) -> None:
-        self._check_range_only()
-        if self.value_col not in self.df.columns:
-            raise ValueError(
-                f"column {self.value_col!r} not in input ({sorted(self.df.columns)})"
-            )
-
     def upper_bound_us(self) -> int:
         """Effective exclusive upper bound of the bucketed region.
 
@@ -165,37 +179,24 @@ class TimeseriesQuery:
         return self.t_min_us + max(n_full + 1, 2) * self.interval_us
 
     def bucket_start_us(self) -> Column:
-        """Bucket assignment as pure int64 arithmetic (codegen'd, O(1)/row).
-
-        Equivalent to ``window(ts, ival, startTime=t_min % ival)`` but
-        avoids the struct build; integer ``div`` keeps exactness for any
-        epoch range."""
-        us = F.unix_micros(F.col(self.ts_col))
-        idx = F.expr(
-            f"(unix_micros(`{self.ts_col}`) - {self.t_min_us}) div {self.interval_us}"
-        )
-        del us
-        return (F.lit(self.t_min_us) + idx * F.lit(self.interval_us)).alias(
-            "bucket_start_us"
-        )
+        """Bucket assignment (:func:`_bucket_start`) — equivalent to
+        ``window(ts, ival, startTime=t_min % ival)`` but avoids the struct
+        build."""
+        return _bucket_start(
+            f"unix_micros(`{self.ts_col}`)", self.t_min_us, self.interval_us
+        ).alias("bucket_start_us")
 
     def _bucketed(self, aggs: Iterable[tuple[str, str]]) -> DataFrame:
-        """filter → project bucket → groupBy → agg → orderBy."""
-        self._check()
-        us = F.unix_micros(F.col(self.ts_col))
-        lo, hi = self.t_min_us, self.upper_bound_us()
-        agg_exprs = [_VERB_EXPRS[verb](self.value_col).alias(alias) for verb, alias in aggs]
-        out = (
-            self.df.filter((us >= F.lit(lo)) & (us < F.lit(hi)))
-            .withColumn("bucket_start_us", self.bucket_start_us())
-            .groupBy("bucket_start_us", *self.dims)
-            .agg(*agg_exprs)
-            .withColumn("bucket_start", F.timestamp_micros(F.col("bucket_start_us")))
-            .select("bucket_start", "bucket_start_us", *self.dims,
-                    *[alias for _, alias in aggs])
-            .orderBy("bucket_start_us", *self.dims)
-        )
-        return out
+        """The verbs: :meth:`aggregate` over the named verb columns."""
+        self._check_range_only()
+        if self.value_col not in self.df.columns:
+            raise ValueError(
+                f"column {self.value_col!r} not in input ({sorted(self.df.columns)})"
+            )
+        return self.aggregate(
+            *[_VERB_EXPRS[verb](self.value_col).alias(alias) for verb, alias in aggs]
+        ).select("bucket_start", "bucket_start_us", *self.dims,
+                 *[alias for _, alias in aggs])
 
     # -- verbs (reference parity: the five RPC endpoints) --------------
     def max(self, alias: str = "max") -> DataFrame:
@@ -227,12 +228,11 @@ class TimeseriesQuery:
         """Bucket + group with caller-supplied aggregate Columns — the
         extension point for aggregates beyond the reference's five verbs
         (decimal-exact sums, percentiles, sketches…). Same single-pass
-        partial/final physical shape."""
+        partial/final physical shape: filter → project bucket → groupBy →
+        agg → orderBy."""
         self._check_range_only()
-        us = F.unix_micros(F.col(self.ts_col))
-        lo, hi = self.t_min_us, self.upper_bound_us()
         return (
-            self.df.filter((us >= F.lit(lo)) & (us < F.lit(hi)))
+            self.df.filter(_in_range(self.ts_col, self.t_min_us, self.upper_bound_us()))
             .withColumn("bucket_start_us", self.bucket_start_us())
             .groupBy("bucket_start_us", *self.dims)
             .agg(*agg_cols)
@@ -381,7 +381,8 @@ def continuous_rollup(
     Returns ``(fine, coarse)``: the fine rollup (materialize it with any
     sink — it is the continuously-maintained table; at ingest time the
     streaming form is bucketed_stream_agg with the same interval) and the
-    coarse re-aggregation."""
+    coarse re-aggregation (the :func:`merge_rollups` algebra over the fine
+    rows regridded to the coarse interval)."""
     if coarse_interval_s % fine_interval_s:
         raise ValueError(
             f"coarse interval {coarse_interval_s} must be a multiple of the "
@@ -397,35 +398,18 @@ def continuous_rollup(
         F.sum(v.cast("decimal(28,6)")).alias("sum_dec"),
         F.count(v).alias("count_value"),
     )
-    t_min_us = to_epoch_us(t_min)
-    coarse_us = coarse_interval_s * US_PER_SECOND
-    coarse_bucket = (
-        F.lit(t_min_us)
-        + F.expr(f"(bucket_start_us - {t_min_us}) div {coarse_us}")
-        * F.lit(coarse_us)
+    coarse_bucket = _bucket_start(
+        "bucket_start_us", q.t_min_us, coarse_interval_s * US_PER_SECOND
     ).alias("bucket_start_us")
-    coarse = (
-        fine.select(
-            coarse_bucket, "max_value", "min_value", "sum_dec", "count_value"
-        )
-        .groupBy("bucket_start_us")
-        .agg(
-            F.max("max_value").alias("max_value"),
-            F.min("min_value").alias("min_value"),
-            F.sum("sum_dec").alias("sum_dec"),
-            F.sum("count_value").alias("count_value"),
-        )
-        .select(
-            "bucket_start_us",
-            "max_value",
-            "min_value",
-            F.col("sum_dec").cast("double").alias("sum_value"),
-            F.col("count_value").cast("long").alias("count_value"),
-            (F.col("sum_dec").cast("double") / F.col("count_value")).alias(
-                "avg_value"
-            ),
-        )
-        .orderBy("bucket_start_us")
+    coarse = merge_rollups([
+        fine.select(coarse_bucket, "max_value", "min_value", "sum_dec", "count_value")
+    ]).select(
+        "bucket_start_us",
+        "max_value",
+        "min_value",
+        F.col("sum_dec").cast("double").alias("sum_value"),
+        F.col("count_value").cast("long").alias("count_value"),
+        (F.col("sum_dec").cast("double") / F.col("count_value")).alias("avg_value"),
     )
     return fine, coarse
 
@@ -475,17 +459,14 @@ def time_weighted_avg(
 
     w = W.partitionBy(*series_cols, "bucket_start_us").orderBy("us", tiebreak_col)
     d = (
-        events.filter((us >= lo) & (us < hi))
+        events.filter(_in_range(ts_col, lo, hi))
         .select(
             *series_cols,
             tiebreak_col,
             us.alias("us"),
             F.col(value_col).alias("v"),
         )
-        .withColumn(
-            "bucket_start_us",
-            F.expr(f"{lo} + ((us - {lo}) div {ival}) * {ival}"),
-        )
+        .withColumn("bucket_start_us", _bucket_start("us", lo, ival))
         .withColumn(
             "dt_us",
             F.coalesce(F.lead("us").over(w), F.col("bucket_start_us") + ival)
@@ -548,7 +529,7 @@ def counter_rate(
 
     w = W.partitionBy(*series_cols).orderBy("us", tiebreak_col)
     d = (
-        events.filter((us >= lo) & (us < hi))
+        events.filter(_in_range(ts_col, lo, hi))
         .select(
             *series_cols, tiebreak_col, us.alias("us"), F.col(value_col).alias("v")
         )
@@ -560,10 +541,7 @@ def counter_rate(
             .when(F.col("delta") < 0, F.col("v"))
             .otherwise(F.col("delta")),
         )
-        .withColumn(
-            "bucket_start_us",
-            F.expr(f"{lo} + ((us - {lo}) div {ival}) * {ival}"),
-        )
+        .withColumn("bucket_start_us", _bucket_start("us", lo, ival))
     )
     return (
         d.groupBy(*series_cols, "bucket_start_us")
@@ -612,11 +590,10 @@ def linear_trend(
     classic distributive aggregate, no window, no second pass. Output
     slope is in VALUE UNITS per second (cents rescaled)."""
     lo, hi = to_epoch_us(t_min), to_epoch_us(t_max)
-    us = F.unix_micros(F.col(ts_col))
     x = F.expr(f"(unix_micros(`{ts_col}`) - {lo}) div {US_PER_SECOND}")
     y = F.expr(f"CAST(CAST(`{value_col}` AS DECIMAL(18,2)) * 100 AS BIGINT)")
     d = (
-        events.filter((us >= lo) & (us < hi))
+        events.filter(_in_range(ts_col, lo, hi))
         .select(*series_cols, x.alias("x"), y.alias("y"))
         .groupBy(*series_cols)
         .agg(
@@ -670,7 +647,7 @@ def rolling_zscore_anomalies(
         .rowsBetween(-(window_rows - 1), 0)
     )
     d = (
-        events.filter((us >= lo) & (us < hi))
+        events.filter(_in_range(ts_col, lo, hi))
         .select(
             *series_cols, tiebreak_col, us.alias("us"), y.alias("cy"),
             F.col(value_col).alias("v"),
@@ -862,16 +839,12 @@ def ewma_truncated(
         raise ValueError(f"k must be >= 1, got {k}")
     lo, hi = to_epoch_us(t_min), to_epoch_us(t_max)
     ival = interval_s * US_PER_SECOND
-    us = F.unix_micros(F.col(ts_col))
     from pyspark.sql import Window as W
 
     buckets = (
-        events.filter((us >= lo) & (us < hi))
+        events.filter(_in_range(ts_col, lo, hi))
         .withColumn(
-            "bucket_start_us",
-            F.expr(
-                f"{lo} + ((unix_micros(`{ts_col}`) - {lo}) div {ival}) * {ival}"
-            ),
+            "bucket_start_us", _bucket_start(f"unix_micros(`{ts_col}`)", lo, ival)
         )
         .groupBy(*series_cols, "bucket_start_us")
         .agg(
@@ -938,7 +911,7 @@ def largest_gaps(
 
     order_w = W.partitionBy(*series_cols).orderBy("us", tiebreak_col)
     d = (
-        events.filter((us >= lo) & (us < hi))
+        events.filter(_in_range(ts_col, lo, hi))
         .select(*series_cols, tiebreak_col, us.alias("us"))
         .withColumn("gap_start_us", F.lag("us").over(order_w))
         .filter(F.col("gap_start_us").isNotNull())

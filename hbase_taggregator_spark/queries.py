@@ -68,31 +68,18 @@ def _bucket_sql(t_min_s: int, interval_s: int) -> str:
     )
 
 
-def _ts_upper(t_min: int, t_max: int, interval: int, cutoff: str) -> int:
-    """Effective exclusive upper bound in seconds (mirrors
-    TimeseriesQuery.upper_bound_us so the scan prune never cuts data the
-    taggregator-mode trailing bucket still aggregates)."""
-    if cutoff == "strict":
-        return t_max
-    n_full = (t_max - t_min) // interval
-    return t_min + max(n_full + 1, 2) * interval
-
-
 def _ts_query(verb: str, t_min: int, t_max: int, interval: int, cutoff: str = "strict"):
     """Build one bucketed-aggregation query through the engine core.
 
-    The query's time range is passed down to the source so the predicate
-    lands on the raw int64-nanos column and reaches the parquet scan
+    The query's own range (up to the trailing bucket in taggregator mode)
+    filters the stored ``ts`` column and reaches the parquet scan
     (PushedFilters / row-group skipping) — the Spark analog of the
     reference's scan-range pruning (TimeseriesAggregationClient.java:576-581).
     At 100 TB this is the difference between scanning a week and scanning
     the whole table."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        events = load_table(
-            spark, sf_dir, "events",
-            time_range=(t_min * US, _ts_upper(t_min, t_max, interval, cutoff) * US),
-        )
+        events = load_table(spark, sf_dir, "events")
         q = (
             TimeseriesAggregator(spark)
             .table(events)
@@ -210,7 +197,7 @@ _register(
 def _ts_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All five verbs in one single-scan pass (the reference's '96 queries →
     1 scan' claim, generalized to multi-verb — README.md:5)."""
-    events = load_table(spark, sf_dir, "events", time_range=(T0 * US, T_MONTH * US))
+    events = load_table(spark, sf_dir, "events")
     q = (
         TimeseriesAggregator(spark)
         .table(events)
@@ -243,7 +230,7 @@ _register(
 def _ts_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucket × series dimension — a generalization the reference's scan
     model cannot express (it collapses everything in range)."""
-    events = load_table(spark, sf_dir, "events", time_range=(T0 * US, T_MONTH * US))
+    events = load_table(spark, sf_dir, "events")
     q = (
         TimeseriesAggregator(spark)
         .table(events)
@@ -278,8 +265,10 @@ def _ts_rowkey_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     rowkey, embedded int32 epoch-seconds, mask '00000001111'), then decode
     through the engine's mask expressions and aggregate. The oracle computes
     from the original timestamp — any decode error breaks the hash match.
-    The raw-column prune is equivalent to the decoded-seconds filter because
-    both bounds are whole seconds (floor(t) ∈ [lo, hi) ⟺ t ∈ [lo, hi))."""
+    The query filters the decoded column, which cannot reach the scan, so
+    the loader gets the range too; that raw-column prune is equivalent to
+    the decoded-seconds filter because both bounds are whole seconds
+    (floor(t) ∈ [lo, hi) ⟺ t ∈ [lo, hi))."""
     events = load_table(spark, sf_dir, "events", time_range=(T0 * US, T_WEEK * US))
     shaped = events.select(
         encode_rowkey(b"evntkey", F.expr("unix_micros(ts) div 1000000")).alias("rowkey"),

@@ -417,7 +417,7 @@ def _q_gapfilled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = (
         TimeseriesAggregator(spark)
-        .table(_lt(spark, sf_dir, "events", time_range=(T0 * US, _T2D * US)))
+        .table(_lt(spark, sf_dir, "events"))
         .range(T0, _T2D)
         .interval(900)
     )

@@ -16,9 +16,10 @@ from pyspark.sql import SparkSession
 #: these are runtime-settable, so :func:`configure` can be applied to a
 #: session the engine did not create (e.g. the verification driver's).
 RUNTIME_CONFS = {
-    # The synthetic `events` table stores TIMESTAMP(NANOS) which Spark's
-    # vectorized parquet reader rejects; read it as raw int64 nanos and let
-    # the source layer widen to TimestampType (micros).
+    # Parquet TIMESTAMP(NANOS) columns are rejected by Spark's vectorized
+    # reader; read them as raw int64 nanos and let the source layer widen
+    # to TimestampType (micros). The test data's `events` tables store
+    # TIMESTAMP(MICROS) and read as timestamps directly.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Naive (isAdjustedToUTC=false) parquet timestamps otherwise surface as
     # TIMESTAMP_NTZ, which unix_micros/window() reject. With the session

@@ -8,11 +8,14 @@ bounds.
 
 Scale note (100 TB): filters placed on *raw* scan columns push down to the
 parquet reader (``PushedFilters`` in the physical plan) and skip row groups.
-The ``events`` table stores TIMESTAMP(NANOS) which Spark reads only as raw
-int64 (``spark.sql.legacy.parquet.nanosAsLong``); a filter on the *derived*
-TimestampType column cannot push down, so :func:`load_table` accepts an
-optional time range and applies it to the raw int64 nanos column *before*
-conversion — that predicate reaches the scan.
+The test data's ``events`` tables store ``ts`` as TIMESTAMP(MICROS,
+isAdjustedToUTC=false), read as TimestampType: a filter comparing that column
+with timestamp literals pushes down, so a bucketed query's own range
+(``TimeseriesQuery``) prunes the scan. Files written as TIMESTAMP(NANOS) are
+read as raw int64 (``spark.sql.legacy.parquet.nanosAsLong``) and widened here;
+a filter on the *widened* column cannot push down, so :func:`load_table`
+accepts an optional time range and applies it to the raw storage column
+*before* conversion — that predicate reaches the scan.
 """
 
 from __future__ import annotations
@@ -67,7 +70,12 @@ def load_table(
     """Load one test table; normalize event timestamps to TimestampType.
 
     ``time_range`` = (min_us, max_us) epoch-microseconds half-open; applied
-    to the raw storage column when possible so it pushes down to the scan.
+    to the raw storage column so it pushes down to the scan. A bucketed
+    query over the returned frame does not need it — its own range filter
+    reaches the scan. Pass it only where that filter cannot: nanos-as-long
+    storage (the query then filters the widened column), or a frame
+    transformed before the query (e.g. a synthesized rowkey whose decoded
+    timestamp is the query's time column).
     """
     configure(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")

@@ -46,13 +46,38 @@ def test_q3_q5_broadcast_dimensions(q):
 
 
 def test_events_time_range_pushdown(spark):
-    """With a raw-column time range, the predicate reaches the nanos scan."""
+    """An explicit ``time_range`` reaches the scan as a pushed ``ts`` filter."""
     from hbase_taggregator_spark.queries import T0, T_WEEK, US
     from hbase_taggregator_spark.sources.parquet import load_table
 
     df = load_table(spark, SF, "events", time_range=(T0 * US, T_WEEK * US))
     pushed = " ".join(P.pushed_filters(df))
     assert "ts" in pushed and "GreaterThanOrEqual" in pushed
+
+
+def test_bucketed_query_range_prunes_a_plain_load(spark):
+    """A query over ``load_table`` with no ``time_range`` pushes its own
+    range to the parquet scan. In taggregator mode the pushed upper bound
+    is the end of the trailing bucket (``upper_bound_us``), not t_max."""
+    from hbase_taggregator_spark import TimeseriesAggregator
+    from hbase_taggregator_spark.queries import T0, T_WEEK
+    from hbase_taggregator_spark.sources.parquet import load_table
+
+    # pushed timestamp literals print as java.sql.Timestamp, rendered by
+    # the same conversion Spark applies to the source filter
+    jts = spark._jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils
+    events = load_table(spark, SF, "events")
+    for cutoff in ("strict", "taggregator"):
+        q = (
+            TimeseriesAggregator(spark).table(events)
+            .range(T0, T_WEEK - 1800).interval(3600).mode(cutoff)
+        )
+        pushed = " ".join(P.pushed_filters(q.max()))
+        lo = jts.toJavaTimestamp(q.t_min_us).toString()
+        hi = jts.toJavaTimestamp(q.upper_bound_us()).toString()
+        assert f"GreaterThanOrEqual(ts,{lo})" in pushed, f"{cutoff}: {pushed!r}"
+        assert f"LessThan(ts,{hi})" in pushed, f"{cutoff}: {pushed!r}"
+    assert q.upper_bound_us() > q.t_max_us
 
 
 @pytest.mark.parametrize(
@@ -64,6 +89,7 @@ def test_events_time_range_pushdown(spark):
         "ts_multi_verb_28800",
         "ts_grouped_by_type_86400",
         "ts_rowkey_mode_3600",
+        "ts_count_900_gapfilled",
         "decoder_registry_long_be",
         "rowkey_range_scan",
     ],

@@ -12,9 +12,7 @@ algebra. These tests pin the parts the standing reference tests
   exactly zero, forcing the decimal fallback, whose cent_id tiebreak
   must match the legacy exact aggregate;
 - the UNTRUSTED path: a zero-norm corpus vector scores NULL under both
-  algebras and must keep the legacy NULL-negcos-first placement;
-- ``_ddot(width=...)``: the unrolled double chain is bit-identical to
-  the HOF fold, including ragged/short rows (null via the guard).
+  algebras and must keep the legacy NULL-negcos-first placement.
 """
 
 from __future__ import annotations
@@ -115,27 +113,3 @@ def test_two_phase_zero_norm_vector_keeps_null_score_semantics(spark):
             "the zero-norm vector must still be assigned (NULL-first)"
         )
 
-
-def test_ddot_width_unroll_bit_identical_including_ragged(spark):
-    """_ddot(width=k) must equal the HOF fold bit-for-bit: same
-    left-to-right IEEE addition order on full-width rows, and the size
-    guard must route ragged/short rows to the HOF form (zip_with
-    null-padding → NULL sum)."""
-    from hbase_taggregator_spark.operators.similarity import _ddot
-
-    rows = [
-        ([0.1, -0.7, 0.3333333333, 1e-9], [0.9, 0.2, -0.5, 0.25]),
-        ([1.0, 2.0, 3.0, 4.0], [4.0, 3.0, 2.0, 1.0]),
-        ([0.1, 0.2], [0.3, 0.4, 0.5, 0.6]),  # ragged: NULL either way
-        (None, [1.0, 1.0, 1.0, 1.0]),
-    ]
-    df = spark.createDataFrame(rows, "a array<double>, b array<double>")
-    got = df.select(
-        _ddot(F.col("a"), F.col("b")).alias("hof"),
-        _ddot(F.col("a"), F.col("b"), width=4).alias("unrolled"),
-    ).collect()
-    for r in got:
-        assert (r["hof"] is None) == (r["unrolled"] is None)
-        if r["hof"] is not None:
-            # bit identity, not approximate equality
-            assert repr(r["hof"]) == repr(r["unrolled"])
