@@ -30,8 +30,8 @@ executed by Tungsten with map-side combine, so shuffled bytes are bounded by
 bucket-count × partitions, independent of input rows. At 100 TB the plan is
 scan → codegen'd project/filter → partial agg → tiny shuffle → final agg.
 The range filter compares the stored timestamp column with literal bounds
-(:func:`_in_range`), so a query over a plain parquet read skips row groups
-by its own range.
+(``TimeseriesQuery._rows``), so a query over a plain parquet read skips row
+groups by its own range.
 """
 
 from __future__ import annotations
@@ -55,18 +55,6 @@ _VERB_EXPRS = {
     "avg": lambda v: F.avg(v),
     "count": lambda v: F.count(v),
 }
-
-
-def _in_range(ts_col: str, lo_us: int, hi_us: int) -> Column:
-    """Half-open ``lo ≤ ts < hi`` on the timestamp column itself, against
-    foldable ``timestamp_micros`` literals: on a parquet read this reaches
-    the scan as ``PushedFilters`` (row-group skipping — the reference's
-    scan-range bound, ``TimeseriesAggregationClient.java:576-581``), which
-    ``unix_micros(ts) >= lo`` never does."""
-    ts = F.col(ts_col)
-    return (ts >= F.timestamp_micros(F.lit(lo_us))) & (
-        ts < F.timestamp_micros(F.lit(hi_us))
-    )
 
 
 def _bucket_start(us_sql: str, lo_us: int, ival_us: int) -> Column:
@@ -172,9 +160,9 @@ class TimeseriesQuery:
         than one interval still buckets cells in
         [t_min+ival, t_min+2·ival)."""
         assert self.t_min_us is not None and self.t_max_us is not None
-        assert self.interval_us is not None
         if self.cutoff == STRICT:
             return self.t_max_us
+        assert self.interval_us is not None
         n_full = (self.t_max_us - self.t_min_us) // self.interval_us
         return self.t_min_us + max(n_full + 1, 2) * self.interval_us
 
@@ -185,6 +173,20 @@ class TimeseriesQuery:
         return _bucket_start(
             f"unix_micros(`{self.ts_col}`)", self.t_min_us, self.interval_us
         ).alias("bucket_start_us")
+
+    def _rows(self) -> DataFrame:
+        """The input rows of the bucketed region: half-open
+        ``t_min ≤ ts < upper_bound_us()`` on the timestamp column itself,
+        against foldable ``timestamp_micros`` literals. On a parquet read
+        this reaches the scan as ``PushedFilters`` (row-group skipping — the
+        reference's scan-range bound,
+        ``TimeseriesAggregationClient.java:576-581``), which
+        ``unix_micros(ts) >= lo`` never does."""
+        ts = F.col(self.ts_col)
+        return self.df.filter(
+            (ts >= F.timestamp_micros(F.lit(self.t_min_us)))
+            & (ts < F.timestamp_micros(F.lit(self.upper_bound_us())))
+        )
 
     def _bucketed(self, aggs: Iterable[tuple[str, str]]) -> DataFrame:
         """The verbs: :meth:`aggregate` over the named verb columns."""
@@ -232,7 +234,7 @@ class TimeseriesQuery:
         agg → orderBy."""
         self._check_range_only()
         return (
-            self.df.filter(_in_range(self.ts_col, self.t_min_us, self.upper_bound_us()))
+            self._rows()
             .withColumn("bucket_start_us", self.bucket_start_us())
             .groupBy("bucket_start_us", *self.dims)
             .agg(*agg_cols)
@@ -379,39 +381,60 @@ def continuous_rollup(
     nest exactly into coarse ones.
 
     Returns ``(fine, coarse)``: the fine rollup (materialize it with any
-    sink — it is the continuously-maintained table; at ingest time the
-    streaming form is bucketed_stream_agg with the same interval) and the
-    coarse re-aggregation (the :func:`merge_rollups` algebra over the fine
-    rows regridded to the coarse interval)."""
+    sink — it is the continuously-maintained table; at ingest time a stream
+    keeps it with ``streaming.stream_aggregate(stream, t_min,
+    fine_interval_s, *rollup_state(value_col))``, the
+    ``streaming_continuous_rollup`` query) and its :func:`read_rollup` at the
+    coarse interval."""
     if coarse_interval_s % fine_interval_s:
         raise ValueError(
             f"coarse interval {coarse_interval_s} must be a multiple of the "
             f"fine interval {fine_interval_s} (t_min-aligned nesting)"
         )
-    q = TimeseriesQuery(df=events, ts_col=ts_col, value_col=value_col).range(
+    fine = TimeseriesQuery(df=events, ts_col=ts_col, value_col=value_col).range(
         t_min, t_max
-    ).interval(fine_interval_s)
+    ).interval(fine_interval_s).aggregate(*rollup_state(value_col))
+    return fine, read_rollup(fine, t_min, coarse_interval_s)
+
+
+def rollup_state(value_col: str = "value") -> list[Column]:
+    """The rollup's partial state per bucket — max, min, DECIMAL(28,6) sum,
+    count: the per-region partials of the reference's client merge
+    (``TimeseriesAggregationClient.java:167-195``), with avg carried as its
+    (sum, count) pair (``Avg.java:21-64``). :func:`merge_rollups` merges it."""
     v = F.col(value_col)
-    fine = q.aggregate(
+    return [
         F.max(v).alias("max_value"),
         F.min(v).alias("min_value"),
         F.sum(v.cast("decimal(28,6)")).alias("sum_dec"),
         F.count(v).alias("count_value"),
+    ]
+
+
+def read_rollup(rollup: DataFrame, t_min: Any, interval_s: int) -> DataFrame:
+    """Read rollup state on a coarser t_min-aligned grid: regrid each bucket
+    (:func:`_bucket_start`), :func:`merge_rollups`, then finalize — the
+    decimal sum becomes the double ``sum_value`` and ``avg_value`` is
+    sum / count (the reference's ``divideForAvg``,
+    ``TimeseriesAggregationClient.java:547-557``). ``interval_s`` must be a
+    multiple of the rollup's interval, on the grid started at ``t_min``.
+    Returns {bucket_start_us, max_value, min_value, sum_value, count_value,
+    avg_value}."""
+    regridded = rollup.select(
+        _bucket_start(
+            "bucket_start_us", to_epoch_us(t_min), interval_s * US_PER_SECOND
+        ).alias("bucket_start_us"),
+        "max_value", "min_value", "sum_dec", "count_value",
     )
-    coarse_bucket = _bucket_start(
-        "bucket_start_us", q.t_min_us, coarse_interval_s * US_PER_SECOND
-    ).alias("bucket_start_us")
-    coarse = merge_rollups([
-        fine.select(coarse_bucket, "max_value", "min_value", "sum_dec", "count_value")
-    ]).select(
+    total = F.col("sum_dec").cast("double")
+    return merge_rollups([regridded]).select(
         "bucket_start_us",
         "max_value",
         "min_value",
-        F.col("sum_dec").cast("double").alias("sum_value"),
+        total.alias("sum_value"),
         F.col("count_value").cast("long").alias("count_value"),
-        (F.col("sum_dec").cast("double") / F.col("count_value")).alias("avg_value"),
+        (total / F.col("count_value")).alias("avg_value"),
     )
-    return fine, coarse
 
 
 def time_weighted_avg(
@@ -452,24 +475,23 @@ def time_weighted_avg(
     window — the same key the final groupBy uses, so Catalyst reuses the
     partitioning and the aggregation adds no second exchange.
     """
-    lo, hi = to_epoch_us(t_min), to_epoch_us(t_max)
-    ival = interval_s * US_PER_SECOND
+    q = TimeseriesQuery(events, ts_col=ts_col).range(t_min, t_max).interval(interval_s)
     us = F.unix_micros(F.col(ts_col))
     from pyspark.sql import Window as W
 
     w = W.partitionBy(*series_cols, "bucket_start_us").orderBy("us", tiebreak_col)
     d = (
-        events.filter(_in_range(ts_col, lo, hi))
+        q._rows()
         .select(
             *series_cols,
             tiebreak_col,
             us.alias("us"),
             F.col(value_col).alias("v"),
+            q.bucket_start_us(),
         )
-        .withColumn("bucket_start_us", _bucket_start("us", lo, ival))
         .withColumn(
             "dt_us",
-            F.coalesce(F.lead("us").over(w), F.col("bucket_start_us") + ival)
+            F.coalesce(F.lead("us").over(w), F.col("bucket_start_us") + q.interval_us)
             - F.col("us"),
         )
     )
@@ -522,16 +544,16 @@ def counter_rate(
     TSDB); the subsequent per-(series, bucket) groupBy is a prefix of that
     ordering and needs no second sort.
     """
-    lo, hi = to_epoch_us(t_min), to_epoch_us(t_max)
-    ival = interval_s * US_PER_SECOND
+    q = TimeseriesQuery(events, ts_col=ts_col).range(t_min, t_max).interval(interval_s)
     us = F.unix_micros(F.col(ts_col))
     from pyspark.sql import Window as W
 
     w = W.partitionBy(*series_cols).orderBy("us", tiebreak_col)
     d = (
-        events.filter(_in_range(ts_col, lo, hi))
+        q._rows()
         .select(
-            *series_cols, tiebreak_col, us.alias("us"), F.col(value_col).alias("v")
+            *series_cols, tiebreak_col, us.alias("us"), F.col(value_col).alias("v"),
+            q.bucket_start_us(),
         )
         .withColumn("prev", F.lag("v").over(w))
         .withColumn("delta", F.col("v") - F.col("prev"))
@@ -541,7 +563,6 @@ def counter_rate(
             .when(F.col("delta") < 0, F.col("v"))
             .otherwise(F.col("delta")),
         )
-        .withColumn("bucket_start_us", _bucket_start("us", lo, ival))
     )
     return (
         d.groupBy(*series_cols, "bucket_start_us")
@@ -589,11 +610,11 @@ def linear_trend(
     cross-engine. One partial/final aggregation — the moments are the
     classic distributive aggregate, no window, no second pass. Output
     slope is in VALUE UNITS per second (cents rescaled)."""
-    lo, hi = to_epoch_us(t_min), to_epoch_us(t_max)
-    x = F.expr(f"(unix_micros(`{ts_col}`) - {lo}) div {US_PER_SECOND}")
+    q = TimeseriesQuery(events, ts_col=ts_col).range(t_min, t_max)
+    x = F.expr(f"(unix_micros(`{ts_col}`) - {q.t_min_us}) div {US_PER_SECOND}")
     y = F.expr(f"CAST(CAST(`{value_col}` AS DECIMAL(18,2)) * 100 AS BIGINT)")
     d = (
-        events.filter(_in_range(ts_col, lo, hi))
+        q._rows()
         .select(*series_cols, x.alias("x"), y.alias("y"))
         .groupBy(*series_cols)
         .agg(
@@ -636,7 +657,7 @@ def rolling_zscore_anomalies(
     correctly-rounded double ops (÷, −, ·, sqrt) — restated verbatim by
     the oracle. One shuffle on the series key; rows with zero frame
     variance are not flagged (z undefined)."""
-    lo, hi = to_epoch_us(t_min), to_epoch_us(t_max)
+    q = TimeseriesQuery(events, ts_col=ts_col).range(t_min, t_max)
     us = F.unix_micros(F.col(ts_col))
     from pyspark.sql import Window as W
 
@@ -647,7 +668,7 @@ def rolling_zscore_anomalies(
         .rowsBetween(-(window_rows - 1), 0)
     )
     d = (
-        events.filter(_in_range(ts_col, lo, hi))
+        q._rows()
         .select(
             *series_cols, tiebreak_col, us.alias("us"), y.alias("cy"),
             F.col(value_col).alias("v"),
@@ -837,15 +858,12 @@ def ewma_truncated(
         raise ValueError(f"alpha must be in (0,1), got {alpha}")
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    lo, hi = to_epoch_us(t_min), to_epoch_us(t_max)
-    ival = interval_s * US_PER_SECOND
+    q = TimeseriesQuery(events, ts_col=ts_col).range(t_min, t_max).interval(interval_s)
     from pyspark.sql import Window as W
 
     buckets = (
-        events.filter(_in_range(ts_col, lo, hi))
-        .withColumn(
-            "bucket_start_us", _bucket_start(f"unix_micros(`{ts_col}`)", lo, ival)
-        )
+        q._rows()
+        .withColumn("bucket_start_us", q.bucket_start_us())
         .groupBy(*series_cols, "bucket_start_us")
         .agg(
             F.sum(F.col(value_col).cast("decimal(28,6)")).alias("_s"),
@@ -905,13 +923,13 @@ def largest_gaps(
     Physical shape: both windows share the series partitioning key — one
     shuffle, two in-partition sorts, no global sort.
     """
-    lo, hi = to_epoch_us(t_min), to_epoch_us(t_max)
+    q = TimeseriesQuery(events, ts_col=ts_col).range(t_min, t_max)
     us = F.unix_micros(F.col(ts_col))
     from pyspark.sql import Window as W
 
     order_w = W.partitionBy(*series_cols).orderBy("us", tiebreak_col)
     d = (
-        events.filter(_in_range(ts_col, lo, hi))
+        q._rows()
         .select(*series_cols, tiebreak_col, us.alias("us"))
         .withColumn("gap_start_us", F.lag("us").over(order_w))
         .filter(F.col("gap_start_us").isNotNull())

@@ -336,6 +336,8 @@ from hbase_taggregator_spark.streaming.timeseries_stream import (  # noqa: E402
     bucketed_stream_agg,
     replay_parquet_stream,
     run_to_memory,
+    run_to_parquet,
+    stream_aggregate,
 )
 
 
@@ -452,9 +454,7 @@ def _q_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference cannot express — each event lands in 4 windows."""
     from hbase_taggregator_spark.queries import load_table as _lt
 
-    ev = _lt(spark, sf_dir, "events", time_range=(T0 * US, _T2D * US)).filter(
-        (F.unix_micros("ts") >= T0 * US) & (F.unix_micros("ts") < _T2D * US)
-    )
+    ev = _lt(spark, sf_dir, "events", time_range=(T0 * US, _T2D * US))
     out = sliding_bucket_agg(
         ev, "ts", 3600, 900,
         [F.count("value").alias("count_value"), F.max("value").alias("max_value")],
@@ -488,9 +488,7 @@ def _q_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge semantics (new session when gap ≥ threshold; end = last + gap)."""
     from hbase_taggregator_spark.queries import load_table as _lt
 
-    ev = _lt(spark, sf_dir, "events", time_range=(T0 * US, T_WEEK * US)).filter(
-        (F.unix_micros("ts") >= T0 * US) & (F.unix_micros("ts") < T_WEEK * US)
-    )
+    ev = _lt(spark, sf_dir, "events", time_range=(T0 * US, T_WEEK * US))
     out = session_agg(
         ev, "ts", 21600, ["user_id"],
         [F.count("value").alias("n_events"), F.max("value").alias("max_value")],
@@ -530,9 +528,7 @@ def _q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan needs no extra distinct pass)."""
     from hbase_taggregator_spark.queries import load_table as _lt
 
-    ev = _lt(spark, sf_dir, "events", time_range=(T0 * US, T_MONTH * US)).filter(
-        (F.unix_micros("ts") >= T0 * US) & (F.unix_micros("ts") < T_MONTH * US)
-    )
+    ev = _lt(spark, sf_dir, "events", time_range=(T0 * US, T_MONTH * US))
     day = F.expr(f"(unix_micros(ts) - {T0 * US}) div {86400 * US}")
     out = (
         ev.withColumn("day_idx", day)
@@ -819,26 +815,14 @@ def _q_stateful_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from hbase_taggregator_spark.streaming.stateful import running_extrema_stream
-    from hbase_taggregator_spark.streaming.timeseries_stream import (
-        replay_parquet_stream,
-        state_partitions,
-    )
 
     events = load_table(spark, sf_dir, "events")
     with tempfile.TemporaryDirectory() as d:
         src = f"{d}/src"
         events.repartition(4).write.parquet(src)
         stream = replay_parquet_stream(spark, src, max_files_per_trigger=1)
-        with state_partitions(spark, 4):
-            q = (
-                running_extrema_stream(stream)
-                .writeStream.format("memory")
-                .queryName("q_stateful_extrema")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(240)
+        run_to_memory(spark, running_extrema_stream(stream), "q_stateful_extrema",
+                      output_mode="update")
         final = spark.sql(
             """SELECT user_id, running_max, running_min, running_count FROM (
                  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
@@ -1577,11 +1561,6 @@ def _q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup (it shares dedup_exact's oracle). At 100 TB-scale ingest the
     state is one row per distinct fingerprint; MIN/COUNT merges are
     order-insensitive, so the result is microbatch-schedule-independent."""
-    from hbase_taggregator_spark.streaming.timeseries_stream import (
-        replay_parquet_stream,
-        run_to_memory,
-    )
-
     stream = replay_parquet_stream(spark, f"{sf_dir}/documents.parquet")
     agg = (
         X.fingerprint(stream)
@@ -2450,10 +2429,6 @@ def _q_streaming_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     path breaks the hash."""
     import tempfile
 
-    from hbase_taggregator_spark.streaming.timeseries_stream import (
-        run_to_parquet,
-    )
-
     stream = replay_parquet_stream(spark, f"{sf_dir}/events.parquet")
     stream = stream.filter(F.unix_micros("ts") < F.lit(T_WEEK * US))
     agg = bucketed_stream_agg(
@@ -2537,23 +2512,7 @@ def _q_streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
         "inner",
     )
-    from hbase_taggregator_spark.streaming.timeseries_stream import (
-        state_partitions,
-    )
-
-    with state_partitions(spark, 4):
-        q = (
-            pairs.writeStream.format("memory")
-            .queryName("stream_stream_pairs")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    if q.isActive:  # pragma: no cover
-        q.stop()
-        raise TimeoutError("stream-stream join did not finish")
-    sink = spark.table("stream_stream_pairs")
+    sink = run_to_memory(spark, pairs, "stream_stream_pairs", output_mode="append")
     return sink.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_pairs"))
 
 
@@ -3214,11 +3173,6 @@ def _q_streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct count."""
     import tempfile
 
-    from hbase_taggregator_spark.streaming.timeseries_stream import (
-        replay_parquet_stream,
-        state_partitions,
-    )
-
     events = load_table(spark, sf_dir, "events")
     with tempfile.TemporaryDirectory() as d:
         src = f"{d}/src"
@@ -3227,21 +3181,8 @@ def _q_streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         deduped = stream.withWatermark("ts", "30 days").dropDuplicatesWithinWatermark(
             ["user_id", "event_type"]
         )
-        with state_partitions(spark, 4):
-            q = (
-                deduped.writeStream.format("memory")
-                .queryName("stream_dedup_wm")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(240)
-        if q.isActive:  # pragma: no cover
-            q.stop()
-            raise TimeoutError("dedup-within-watermark stream did not finish")
-        final = spark.table("stream_dedup_wm").agg(
-            F.count(F.lit(1)).alias("n_distinct_keys")
-        )
+        sink = run_to_memory(spark, deduped, "stream_dedup_wm", output_mode="append")
+        final = sink.agg(F.count(F.lit(1)).alias("n_distinct_keys"))
         out = local_df(spark, final.collect(), final.schema)
     return out
 
@@ -3767,63 +3708,21 @@ def _q_streaming_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw daily scan (which is what the oracle computes)."""
     import tempfile
 
-    from hbase_taggregator_spark.streaming.timeseries_stream import (
-        replay_parquet_stream,
-        state_partitions,
-    )
+    from hbase_taggregator_spark.operators.timeseries import read_rollup, rollup_state
 
     events = load_table(spark, sf_dir, "events", time_range=(T0 * US, T_WEEK * US))
     with tempfile.TemporaryDirectory() as d:
         src = f"{d}/src"
         events.write.parquet(src, mode="overwrite")
         stream = replay_parquet_stream(spark, src, max_files_per_trigger=1)
-        us = F.unix_micros(F.col("ts"))
-        fine = (
-            stream.filter((us >= T0 * US) & (us < T_WEEK * US))
-            .withWatermark("ts", "30 days")
-            .groupBy(F.window("ts", "3600 seconds").alias("w"))
-            .agg(
-                F.max("value").alias("max_value"),
-                F.min("value").alias("min_value"),
-                F.sum(F.col("value").cast("decimal(28,6)")).alias("sum_dec"),
-                F.count("value").alias("count_value"),
-            )
-            .select(
-                F.unix_micros(F.col("w.start")).alias("fine_us"),
-                "max_value", "min_value", "sum_dec", "count_value",
-            )
+        fine = stream_aggregate(
+            stream, T0, 3600, *rollup_state(), watermark="30 days"
         )
-        with state_partitions(spark, 4):
-            q = (
-                fine.writeStream.format("memory")
-                .queryName("stream_rollup_fine")
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(240)
-        if q.isActive:  # pragma: no cover
-            q.stop()
-            raise TimeoutError("streaming rollup did not finish")
-        coarse = (
-            spark.table("stream_rollup_fine")
-            .withColumn(
-                "bucket_ms",
-                F.expr(f"({T0 * US} + ((fine_us - {T0 * US}) div {86400 * US})"
-                       f" * {86400 * US}) div 1000"),
-            )
-            .groupBy("bucket_ms")
-            .agg(
-                F.max("max_value").alias("max_value"),
-                F.min("min_value").alias("min_value"),
-                F.sum("sum_dec").alias("sum_dec"),
-                F.sum("count_value").alias("count_value"),
-            )
-            .select(
-                "bucket_ms", "max_value", "min_value",
-                F.col("sum_dec").cast("double").alias("sum_value"),
-                F.col("count_value").cast("long").alias("count_value"),
-            )
+        coarse = read_rollup(
+            run_to_memory(spark, fine, "stream_rollup_fine"), T0, 86400
+        ).select(
+            F.expr("bucket_start_us div 1000").alias("bucket_ms"),
+            "max_value", "min_value", "sum_value", "count_value",
         )
         out = local_df(spark, coarse.collect(), coarse.schema)
     return out
@@ -4178,6 +4077,7 @@ def _q_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hbase_taggregator_spark.operators.timeseries import (
         continuous_rollup,
         merge_rollups,
+        read_rollup,
     )
 
     t_mid = T0 + 84 * 3600  # 3.5 days — hour-aligned split
@@ -4186,25 +4086,9 @@ def _q_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     fine1, _ = continuous_rollup(ev1, T0, t_mid, 3600, 3600)
     fine2, _ = continuous_rollup(ev2, t_mid, T_WEEK, 3600, 3600)
     merged = merge_rollups([fine1, fine2])
-    day_us = 86400 * US
-    return (
-        merged.withColumn(
-            "bucket_ms",
-            F.expr(f"({T0 * US} + ((bucket_start_us - {T0 * US}) div {day_us})"
-                   f" * {day_us}) div 1000"),
-        )
-        .groupBy("bucket_ms")
-        .agg(
-            F.max("max_value").alias("max_value"),
-            F.min("min_value").alias("min_value"),
-            F.sum("sum_dec").alias("sum_dec"),
-            F.sum("count_value").alias("count_value"),
-        )
-        .select(
-            "bucket_ms", "max_value", "min_value",
-            F.col("sum_dec").cast("double").alias("sum_value"),
-            F.col("count_value").cast("long").alias("count_value"),
-        )
+    return read_rollup(merged, T0, 86400).select(
+        F.expr("bucket_start_us div 1000").alias("bucket_ms"),
+        "max_value", "min_value", "sum_value", "count_value",
     )
 
 

@@ -8,6 +8,10 @@ requires the event-time window form. Late data past the watermark is
 dropped (the reference has no late-data analog; the policy is ours to
 define — SURVEY.md §2.2 'streaming').
 
+A bounded source (a parquet replay) drains through one run loop:
+availableNow trigger, hung-query timeout, state partitions scoped to the
+query start (:func:`run_to_memory`, :func:`run_to_parquet`).
+
 State size is bounded by (#open windows × #dims): each tumbling window
 closes `watermark` after its end, so at 100 TB/day ingest the state is
 independent of throughput — only of interval, watermark, and dimension
@@ -19,7 +23,8 @@ from __future__ import annotations
 import os
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from hbase_taggregator_spark.operators.timeseries import (
     US_PER_SECOND,
@@ -53,6 +58,42 @@ def replay_parquet_stream(
     return _normalize_event_ts(df, ts_col)
 
 
+def stream_aggregate(
+    stream: DataFrame,
+    t_min: Any,
+    interval_s: int,
+    *agg_cols: Column,
+    ts_col: str = "ts",
+    dims: tuple[str, ...] = (),
+    watermark: str = "1 hour",
+) -> DataFrame:
+    """Watermarked tumbling-window aggregation with t_min-aligned buckets
+    over caller-supplied aggregate Columns — the streaming
+    :meth:`~hbase_taggregator_spark.operators.timeseries.TimeseriesQuery.aggregate`
+    (e.g. ``rollup_state()`` keeps a continuous rollup from a stream).
+
+    Returns {bucket_start_us, *dims, *aggregates}; in append mode a bucket
+    emits once its window passes the watermark — the streaming analog of
+    the batch partial/final merge.
+    """
+    t_min_us = to_epoch_us(t_min)
+    offset_us = t_min_us % (interval_s * US_PER_SECOND)
+    win = F.window(
+        F.col(ts_col),
+        f"{interval_s} seconds",
+        startTime=f"{offset_us} microseconds",
+    )
+    out = (
+        stream.withWatermark(ts_col, watermark)
+        .filter(F.unix_micros(F.col(ts_col)) >= F.lit(t_min_us))
+        .groupBy(win.alias("w"), *dims)
+        .agg(*agg_cols)
+    )
+    return out.select(
+        F.unix_micros(F.col("w.start")).alias("bucket_start_us"), *out.columns[1:]
+    )
+
+
 def bucketed_stream_agg(
     stream: DataFrame,
     t_min: Any,
@@ -63,55 +104,48 @@ def bucketed_stream_agg(
     dims: tuple[str, ...] = (),
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """Watermarked tumbling-window aggregation with t_min-aligned buckets.
-
-    ``verbs`` maps verb → output alias (like TimeseriesQuery.agg). Returns
-    {bucket_start_us, *dims, *aliases}; in append mode a bucket emits once
-    its window passes the watermark — the streaming analog of the batch
-    partial/final merge.
-    """
-    t_min_us = to_epoch_us(t_min)
-    offset_us = t_min_us % (interval_s * US_PER_SECOND)
-    win = F.window(
-        F.col(ts_col),
-        f"{interval_s} seconds",
-        startTime=f"{offset_us} microseconds",
-    )
-    aggs = [_VERB_EXPRS[v](value_col).alias(alias) for v, alias in verbs.items()]
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .filter(F.unix_micros(F.col(ts_col)) >= F.lit(t_min_us))
-        .groupBy(win.alias("w"), *dims)
-        .agg(*aggs)
-        .select(
-            F.unix_micros(F.col("w.start")).alias("bucket_start_us"),
-            *dims,
-            *[alias for _, alias in verbs.items()],
-        )
+    """The verbs: :func:`stream_aggregate` over the named verb columns.
+    ``verbs`` maps verb → output alias (like TimeseriesQuery.agg)."""
+    return stream_aggregate(
+        stream,
+        t_min,
+        interval_s,
+        *[_VERB_EXPRS[v](value_col).alias(alias) for v, alias in verbs.items()],
+        ts_col=ts_col,
+        dims=dims,
+        watermark=watermark,
     )
 
 
-from contextlib import contextmanager
+def _run_bounded(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    name: str,
+    timeout_s: int,
+    n_state_partitions: int,
+) -> None:
+    """Drain a bounded source: start ``writer`` with the availableNow
+    trigger and wait for it to stop. A query still running after
+    ``timeout_s`` is stopped and raises TimeoutError, so a hung trigger
+    never passes off a partial sink as the result.
 
-
-@contextmanager
-def state_partitions(spark: SparkSession, n: int = 4):
-    """Scope ``spark.sql.shuffle.partitions`` down while a streaming query
-    STARTS (the stateful-operator partition count — hence the number of
-    state-store instances — is frozen at query start from this conf).
-
-    Local bounded replays don't need 32 state stores each paying
+    ``spark.sql.shuffle.partitions`` is scoped to ``n_state_partitions``
+    while the query STARTS: the stateful-operator partition count — hence
+    the number of state-store instances — is frozen at query start from
+    this conf. Local bounded replays don't need 32 state stores each paying
     open/commit per microbatch; 4 keeps full pipelining on a laptop-class
-    gate while cutting the fixed per-batch state overhead ~8×. On a real
-    cluster the caller simply doesn't enter this scope (or passes the
-    cluster's real parallelism). Results are partitioning-independent —
-    this is a latency knob, never a semantics knob."""
+    gate while cutting the fixed per-batch state overhead ~8×. Results are
+    partitioning-independent — a latency knob, never a semantics knob."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", str(n_state_partitions))
     try:
-        yield
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination(timeout_s)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+    if q.isActive:  # pragma: no cover - guard against a hung trigger
+        q.stop()
+        raise TimeoutError(f"streaming query {name} did not finish")
 
 
 def run_to_memory(
@@ -120,22 +154,18 @@ def run_to_memory(
     query_name: str,
     timeout_s: int = 300,
     n_state_partitions: int = 4,
+    output_mode: str = "complete",
 ) -> DataFrame:
-    """Execute a streaming aggregation to completion over a bounded source
-    (availableNow trigger, complete mode, memory sink) and return the final
-    result table — used by the batch-equivalence gate."""
-    with state_partitions(spark, n_state_partitions):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_s)
-    if q.isActive:  # pragma: no cover - guard against a hung trigger
-        q.stop()
-        raise TimeoutError(f"streaming query {query_name} did not finish")
+    """Execute a streaming query to completion over a bounded source
+    (availableNow trigger, memory sink, ``output_mode`` complete, update or
+    append) and return the sink table ``query_name``."""
+    _run_bounded(
+        spark,
+        agg.writeStream.format("memory").queryName(query_name).outputMode(output_mode),
+        query_name,
+        timeout_s,
+        n_state_partitions,
+    )
     return spark.table(query_name)
 
 
@@ -156,15 +186,12 @@ def run_to_parquet(
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(path)
 
-    with state_partitions(spark, n_state_partitions):
-        q = (
-            agg.writeStream.foreachBatch(_write)
-            .outputMode("complete")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_s)
-    if q.isActive:  # pragma: no cover - guard against a hung trigger
-        q.stop()
-        raise TimeoutError("foreachBatch streaming query did not finish")
+    _run_bounded(
+        spark,
+        agg.writeStream.foreachBatch(_write)
+        .outputMode("complete")
+        .option("checkpointLocation", checkpoint),
+        f"foreachBatch -> {path}",
+        timeout_s,
+        n_state_partitions,
+    )

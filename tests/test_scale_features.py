@@ -16,7 +16,10 @@ from hbase_taggregator_spark import plans as P
 from hbase_taggregator_spark.operators.relational import salted_join
 from hbase_taggregator_spark.sources.parquet import load_table
 from hbase_taggregator_spark.streaming.stateful import running_extrema_stream
-from hbase_taggregator_spark.streaming.timeseries_stream import replay_parquet_stream
+from hbase_taggregator_spark.streaming.timeseries_stream import (
+    replay_parquet_stream,
+    run_to_memory,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -32,16 +35,8 @@ def test_stateful_stream_accumulates_across_microbatches(spark):
         assert len(glob.glob(f"{src}/*.parquet")) >= 2
 
         stream = replay_parquet_stream(spark, src, max_files_per_trigger=1)
-        out = running_extrema_stream(stream)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("stateful_extrema")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(240)
-        assert not q.isActive
+        run_to_memory(spark, running_extrema_stream(stream), "stateful_extrema",
+                      output_mode="update")
         # update mode emits one row per key per batch → keep the LAST emit
         # per key (monotone count makes max() the last state)
         got = {

@@ -14,12 +14,17 @@ from hbase_taggregator_spark.operators.multimodal import (
     sample_frames,
     with_binary_payload,
 )
-from hbase_taggregator_spark.operators.timeseries import TimeseriesAggregator
+from hbase_taggregator_spark.operators.timeseries import (
+    TimeseriesAggregator,
+    continuous_rollup,
+    rollup_state,
+)
 from hbase_taggregator_spark.sources.parquet import load_table
 from hbase_taggregator_spark.streaming.timeseries_stream import (
     bucketed_stream_agg,
     replay_parquet_stream,
     run_to_memory,
+    stream_aggregate,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -27,29 +32,54 @@ T0 = 1_704_067_200
 T_END = T0 + 7 * 86400
 
 
-def test_stream_equals_batch(spark):
+@pytest.mark.parametrize(
+    "t_min, interval_s", [(T0, 3600), (T0 + 17, 900)], ids=["aligned", "offset"]
+)
+def test_stream_equals_batch(spark, t_min, interval_s):
     """Replaying the same parquet through Structured Streaming must produce
-    the identical bucket map as the batch engine."""
+    the identical bucket map as the batch engine — also on a grid whose
+    t_min is not a multiple of the interval (the window's startTime)."""
     stream = replay_parquet_stream(spark, f"{SF}/events.parquet").filter(
         F.unix_micros("ts") < T_END * 1_000_000
     )
-    agg = bucketed_stream_agg(stream, T0, 3600, {"count": "c", "sum": "s"})
+    agg = bucketed_stream_agg(stream, t_min, interval_s, {"count": "c", "sum": "s"})
     streamed = {
         r["bucket_start_us"]: (r["c"], r["s"])
-        for r in run_to_memory(spark, agg, "equiv_test").collect()
+        for r in run_to_memory(spark, agg, f"equiv_test_{interval_s}").collect()
     }
 
     q = (
         TimeseriesAggregator(spark)
         .table(load_table(spark, SF, "events"))
-        .range(T0, T_END)
-        .interval(3600)
+        .range(t_min, T_END)
+        .interval(interval_s)
     )
     batch = {
         r["bucket_start_us"]: (r["c"], r["s"])
         for r in q.agg(count="c", sum="s").collect()
     }
     assert streamed == batch and len(batch) > 0
+
+
+def test_stream_rollup_state_equals_continuous_rollup(spark):
+    """The rollup state a stream keeps (``stream_aggregate`` over
+    ``rollup_state``) is ``continuous_rollup``'s fine frame bit for bit —
+    same types, same decimal ``sum_dec`` — on a t_min-offset grid."""
+    cols = ["bucket_start_us", "max_value", "min_value", "sum_dec", "count_value"]
+    stream = replay_parquet_stream(spark, f"{SF}/events.parquet").filter(
+        F.unix_micros("ts") < T_END * 1_000_000
+    )
+    streamed = run_to_memory(
+        spark, stream_aggregate(stream, T0 + 17, 900, *rollup_state()), "rollup_state"
+    ).select(cols)
+    fine, _ = continuous_rollup(
+        load_table(spark, SF, "events"), T0 + 17, T_END, 900, 900
+    )
+    fine = fine.select(cols)
+    assert streamed.dtypes == fine.dtypes
+    got = {r["bucket_start_us"]: r.asDict() for r in streamed.collect()}
+    want = {r["bucket_start_us"]: r.asDict() for r in fine.collect()}
+    assert got == want and len(want) > 0
 
 
 def test_binary_features_match_python(spark):
@@ -98,11 +128,6 @@ def test_watermark_drops_late_data(spark):
     import shutil
     import tempfile
 
-    from hbase_taggregator_spark.streaming.timeseries_stream import (
-        bucketed_stream_agg,
-        replay_parquet_stream,
-    )
-
     def ts(h, m):
         return dt.datetime(2024, 1, 1, h, m, 0)
 
@@ -129,18 +154,11 @@ def test_watermark_drops_late_data(spark):
             stream, t0, 3600, {"count": "n", "sum": "s"},
             watermark="30 minutes",
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("late_drop")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(240)
-        assert not q.isActive
         got = {
             r["bucket_start_us"]: (r["n"], r["s"])
-            for r in spark.table("late_drop").collect()
+            for r in run_to_memory(
+                spark, agg, "late_drop", output_mode="append"
+            ).collect()
         }
     b0 = t0 * 1_000_000
     # bucket 10:00 closed before the late 10:10 row arrived → it holds only
@@ -156,10 +174,6 @@ def test_transform_with_state_profile_or_env_gate(spark):
     state store — absent here, the probe gates the run (documented seam)."""
     import tempfile
 
-    from hbase_taggregator_spark.streaming.timeseries_stream import (
-        replay_parquet_stream,
-        state_partitions,
-    )
     from hbase_taggregator_spark.streaming.transform_state import (
         tws_available,
         user_activity_profile_stream,
@@ -182,16 +196,10 @@ def test_transform_with_state_profile_or_env_gate(spark):
         with tempfile.TemporaryDirectory() as d:
             ev.repartition(2).write.parquet(f"{d}/src")
             stream = replay_parquet_stream(spark, f"{d}/src", max_files_per_trigger=1)
-            with state_partitions(spark, 2):
-                q = (
-                    user_activity_profile_stream(stream)
-                    .writeStream.format("memory")
-                    .queryName("tws_gate")
-                    .outputMode("update")
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination(180)
+            run_to_memory(
+                spark, user_activity_profile_stream(stream), "tws_gate",
+                timeout_s=180, n_state_partitions=2, output_mode="update",
+            )
             got = {
                 r.user_id: (r.n_events, r.n_value_buckets)
                 for r in spark.sql(

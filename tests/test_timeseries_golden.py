@@ -157,3 +157,28 @@ def test_validation_errors(spark, golden_cells):
         tsa.table(golden_cells, value_col="nope").range(BASE_S, BASE_S + H).interval(900).max()
     with pytest.raises(ValueError, match="cutoff"):
         tsa.table(golden_cells).mode("weird")
+
+
+_WITH_INTERVAL = ("time_weighted_avg", "counter_rate", "ewma_truncated")
+_RANGE_ONLY = ("linear_trend", "rolling_zscore_anomalies", "largest_gaps")
+
+
+@pytest.mark.parametrize(
+    "name, args, match",
+    [
+        *[(n, (BASE_S, BASE_S, 900), "start") for n in _WITH_INTERVAL],
+        *[(n, (BASE_S, BASE_S + H, 0), "interval") for n in _WITH_INTERVAL],
+        *[(n, (BASE_S + H, BASE_S), "start") for n in _RANGE_ONLY],
+    ],
+)
+def test_series_operators_validate_bounds(spark, name, args, match):
+    """The series operators check t_min < t_max and a positive interval
+    exactly like the bucketed query, before any job runs — not an empty
+    result or a ``div 0`` at run time."""
+    from hbase_taggregator_spark.operators import timeseries
+
+    events = spark.createDataFrame(
+        [], "event_id long, ts timestamp, event_type string, value double"
+    )
+    with pytest.raises(ValueError, match=match):
+        getattr(timeseries, name)(events, *args)

@@ -3,6 +3,8 @@ entry on Spark and its oracle_sql() on DuckDB over the same parquet tables,
 compare row count, column names, and order-insensitive values.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+
+Exits 2 without checking anything if a named query is not in the catalog.
 """
 
 from __future__ import annotations
@@ -45,6 +47,11 @@ def row_key(row: dict) -> tuple:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    queries = entry_mod.queries()
+    unknown = sorted(only - set(queries))
+    if unknown:
+        print(f"unknown queries (not in the catalog): {unknown}")
+        return 2
 
     spark = get_spark(app_name="oracle-check", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
@@ -55,7 +62,6 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = []
     for name, fn in queries.items():
