@@ -568,7 +568,15 @@ def main() -> None:
         "notes": {
             "graph_pagerank_suppliers": "in-suite; canonical isolated A/B"
             " = tools/ab_pagerank_r7b.py (4.0s sf0.1 min-of-5)",
+            # the re-warm is a methodology difference: these queries are
+            # not comparable to suites timed without it
+            **{
+                name: "one untimed full run immediately before every "
+                "timed run (Arrow worker re-warm)"
+                for name in sorted(ARROW_REWARM_BEFORE)
+            },
         },
+        "untimed_rewarm_before": sorted(ARROW_REWARM_BEFORE),
     }
     if canary_samples:
         import statistics

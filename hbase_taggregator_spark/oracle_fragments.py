@@ -340,7 +340,8 @@ def _ivf_binary_recall_sql(
     centroids, assignment argmax at rk=1, query probes at rk<=n_probe,
     in-cell Hamming shortlist of ``rerank_k`` over the mean-threshold
     binary bits, exact-cosine re-rank to ``k``, recall vs brute force —
-    every stage of ``ivf_binary_topk`` at flat strategies restated.
+    every stage of the binary-codec ``ivf_search`` over a flat
+    quantizer restated.
     Shared by the r12 persisted-index gate
     (``similarity_ivf_binary_indexed_recall_at_5``): the index
     write/read round-trip is exact and the indexed plan is row-pinned

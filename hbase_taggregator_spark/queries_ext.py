@@ -1492,7 +1492,9 @@ def _q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal cosine — the oracle restates the whole structure in SQL."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    ivf = S.ivf_topk(emb, queries, k=5, n_centroids=16, n_probe=4)
+    quant = S.coarse_quantizer(S.seed_centroids(emb, 16))
+    index, _ = S.build_ivf_index(emb, quant)
+    ivf = S.ivf_search(index, queries, quant, k=5, n_probe=4)
     return _recall_vs_exact(emb, queries, ivf, k=5)
 
 
@@ -2935,13 +2937,10 @@ def _q_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL, so centroid refinement is hash-gated, not just rows-only."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    init = (
-        emb.orderBy("vec_id")
-        .limit(16)
-        .select(F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec"))
-    )
-    refined = S.kmeans_refine(emb, init, n_iter=1)
-    ivf = S.ivf_topk(emb, queries, k=5, n_probe=4, centroids=refined)
+    refined = S.kmeans_refine(emb, S.seed_centroids(emb, 16), n_iter=1)
+    quant = S.coarse_quantizer(refined)
+    index, _ = S.build_ivf_index(emb, quant)
+    ivf = S.ivf_search(index, queries, quant, k=5, n_probe=4)
     return _recall_vs_exact(emb, queries, ivf, k=5)
 
 
@@ -4321,7 +4320,7 @@ _register(
 # this round — the two-level family + the binary recall gate riding the
 # two-phase double/decimal top-k (ivf_assign_two_level), the five
 # persisted-index gates covering the write_ivf_index sidecar-overlap
-# and two_level_shared single-collect seams, and the residual/OPQ gates
+# and two-level single-collect seams, and the residual/OPQ gates
 # covering the _materialize_means_and_residual_books validation seam —
 # all output-identical by construction and oracle-verified in this
 # round's full-catalog log, but re-gated per the standing rule. Then

@@ -43,7 +43,11 @@ def _q_twolevel_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vec_id < 10) probe their 5 nearest centroids via
     ``ivf_assign_two_level(n_probe=5)``, candidates join on cent_id,
     exact-decimal cosine ranks the survivors."""
-    from hbase_taggregator_spark.operators.similarity import ivf_topk
+    from hbase_taggregator_spark.operators.similarity import (
+        build_ivf_index,
+        coarse_quantizer,
+        ivf_search,
+    )
     from hbase_taggregator_spark.queries_ext import _recall_vs_exact
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -51,11 +55,12 @@ def _q_twolevel_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
     )
     queries = emb.filter(F.col("vec_id") < 10)
-    approx = ivf_topk(
-        emb, queries, k=RECALL_K, centroids=cents, n_probe=RECALL_K,
-        strategy="twolevel",
+    quant = coarse_quantizer(
+        cents, two_level=True,
         n_super=TWOLEVEL_NSUPER, n_super_probe=TWOLEVEL_NPROBE,
     )
+    index, _ = build_ivf_index(emb, quant)
+    approx = ivf_search(index, queries, quant, k=RECALL_K, n_probe=RECALL_K)
     return _recall_vs_exact(emb, queries, approx, k=RECALL_K)
 
 

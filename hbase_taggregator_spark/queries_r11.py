@@ -198,7 +198,12 @@ def _q_ivf_binary_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     query probes through the salted top-k plan), in-cell Hamming
     shortlist of 20 over the packed mean-threshold codes, exact decimal
     cosine re-rank to 5."""
-    from hbase_taggregator_spark.operators.similarity import ivf_binary_topk
+    from hbase_taggregator_spark.operators.similarity import (
+        Codec,
+        build_ivf_index,
+        coarse_quantizer,
+        ivf_search,
+    )
     from hbase_taggregator_spark.queries_ext import _recall_vs_exact
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -206,11 +211,14 @@ def _q_ivf_binary_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
     )
     queries = emb.filter(F.col("vec_id") < 10)
-    approx = ivf_binary_topk(
-        emb, queries, k=RECALL_K, rerank_k=IVFB_RERANK_K,
-        centroids=cents, n_probe=IVFB_NPROBE, strategy="twolevel",
+    quant = coarse_quantizer(
+        cents, two_level=True,
         n_super=TWOLEVEL_NSUPER, n_super_probe=TWOLEVEL_NPROBE,
-        threshold="mean",
+    )
+    index, codec = build_ivf_index(emb, quant, Codec("binary"))
+    approx = ivf_search(
+        index, queries, quant, codec, k=RECALL_K, n_probe=IVFB_NPROBE,
+        rerank_k=IVFB_RERANK_K,
     )
     return _recall_vs_exact(emb, queries, approx, k=RECALL_K)
 
@@ -291,7 +299,8 @@ def _ivf_indexed_frame(
     runs against the standing layout — what the plan audit records,
     VERDICT r14 #1)."""
     from hbase_taggregator_spark.operators.similarity import (
-        ivf_topk_indexed,
+        coarse_quantizer,
+        ivf_search,
         read_ivf_index,
         write_ivf_index,
     )
@@ -306,9 +315,10 @@ def _ivf_indexed_frame(
         )
     )
     queries = emb.filter(F.col("vec_id") < 10)
-    write_ivf_index(emb, cents, f"{workdir}/ivf")
-    idx = read_ivf_index(spark, f"{workdir}/ivf")
-    ivf = ivf_topk_indexed(idx, queries, cents, k=5, n_probe=4)
+    quant = coarse_quantizer(cents)
+    write_ivf_index(emb, quant, f"{workdir}/ivf")
+    idx, codec = read_ivf_index(spark, f"{workdir}/ivf")
+    ivf = ivf_search(idx, queries, quant, codec, k=5, n_probe=4)
     return _recall_vs_exact(emb, queries, ivf, k=5)
 
 
@@ -316,8 +326,8 @@ def _q_ivf_indexed_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@5 of IVF retrieval through a PERSISTED index: the corpus
     assignment is written once as a cent_id-partitioned parquet layout
     (`write_ivf_index`), read back, and probed through the
-    dynamic-partition-pruned join (`ivf_topk_indexed`) — row-identical
-    to the in-memory `ivf_topk`, so the gate hashes against the SAME
+    dynamic-partition-pruned join (`ivf_search`) — row-identical to the
+    in-memory search, so the gate hashes against the SAME
     flat-IVF oracle as `similarity_ivf_recall_at_5`. The write/read
     round-trip is exact (float32 vectors, float64 norms)."""
     import tempfile

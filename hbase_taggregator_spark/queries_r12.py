@@ -80,9 +80,10 @@ def _ivf_binary_indexed_frame(
     binary index under ``workdir``, return the pre-materialization
     recall frame (what the plan audit records — VERDICT r14 #1)."""
     from hbase_taggregator_spark.operators.similarity import (
-        ivf_binary_topk_indexed,
+        Codec,
+        coarse_quantizer,
+        ivf_search,
         read_ivf_index,
-        read_ivf_thresholds,
         write_ivf_index,
     )
     from hbase_taggregator_spark.queries_ext import _recall_vs_exact
@@ -96,11 +97,11 @@ def _ivf_binary_indexed_frame(
         )
     )
     queries = emb.filter(F.col("vec_id") < 10)
-    write_ivf_index(emb, cents, f"{workdir}/ivf", binary=True)
-    idx = read_ivf_index(spark, f"{workdir}/ivf")
-    thr = read_ivf_thresholds(spark, f"{workdir}/ivf")
-    approx = ivf_binary_topk_indexed(
-        idx, queries, cents, thr, k=RECALL_K,
+    quant = coarse_quantizer(cents)
+    write_ivf_index(emb, quant, f"{workdir}/ivf", Codec("binary"))
+    idx, codec = read_ivf_index(spark, f"{workdir}/ivf")
+    approx = ivf_search(
+        idx, queries, quant, codec, k=RECALL_K,
         rerank_k=IVFB_IDX_RERANK_K, n_probe=IVFB_IDX_NPROBE,
     )
     return _recall_vs_exact(emb, queries, approx, k=RECALL_K)
@@ -225,7 +226,12 @@ def _q_ivf_binary_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction) must clear 0.6. The approximation is CHECKED, not
     reproduced (the percentile-gate pattern) — the oracle pins the
     verdict row."""
-    from hbase_taggregator_spark.operators.similarity import ivf_binary_topk
+    from hbase_taggregator_spark.operators.similarity import (
+        Codec,
+        build_ivf_index,
+        coarse_quantizer,
+        ivf_search,
+    )
     from hbase_taggregator_spark.queries_ext import _recall_vs_exact
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -240,9 +246,11 @@ def _q_ivf_binary_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     queries = emb.filter(F.col("vec_id") < 10)
-    approx = ivf_binary_topk(
-        emb, queries, k=RECALL_K, rerank_k=rerank_k,
-        centroids=cents, n_probe=IVFB_IDX_NPROBE, threshold="mean",
+    quant = coarse_quantizer(cents)
+    index, codec = build_ivf_index(emb, quant, Codec("binary"))
+    approx = ivf_search(
+        index, queries, quant, codec, k=RECALL_K, rerank_k=rerank_k,
+        n_probe=IVFB_IDX_NPROBE,
     )
     rec = _recall_vs_exact(emb, queries, approx, k=RECALL_K)
     return rec.agg(
@@ -287,9 +295,10 @@ def _ivf_pq_indexed_frame(
     pq=True index under ``workdir``, return the pre-materialization
     recall frame (what the plan audit records — VERDICT r14 #1)."""
     from hbase_taggregator_spark.operators.similarity import (
-        ivf_pq_topk_indexed,
+        Codec,
+        coarse_quantizer,
+        ivf_search,
         l2_topk,
-        read_ivf_codebooks,
         read_ivf_index,
         write_ivf_index,
     )
@@ -303,15 +312,14 @@ def _ivf_pq_indexed_frame(
         )
     )
     queries = emb.filter(F.col("vec_id") < 10)
+    quant = coarse_quantizer(cents)
     write_ivf_index(
-        emb, cents, f"{workdir}/ivfpq", pq=True, pq_m=IVFPQ_M,
-        pq_codes=IVFPQ_NCODES, pq_refine_iters=1,
+        emb, quant, f"{workdir}/ivfpq",
+        Codec("pq", m=IVFPQ_M, n_codes=IVFPQ_NCODES, refine_iters=1),
     )
-    idx = read_ivf_index(spark, f"{workdir}/ivfpq")
-    books = read_ivf_codebooks(spark, f"{workdir}/ivfpq")
-    pq = ivf_pq_topk_indexed(
-        idx, queries, cents, books, k=RECALL_K, m=IVFPQ_M,
-        n_probe=IVFPQ_NPROBE,
+    idx, codec = read_ivf_index(spark, f"{workdir}/ivfpq")
+    pq = ivf_search(
+        idx, queries, quant, codec, k=RECALL_K, n_probe=IVFPQ_NPROBE,
     ).select("query_id", "vec_id")
     exact = l2_topk(emb, queries, k=RECALL_K).select(
         "query_id", "vec_id"
@@ -336,7 +344,7 @@ def _q_ivf_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted index (assignment + codebook training + encoding all
     amortized to build; the ADC first pass partition- and
     column-pruned to (id, cent_id, codes); LUT from the STORED
-    codebooks). Row-identical to the in-memory ivf_pq_topk, so it
+    codebooks). Row-identical to the in-memory search, so it
     hashes against the same composed oracle."""
     import tempfile
 
@@ -354,15 +362,23 @@ def _q_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     every stage (assignment, probes, refinement, encode, LUT,
     cell-restricted ADC, exact-L2 ground truth) restated in SQL."""
     from hbase_taggregator_spark.operators.similarity import (
-        ivf_pq_topk,
+        Codec,
+        build_ivf_index,
+        coarse_quantizer,
+        ivf_search,
         l2_topk,
+        seed_centroids,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    pq = ivf_pq_topk(
-        emb, queries, k=RECALL_K, m=IVFPQ_M, n_codes=IVFPQ_NCODES,
-        n_centroids=16, n_probe=IVFPQ_NPROBE, refine_iters=1,
+    quant = coarse_quantizer(seed_centroids(emb, 16))
+    index, codec = build_ivf_index(
+        emb, quant,
+        Codec("pq", m=IVFPQ_M, n_codes=IVFPQ_NCODES, refine_iters=1),
+    )
+    pq = ivf_search(
+        index, queries, quant, codec, k=RECALL_K, n_probe=IVFPQ_NPROBE
     ).select("query_id", "vec_id")
     exact = l2_topk(emb, queries, k=RECALL_K).select("query_id", "vec_id")
     hits = (

@@ -13,8 +13,8 @@ PQ gate was row-algebra-pinned, so a refactor that degrades retrieval
 (bad refinement, LUT drift, probe off-by-one) kept all hashes green.
 The committed operating point was PRICED by the r13 census
 (tools/bench_pq_r13.json + the rerank sweep): m=16 × 256 codewords
-(128-bit codes — past ``PQ_INLINE_MAX_LITERALS``, so this gate drives
-the BROADCAST codebook strategy in production form) with the
+(128-bit codes — the broadcast codebook encode in production form)
+with the
 corpus-proportional 4% shortlist reads mean recall@5 of 0.94 / 0.92 /
 1.00 at sf0.001 / 0.01 / 0.1; the committed floor is 0.8. The oracle
 pins the PASS verdict row (the percentile-gate pattern — the
@@ -91,15 +91,23 @@ def _q_ivf_pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact decimal-dot squared-L2 — the second pass reads full-width
     vectors once, candidates broadcast."""
     from hbase_taggregator_spark.operators.similarity import (
-        ivf_pq_topk,
+        Codec,
+        build_ivf_index,
+        coarse_quantizer,
+        ivf_search,
         l2_topk,
+        seed_centroids,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    pq = ivf_pq_topk(
-        emb, queries, k=RECALL_K, m=IVFPQR_M, n_codes=IVFPQR_NCODES,
-        n_centroids=16, n_probe=IVFPQR_NPROBE, refine_iters=1,
+    quant = coarse_quantizer(seed_centroids(emb, 16))
+    index, codec = build_ivf_index(
+        emb, quant,
+        Codec("pq", m=IVFPQR_M, n_codes=IVFPQR_NCODES, refine_iters=1),
+    )
+    pq = ivf_search(
+        index, queries, quant, codec, k=RECALL_K, n_probe=IVFPQR_NPROBE,
         rerank_k=IVFPQR_RERANK_K,
     ).select("query_id", "vec_id")
     exact = l2_topk(emb, queries, k=RECALL_K).select("query_id", "vec_id")
@@ -200,17 +208,27 @@ def _q_ivf_pq_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximation is CHECKED, not reproduced — the oracle pins the
     verdict row."""
     from hbase_taggregator_spark.operators.similarity import (
-        ivf_pq_topk,
+        Codec,
+        build_ivf_index,
+        coarse_quantizer,
+        ivf_search,
         l2_topk,
+        seed_centroids,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    pq = ivf_pq_topk(
-        emb, queries, k=RECALL_K, m=IVFPQ_FLOOR_M,
-        n_codes=IVFPQ_FLOOR_NCODES, n_centroids=16,
-        n_probe=IVFPQ_FLOOR_NPROBE, refine_iters=1,
-        rerank_k=IVFPQ_FLOOR_RERANK_K, residual=True,
+    quant = coarse_quantizer(seed_centroids(emb, 16))
+    index, codec = build_ivf_index(
+        emb, quant,
+        Codec(
+            "pq", m=IVFPQ_FLOOR_M, n_codes=IVFPQ_FLOOR_NCODES,
+            refine_iters=1, residual=True,
+        ),
+    )
+    pq = ivf_search(
+        index, queries, quant, codec, k=RECALL_K,
+        n_probe=IVFPQ_FLOOR_NPROBE, rerank_k=IVFPQ_FLOOR_RERANK_K,
     ).select("query_id", "vec_id")
     exact = l2_topk(emb, queries, k=RECALL_K).select("query_id", "vec_id")
     rec = _recall_frame(spark, queries, pq, exact)

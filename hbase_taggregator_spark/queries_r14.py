@@ -55,16 +55,26 @@ def _q_ivf_pq_residual_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     same dials, refine_iters=1 (the codebook chain runs on residual
     vectors)."""
     from hbase_taggregator_spark.operators.similarity import (
-        ivf_pq_topk,
+        Codec,
+        build_ivf_index,
+        coarse_quantizer,
+        ivf_search,
         l2_topk,
+        seed_centroids,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    pq = ivf_pq_topk(
-        emb, queries, k=RECALL_K, m=IVFPQR_M, n_codes=IVFPQR_NCODES,
-        n_centroids=16, n_probe=IVFPQR_NPROBE, refine_iters=1,
-        residual=True,
+    quant = coarse_quantizer(seed_centroids(emb, 16))
+    index, codec = build_ivf_index(
+        emb, quant,
+        Codec(
+            "pq", m=IVFPQR_M, n_codes=IVFPQR_NCODES, refine_iters=1,
+            residual=True,
+        ),
+    )
+    pq = ivf_search(
+        index, queries, quant, codec, k=RECALL_K, n_probe=IVFPQR_NPROBE
     ).select("query_id", "vec_id")
     exact = l2_topk(emb, queries, k=RECALL_K).select("query_id", "vec_id")
     return _recall_frame(spark, queries, pq, exact)
@@ -173,10 +183,10 @@ def _ivf_pq_residual_indexed_frame(
     pre-materialization recall frame (what the plan audit records —
     VERDICT r14 #1)."""
     from hbase_taggregator_spark.operators.similarity import (
-        ivf_pq_topk_indexed,
+        Codec,
+        coarse_quantizer,
+        ivf_search,
         l2_topk,
-        read_ivf_cell_means,
-        read_ivf_codebooks,
         read_ivf_index,
         write_ivf_index,
     )
@@ -186,16 +196,17 @@ def _ivf_pq_residual_indexed_frame(
     cents = emb.orderBy("vec_id").limit(16).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
     )
+    quant = coarse_quantizer(cents)
     write_ivf_index(
-        emb, cents, f"{workdir}/ivfpqr", pq=True, pq_residual=True,
-        pq_m=IVFPQR_M, pq_codes=IVFPQR_NCODES, pq_refine_iters=1,
+        emb, quant, f"{workdir}/ivfpqr",
+        Codec(
+            "pq", m=IVFPQR_M, n_codes=IVFPQR_NCODES, refine_iters=1,
+            residual=True,
+        ),
     )
-    idx = read_ivf_index(spark, f"{workdir}/ivfpqr")
-    books = read_ivf_codebooks(spark, f"{workdir}/ivfpqr")
-    means = read_ivf_cell_means(spark, f"{workdir}/ivfpqr")
-    pq = ivf_pq_topk_indexed(
-        idx, queries, cents, books, k=RECALL_K, m=IVFPQR_M,
-        n_probe=IVFPQR_NPROBE, residual_means=means,
+    idx, codec = read_ivf_index(spark, f"{workdir}/ivfpqr")
+    pq = ivf_search(
+        idx, queries, quant, codec, k=RECALL_K, n_probe=IVFPQR_NPROBE
     ).select("query_id", "vec_id")
     exact = l2_topk(emb, queries, k=RECALL_K).select(
         "query_id", "vec_id"

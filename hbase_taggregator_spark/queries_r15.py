@@ -111,7 +111,7 @@ def _opq_rotated_corpus(emb: DataFrame) -> DataFrame:
     )
     rot = apply_rotation(emb, opq_rotation(resid, m=OPQ_M, dim=64))
     # Materialize the rotated fixture ONCE (500 × 64 doubles — smaller
-    # than the codebooks ivf_pq_topk collects anyway): left live, every
+    # than the codebooks the index build collects anyway): left live, every
     # construction job downstream (centroid collect, cell means,
     # codebook init, Lloyd refinement, the final plan, and the rotated
     # query filter) re-evaluates the dim² rotation as an interpreted
@@ -141,8 +141,12 @@ def _q_opq_lowrank_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     distances are rotation-invariant, so any floor failure is the
     rotation or the code algebra, never the fixture)."""
     from hbase_taggregator_spark.operators.similarity import (
-        ivf_pq_topk,
+        Codec,
+        build_ivf_index,
+        coarse_quantizer,
+        ivf_search,
         l2_topk,
+        seed_centroids,
     )
 
     # NOTE (r16): materializing the raw fixture here as a one-slice
@@ -157,10 +161,17 @@ def _q_opq_lowrank_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 10)
     exact = l2_topk(emb, queries, k=RECALL_K).select("query_id", "vec_id")
     rot = _opq_rotated_corpus(emb)
-    rotated = ivf_pq_topk(
-        rot, rot.filter(F.col("vec_id") < 10), k=RECALL_K, m=OPQ_M,
-        n_codes=OPQ_NCODES, n_centroids=OPQ_NLIST, n_probe=OPQ_NPROBE,
-        refine_iters=1, rerank_k=OPQ_RERANK_K, residual=True,
+    quant = coarse_quantizer(seed_centroids(rot, OPQ_NLIST))
+    index, codec = build_ivf_index(
+        rot, quant,
+        Codec(
+            "pq", m=OPQ_M, n_codes=OPQ_NCODES, refine_iters=1,
+            residual=True,
+        ),
+    )
+    rotated = ivf_search(
+        index, rot.filter(F.col("vec_id") < 10), quant, codec, k=RECALL_K,
+        n_probe=OPQ_NPROBE, rerank_k=OPQ_RERANK_K,
     ).select("query_id", "vec_id")
     rec = _recall_frame(spark, queries, rotated, exact)
     return rec.agg(

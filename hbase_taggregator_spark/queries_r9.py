@@ -12,7 +12,7 @@ in DuckDB SQL, hash-compared):
   two-level CTE chain with the final rank predicate widened to
   ``rk <= n_probe``.
 - ``similarity_kmeans_twolevel_refine`` — one Lloyd iteration under
-  ``strategy="twolevel"``: the refreshed means flow straight from the
+  ``two_level=True``: the refreshed means flow straight from the
   assignment aggregate with no driver round-trip of the centroid set
   (spy-asserted in tests/test_round8.py; scale evidence in
   tools/bench_twolevel_r9.py). The gate hashes integer checksums
@@ -122,7 +122,7 @@ def _q_kmeans_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensure_parallelism(emb),
         _first_centroids(emb),
         n_iter=1,
-        strategy="twolevel",
+        two_level=True,
         # explicit sizing (r9 self-review): decouple the gate from the
         # isqrt(nlist) default happening to equal the oracle's constants
         n_super=TWOLEVEL_NSUPER,

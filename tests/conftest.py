@@ -54,3 +54,67 @@ def golden_cells_py() -> list[tuple[int, int]]:
     return [
         (BASE_S + i * 3600 + j * 36, j) for i in range(100) for j in range(100)
     ]
+
+
+def exact_two_level_pairs(df, cents, n_super, n_super_probe, n_probe):
+    """Exact reference for the two-level assignment: every candidate of
+    the super-cell join (``two_level_parts``) scored with the
+    decimal-exact cosine, ranked per vector by (negcos NULLS FIRST,
+    cent_id) — the all-exact aggregate the two-phase top-k must agree
+    with — as a set of (vec_id, cent_id) picks."""
+    from pyspark.sql import Window
+
+    from hbase_taggregator_spark.operators import similarity as S
+
+    members, probes = S.two_level_parts(
+        df, cents, n_super=n_super, n_super_probe=n_super_probe
+    )
+    scored = probes.join(members, "__sid").select(
+        "vec_id",
+        F.col("__cid").alias("cent_id"),
+        (
+            -(
+                S.dot(F.col("embedding"), F.col("__cv"))
+                / S._nz(F.col("nrm") * F.col("__cnrm"))
+            )
+        ).alias("negcos"),
+    )
+    w = Window.partitionBy("vec_id").orderBy(
+        F.col("negcos").asc_nulls_first(), "cent_id"
+    )
+    ranked = scored.withColumn("__rk", F.row_number().over(w))
+    return {
+        (r["vec_id"], r["cent_id"])
+        for r in ranked.filter(F.col("__rk") <= n_probe).collect()
+    }
+
+
+def ivf_assign_as(form, df, cents, **kw):
+    """``ivf_assign`` forced onto one flat form — ``"expr"`` (plan
+    literals) or ``"arrow"`` (mapInPandas) — by moving the nlist
+    threshold that normally chooses between them."""
+    from hbase_taggregator_spark.operators import similarity as S
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(
+            S, "ARROW_ASSIGN_MIN_NLIST", 1 if form == "arrow" else 1 << 62
+        )
+        return S.ivf_assign(df, cents, **kw)
+
+
+def ivf_pq(corpus, queries, k=5, m=4, n_codes=16, n_centroids=16,
+           n_probe=4, refine_iters=0, residual=False, rerank_k=None):
+    """In-memory IVFADC search with the first ``n_centroids`` corpus
+    vectors as centroids: build the pq index, then search it."""
+    from hbase_taggregator_spark.operators import similarity as S
+
+    quant = S.coarse_quantizer(S.seed_centroids(corpus, n_centroids))
+    index, codec = S.build_ivf_index(
+        corpus, quant,
+        S.Codec("pq", m=m, n_codes=n_codes, refine_iters=refine_iters,
+                residual=residual),
+    )
+    return S.ivf_search(
+        index, queries, quant, codec, k=k, n_probe=n_probe,
+        rerank_k=rerank_k,
+    )

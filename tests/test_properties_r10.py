@@ -138,12 +138,13 @@ def test_salted_topk_equals_unsalted_under_random_vectors(
         return
 
     def run(s):
-        return sorted(
-            (r["vec_id"], r["cent_id"])
-            for r in S.ivf_assign_two_level(
-                emb, cents, n_super=2, n_super_probe=2, n_probe=2,
-                topk_salt=s,
-            ).collect()
-        )
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(S, "TWO_LEVEL_SALTS", s)
+            return sorted(
+                (r["vec_id"], r["cent_id"])
+                for r in S.ivf_assign_two_level(
+                    emb, cents, n_super=2, n_super_probe=2, n_probe=2,
+                ).collect()
+            )
 
     assert run(1) == run(salt)

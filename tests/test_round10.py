@@ -1,23 +1,18 @@
 """Round-10 regression tests (VERDICT r9 "Next round" + ADVICE):
 
-- the two-level top-k aggregation is SALTED two-stage by default: no
-  partial collect_list buffer ever holds the full per-vector candidate
-  list (stage 1 groups by (vec_id, pmod(hash(cent_id), salt)) and
-  slices to n_probe BEFORE the exchange; stage 2 merges ≤ salt·n_probe
-  survivors) — pinned equal to the legacy single-aggregate shape, and
-  plan-asserted KEY-ONLY (the collect_list aggregates never see the
-  vector payload);
+- the two-level top-k aggregation is SALTED two-stage: no partial
+  collect_list buffer ever holds the full per-vector candidate list
+  (stage 1 groups by (vec_id, pmod(hash(cent_id), salt)) and slices to
+  n_probe BEFORE the exchange; stage 2 merges ≤ salt·n_probe
+  survivors) — pinned equal to the exact reference ranking at several
+  salt counts, and plan-asserted KEY-ONLY (the collect_list aggregates
+  never see the vector payload);
 - the two-level retrieval recall@5 gate returns sane values (the oracle
   hash match is the driver's job; the shape contract is ours);
 - random_projection derives ``dim`` from the data when not given (r9
   ADVICE: a forgotten dim= no longer silently projects an empty frame)
   and raises on an all-empty input;
-- two_level_parts' empty-centroid error names the two-level entry point
-  (r9 ADVICE);
-- kmeans_refine(strategy="twolevel", release_input=True) releases the
-  input centroid cache once the first refreshed means materialize
-  (r9 ADVICE: chained refinement no longer accumulates executor
-  storage).
+- two_level_parts' empty-centroid error names the two-level entry point.
 """
 
 from __future__ import annotations
@@ -25,6 +20,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import exact_two_level_pairs
 from hbase_taggregator_spark import plans as P
 
 SF = "/root/testdata/sf0.001"
@@ -41,11 +37,12 @@ def _toy_vectors(spark, n=40, dim=8):
 # --- salted two-stage top-k (VERDICT r9 "What's wrong" #1) ------------------
 
 
-def test_salted_topk_equals_legacy_single_aggregate(spark):
+def test_salted_topk_equals_legacy_single_aggregate(spark, monkeypatch):
     """The salted merge is EXACT (every candidate lands in exactly one
     salt group; any global top-k member is its own salt's top-k member),
-    so topk_salt must not change results — membership and multiplicity —
-    at several salt counts, including salt > distinct-cent count."""
+    so the salt count must not change results — membership and
+    multiplicity — at several salt counts, including one salt and
+    salt > distinct-cent count."""
     from hbase_taggregator_spark.operators import similarity as S
 
     emb = _toy_vectors(spark, n=50, dim=8)
@@ -54,16 +51,18 @@ def test_salted_topk_equals_legacy_single_aggregate(spark):
     )
 
     def run(salt):
-        return sorted(
+        monkeypatch.setattr(S, "TWO_LEVEL_SALTS", salt)
+        rows = [
             (r["vec_id"], r["cent_id"])
             for r in S.ivf_assign_two_level(
                 emb, cents, n_super=4, n_super_probe=3, n_probe=3,
-                topk_salt=salt,
             ).collect()
-        )
+        ]
+        assert len(rows) == len(set(rows))
+        return set(rows)
 
-    legacy = run(1)
-    assert legacy == run(4) == run(16) == run(64)
+    exact = exact_two_level_pairs(emb, cents, 4, 3, 3)
+    assert exact == run(1) == run(4) == run(16) == run(64)
 
 
 def test_salted_topk_collect_list_aggregates_are_key_only(spark):
@@ -84,7 +83,7 @@ def test_salted_topk_collect_list_aggregates_are_key_only(spark):
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
     )
     out = S.ivf_assign_two_level(
-        emb, cents, n_super=8, n_super_probe=4, n_probe=5, topk_salt=8
+        emb, cents, n_super=8, n_super_probe=4, n_probe=5
     )
     text = P.formatted_plan(out)
     sections = text.split("\n\n")
@@ -122,8 +121,11 @@ def test_salted_topk_caps_per_group_census(spark):
     cents = emb.filter(F.col("vec_id") < 64).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
     )
-    cand = S.ivf_assign_two_level(
-        emb, cents, n_super=8, n_super_probe=4, return_candidates=True
+    members, probes = S.two_level_parts(
+        emb, cents, n_super=8, n_super_probe=4
+    )
+    cand = probes.join(members, "__sid").select(
+        "vec_id", F.col("__cid").alias("cent_id")
     )
     per_vec = cand.groupBy("vec_id").count()
     legacy_bound = per_vec.agg(F.max("count")).collect()[0][0]
@@ -136,29 +138,33 @@ def test_salted_topk_caps_per_group_census(spark):
     assert salt * n_probe < legacy_bound
 
 
-# --- ivf_topk strategy passthrough ------------------------------------------
+# --- two-level quantizer in the IVF search ---------------------------------
 
 
-def test_ivf_topk_twolevel_strategy_matches_flat_under_full_probe(spark):
-    """With every super-cell probed, two-level assignment is exact, so
-    ivf_topk(strategy='twolevel') must return the flat path's results
-    row-for-row — the passthrough wires BOTH assignment calls (corpus
-    inverted lists and query probes) through the same strategy."""
+def test_ivf_search_twolevel_quantizer_matches_flat_under_full_probe(spark):
+    """With every super-cell probed, two-level assignment is exact, so a
+    search over a two-level quantizer must return the flat quantizer's
+    results row-for-row — the one quantizer value serves BOTH
+    assignments (corpus inverted lists and query probes)."""
     from hbase_taggregator_spark.operators import similarity as S
 
     emb = _toy_vectors(spark, n=50, dim=8)
     queries = emb.filter(F.col("vec_id") < 5)
+    cents = S.seed_centroids(emb, 10)
 
-    def run(**kw):
+    def run(quant):
+        index, _ = S.build_ivf_index(emb, quant)
         return sorted(
             (r["query_id"], r["vec_id"])
-            for r in S.ivf_topk(
-                emb, queries, k=3, n_centroids=10, n_probe=4, **kw
+            for r in S.ivf_search(
+                index, queries, quant, k=3, n_probe=4
             ).collect()
         )
 
-    flat = run(strategy="expr")
-    two = run(strategy="twolevel", n_super=4, n_super_probe=4)
+    flat = run(S.coarse_quantizer(cents))
+    two = run(S.coarse_quantizer(
+        cents, two_level=True, n_super=4, n_super_probe=4
+    ))
     assert flat == two and len(flat) == 5 * 3
 
 
@@ -308,27 +314,3 @@ def test_two_level_empty_centroids_error_names_entry_point(spark):
     )
     with pytest.raises(ValueError, match="ivf_assign_two_level"):
         S.two_level_parts(emb, none)
-
-
-# --- kmeans_refine release_input (r9 ADVICE) --------------------------------
-
-
-def test_kmeans_refine_release_input_releases_prior_cache(spark):
-    from hbase_taggregator_spark.operators import similarity as S
-
-    emb = _toy_vectors(spark, n=40, dim=8)
-    seed = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
-    )
-    first = S.kmeans_refine(
-        emb, seed, n_iter=1, strategy="twolevel", n_super=4, n_super_probe=2
-    )
-    assert first.is_cached  # caller-owned, as documented
-    second = S.kmeans_refine(
-        emb, first, n_iter=1, strategy="twolevel", n_super=4,
-        n_super_probe=2, release_input=True,
-    )
-    assert second.is_cached
-    assert not first.is_cached  # the chained call released its input
-    assert second.count() > 0
-    second.unpersist()

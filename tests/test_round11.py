@@ -12,7 +12,7 @@
   the banded join, not the fallback cross;
 - ``_resolve_band_bits`` picks the coarsest guaranteeing width and
   raises on widths that cannot guarantee;
-- ``ivf_binary_topk`` degenerates to ``ivf_topk`` exactly when
+- the binary-codec IVF search degenerates to the flat one exactly when
   ``rerank_k`` covers every probed candidate, and its first pass is
   key-only (the full-width vector column never rides a plain Exchange);
 - ``random_projection``'s derived dim is the smallest-id non-empty
@@ -250,20 +250,22 @@ def test_binary_dedup_survivors_matches_exhaustive_rule(spark):
 
 def test_ivf_binary_degenerates_to_ivf_topk(spark):
     """rerank_k >= every probed candidate count ⇒ the Hamming shortlist
-    keeps everything and the composed stack must equal ivf_topk exactly
-    (same centroids, same probes, same exact-cosine final ranking)."""
+    keeps everything and the binary-codec search must equal the flat one
+    exactly (same centroids, same probes, same exact-cosine ranking)."""
     from hbase_taggregator_spark.operators import similarity as S
 
     emb = _emb(spark)
     q = emb.filter(F.col("vec_id") < 5)
+    quant = S.coarse_quantizer(S.seed_centroids(emb, 8))
+    flat, _ = S.build_ivf_index(emb, quant)
     want = _rows(
-        S.ivf_topk(emb, q, k=3, n_centroids=8, n_probe=3),
+        S.ivf_search(flat, q, quant, k=3, n_probe=3),
         "query_id", "vec_id", "cosine",
     )
+    words, codec = S.build_ivf_index(emb, quant, S.Codec("binary"))
     got = _rows(
-        S.ivf_binary_topk(
-            emb, q, k=3, rerank_k=10 ** 6, n_centroids=8, n_probe=3
-        ),
+        S.ivf_search(words, q, quant, codec, k=3, n_probe=3,
+                     rerank_k=10 ** 6),
         "query_id", "vec_id", "cosine",
     )
     assert got == want and len(got) == 15
@@ -279,8 +281,10 @@ def test_ivf_binary_first_pass_is_key_only(spark):
 
     emb = _emb(spark)
     q = emb.filter(F.col("vec_id") < 5)
+    quant = S.coarse_quantizer(S.seed_centroids(emb, 8))
+    index, codec = S.build_ivf_index(emb, quant, S.Codec("binary"))
     plan = (
-        S.ivf_binary_topk(emb, q, k=3, rerank_k=10, n_centroids=8, n_probe=3)
+        S.ivf_search(index, q, quant, codec, k=3, n_probe=3, rerank_k=10)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -297,40 +301,6 @@ def test_ivf_binary_first_pass_is_key_only(spark):
 # --- persisted IVF index (standing index build + pruned probe) --------------
 
 
-def test_ivf_indexed_equals_in_memory_and_prunes(spark, tmp_path):
-    """The persisted-index path must be row-identical to ivf_topk over
-    the same corpus/centroids (the parquet round-trip is exact), and
-    the probe join must DYNAMIC-PARTITION-PRUNE the index scan — the
-    100 TB property: unprobed cell directories are never read."""
-    from hbase_taggregator_spark.operators import similarity as S
-
-    emb = _emb(spark)
-    cents = emb.orderBy("vec_id").limit(16).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
-    )
-    q = emb.filter(F.col("vec_id") < 5)
-    path = str(tmp_path / "ivf")
-    S.write_ivf_index(emb, cents, path)
-    idx = S.read_ivf_index(spark, path)
-    assert set(idx.columns) == {"vec_id", "embedding", "nrm", "cent_id"}
-    assert idx.count() == emb.count()
-    got = _rows(
-        S.ivf_topk_indexed(idx, q, cents, k=5, n_probe=4),
-        "query_id", "vec_id", "cosine",
-    )
-    want = _rows(
-        S.ivf_topk(emb, q, k=5, n_probe=4, centroids=cents),
-        "query_id", "vec_id", "cosine",
-    )
-    assert got == want and len(got) == 25
-    plan = (
-        S.ivf_topk_indexed(idx, q, cents, k=5, n_probe=4)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "dynamicpruning" in plan, "index scan not partition-pruned"
-    assert "Python" not in plan
-
-
 def test_ivf_index_layout_is_one_directory_per_cell(spark, tmp_path):
     """cent_id is the PARTITION column: one `cent_id=<k>/` directory
     per non-empty inverted list, so a static or dynamic cent_id
@@ -344,14 +314,14 @@ def test_ivf_index_layout_is_one_directory_per_cell(spark, tmp_path):
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
     )
     path = str(tmp_path / "ivf")
-    S.write_ivf_index(emb, cents, path)
+    S.write_ivf_index(emb, S.coarse_quantizer(cents), path)
     dirs = sorted(
         d for d in os.listdir(path) if d.startswith("cent_id=")
     )
     assert 1 <= len(dirs) <= 8
     # a static single-cell read touches only that directory's rows
     one = int(dirs[0].split("=")[1])
-    idx = S.read_ivf_index(spark, path)
+    idx, _ = S.read_ivf_index(spark, path)
     static = idx.filter(F.col("cent_id") == one)
     n_direct = spark.read.parquet(f"{path}/cent_id={one}").count()
     assert static.count() == n_direct
@@ -372,20 +342,21 @@ def test_ivf_index_append_equals_full_build(spark, tmp_path):
     q = emb.filter(F.col("vec_id") < 5)
     full_path = str(tmp_path / "full")
     incr_path = str(tmp_path / "incr")
-    S.write_ivf_index(emb, cents, full_path)
-    S.write_ivf_index(emb.filter(F.col("vec_id") % 2 == 0), cents, incr_path)
+    quant = S.coarse_quantizer(cents)
+    S.write_ivf_index(emb, quant, full_path)
+    S.write_ivf_index(emb.filter(F.col("vec_id") % 2 == 0), quant, incr_path)
     S.write_ivf_index(
-        emb.filter(F.col("vec_id") % 2 == 1), cents, incr_path, mode="append"
+        emb.filter(F.col("vec_id") % 2 == 1), quant, incr_path, mode="append"
     )
-    idx_full = S.read_ivf_index(spark, full_path)
-    idx_incr = S.read_ivf_index(spark, incr_path)
+    idx_full, _ = S.read_ivf_index(spark, full_path)
+    idx_incr, _ = S.read_ivf_index(spark, incr_path)
     assert idx_incr.count() == idx_full.count()
     got = _rows(
-        S.ivf_topk_indexed(idx_incr, q, cents, k=5, n_probe=4),
+        S.ivf_search(idx_incr, q, quant, k=5, n_probe=4),
         "query_id", "vec_id", "cosine",
     )
     want = _rows(
-        S.ivf_topk_indexed(idx_full, q, cents, k=5, n_probe=4),
+        S.ivf_search(idx_full, q, quant, k=5, n_probe=4),
         "query_id", "vec_id", "cosine",
     )
     assert got == want and len(got) == 25

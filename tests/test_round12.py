@@ -6,21 +6,20 @@
   band widths that don't divide the packed word (no ZeroDivisionError /
   unresolvable-column crash); ``read_ivf_index`` returns ``cent_id`` at
   the written BIGINT type, not parquet's re-inferred INT.
-- the ``binary=True`` persisted IVF index stores the packed words and
-  the thresholds sidecar (hidden from the main read), and
-  ``ivf_binary_topk_indexed`` is row-identical to the in-memory
-  composed stack — with the first pass DYNAMIC-PARTITION-PRUNED and
-  COLUMN-PRUNED (no float payload in its ReadSchema), and the re-rank
-  scan pruned to the same probed cells via the (cent_id, id) join.
+- the binary-codec persisted IVF index stores the packed words and the
+  thresholds sidecar (hidden from the main read); an index lacking a
+  codec's columns is refused by the search; appends encode with the
+  stored codec.
 """
 
 from __future__ import annotations
 
 import os
-import re
 
 import pytest
 from pyspark.sql import functions as F
+
+from conftest import ivf_pq
 
 SF = "/root/testdata/sf0.001"
 
@@ -93,13 +92,14 @@ def test_read_ivf_index_schema_matches_written(spark, tmp_path):
 
     emb = _emb(spark)
     path = str(tmp_path / "ivf")
-    S.write_ivf_index(emb, _cents(emb), path)
-    idx = S.read_ivf_index(spark, path)
+    quant = S.coarse_quantizer(_cents(emb))
+    S.write_ivf_index(emb, quant, path)
+    idx, codec = S.read_ivf_index(spark, path)
     assert dict(idx.dtypes)["cent_id"] == "bigint"
     # ...and the cast does not defeat dynamic partition pruning
     q = emb.filter(F.col("vec_id") < 3)
     plan = (
-        S.ivf_topk_indexed(idx, q, _cents(emb), k=3, n_probe=2)
+        S.ivf_search(idx, q, quant, codec, k=3, n_probe=2)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "dynamicpruning" in plan
@@ -109,66 +109,25 @@ def test_read_ivf_index_schema_matches_written(spark, tmp_path):
 
 
 def test_binary_index_layout_and_sidecar(spark, tmp_path):
-    """binary=True stores the packed words next to each row and the
+    """A binary codec stores the packed words next to each row and the
     thresholds under _thresholds — hidden from the main read (the
     underscore convention) but exact on read-back."""
     from hbase_taggregator_spark.operators import similarity as S
 
     emb = _emb(spark)
     path = str(tmp_path / "ivf")
-    S.write_ivf_index(emb, _cents(emb), path, binary=True)
-    idx = S.read_ivf_index(spark, path)
+    S.write_ivf_index(emb, _cents(emb), path, S.Codec("binary"))
+    idx, codec = S.read_ivf_index(spark, path)
     assert set(idx.columns) == {
         "vec_id", "embedding", "nrm", "w0", "w1", "cent_id"
     }
     assert idx.count() == emb.count()
-    thr = S.read_ivf_thresholds(spark, path)
+    thr = codec.thresholds
     assert thr == S.dimension_means(emb) and len(thr) == 64
     # the stored words are exactly binary_quantize at those thresholds
     want = _rows(S.binary_quantize(emb, thresholds=thr), "vec_id", "w0", "w1")
     got = _rows(idx, "vec_id", "w0", "w1")
     assert got == want
-
-
-def test_ivf_binary_indexed_equals_in_memory_and_prunes(spark, tmp_path):
-    """The persisted composed stack must be row-identical to the
-    in-memory ivf_binary_topk over the same corpus/centroids/codebook;
-    the first pass must be dynamic-partition-pruned AND column-pruned
-    (no float payload in its ReadSchema); the re-rank joins back on
-    (cent_id, id) so its scan prunes to the same probed cells."""
-    import re
-
-    from hbase_taggregator_spark.operators import similarity as S
-
-    emb = _emb(spark)
-    cents = _cents(emb)
-    q = emb.filter(F.col("vec_id") < 5)
-    path = str(tmp_path / "ivf")
-    S.write_ivf_index(emb, cents, path, binary=True)
-    idx = S.read_ivf_index(spark, path)
-    thr = S.read_ivf_thresholds(spark, path)
-    got = _rows(
-        S.ivf_binary_topk_indexed(idx, q, cents, thr, k=5, rerank_k=20,
-                                  n_probe=4),
-        "query_id", "vec_id", "cosine",
-    )
-    want = _rows(
-        S.ivf_binary_topk(emb, q, k=5, rerank_k=20, centroids=cents,
-                          n_probe=4, threshold="mean"),
-        "query_id", "vec_id", "cosine",
-    )
-    assert got == want and len(got) == 25
-    plan = (
-        S.ivf_binary_topk_indexed(idx, q, cents, thr, k=5, rerank_k=20,
-                                  n_probe=4)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "dynamicpruning" in plan and "Python" not in plan
-    # the words-only first-pass projection reached the scan
-    schemas = re.findall(r"ReadSchema: (\S+)", plan)
-    assert any(
-        "w0" in s and "embedding" not in s for s in schemas
-    ), schemas
 
 
 def test_ivf_binary_indexed_requires_binary_layout(spark, tmp_path):
@@ -177,10 +136,11 @@ def test_ivf_binary_indexed_requires_binary_layout(spark, tmp_path):
     emb = _emb(spark)
     path = str(tmp_path / "ivf")
     S.write_ivf_index(emb, _cents(emb), path)  # no binary columns
-    idx = S.read_ivf_index(spark, path)
+    idx, _ = S.read_ivf_index(spark, path)
     q = emb.filter(F.col("vec_id") < 2)
-    with pytest.raises(ValueError, match="binary=True"):
-        S.ivf_binary_topk_indexed(idx, q, _cents(emb), [0.0] * 64)
+    binary = S.Codec("binary", thresholds=[0.0] * 64)
+    with pytest.raises(ValueError, match=r"lacks columns \['w0', 'w1'\]"):
+        S.ivf_search(idx, q, _cents(emb), binary)
 
 
 # --- standing binary band index + incremental admission ----------------------
@@ -341,8 +301,7 @@ def test_ivf_pq_degenerates_to_pq_adc_when_probing_everything(spark):
     emb = _emb(spark)
     q = emb.filter(F.col("vec_id") < 4)
     got = _rows(
-        S.ivf_pq_topk(emb, q, k=5, m=4, n_codes=16, n_centroids=8,
-                      n_probe=8),
+        ivf_pq(emb, q, k=5, m=4, n_codes=16, n_centroids=8, n_probe=8),
         "query_id", "vec_id", "adc_dist",
     )
     want = _rows(
@@ -361,7 +320,7 @@ def test_ivf_pq_plan_is_broadcast_and_jvm_only(spark):
 
     emb = _emb(spark)
     q = emb.filter(F.col("vec_id") < 3)
-    df = S.ivf_pq_topk(emb, q, k=5, refine_iters=1)
+    df = ivf_pq(emb, q, k=5, refine_iters=1)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan
     assert plan.count("BroadcastHashJoin") >= 2
@@ -386,53 +345,10 @@ def test_index_writers_cluster_one_file_per_bucket(spark, tmp_path):
         files = [f for f in glob.glob(f"{d}/*.parquet")]
         assert len(files) == 1, d
     ivf_path = str(tmp_path / "ivf")
-    S.write_ivf_index(emb, _cents(emb), ivf_path, binary=True)
+    S.write_ivf_index(emb, _cents(emb), ivf_path, S.Codec("binary"))
     for d in glob.glob(f"{ivf_path}/cent_id=*"):
         files = [f for f in glob.glob(f"{d}/*.parquet")]
         assert len(files) == 1, d
-
-
-def test_ivf_pq_indexed_equals_in_memory_and_prunes(spark, tmp_path):
-    """The pq=True persisted index serves the IVFADC stack
-    row-identically to the in-memory ivf_pq_topk over the same
-    corpus/centroids/codebooks (the codebooks sidecar round-trips
-    exactly); the ADC first pass is dynamic-partition-pruned and
-    column-pruned to (id, cent_id, codes)."""
-    import re
-
-    from hbase_taggregator_spark.operators import similarity as S
-
-    emb = _emb(spark)
-    cents = _cents(emb)
-    q = emb.filter(F.col("vec_id") < 5)
-    path = str(tmp_path / "ivfpq")
-    S.write_ivf_index(emb, cents, path, pq=True, pq_refine_iters=1)
-    idx = S.read_ivf_index(spark, path)
-    assert {"code_0", "code_1", "code_2", "code_3"} <= set(idx.columns)
-    books = S.read_ivf_codebooks(spark, path)
-    want_books = S.pq_refine_codebooks(
-        emb, S.pq_codebooks(emb, m=4, k=16), m=4, iters=1
-    )
-    assert books == want_books
-    got = _rows(
-        S.ivf_pq_topk_indexed(idx, q, cents, books, k=5, n_probe=4),
-        "query_id", "vec_id", "adc_dist",
-    )
-    want = _rows(
-        S.ivf_pq_topk(emb, q, k=5, n_centroids=16, n_probe=4,
-                      centroids=cents, refine_iters=1),
-        "query_id", "vec_id", "adc_dist",
-    )
-    assert got == want and len(got) == 25
-    plan = (
-        S.ivf_pq_topk_indexed(idx, q, cents, books, k=5, n_probe=4)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "dynamicpruning" in plan and "Python" not in plan
-    schemas = re.findall(r"ReadSchema: (\S+)", plan)
-    assert any(
-        "code_0" in s and "embedding" not in s for s in schemas
-    ), schemas
 
 
 def test_ivf_pq_indexed_requires_pq_layout(spark, tmp_path):
@@ -441,65 +357,63 @@ def test_ivf_pq_indexed_requires_pq_layout(spark, tmp_path):
     emb = _emb(spark)
     path = str(tmp_path / "plain")
     S.write_ivf_index(emb, _cents(emb), path)
-    idx = S.read_ivf_index(spark, path)
+    idx, _ = S.read_ivf_index(spark, path)
     q = emb.filter(F.col("vec_id") < 2)
-    with pytest.raises(ValueError, match="pq=True"):
-        S.ivf_pq_topk_indexed(idx, q, _cents(emb), [])
+    pq = S.Codec("pq", books=[(s, 0, [0.0] * 16) for s in range(4)])
+    with pytest.raises(ValueError, match="lacks columns"):
+        S.ivf_search(idx, q, _cents(emb), pq)
 
 
 # --- r12 review guards: append codebook contract + layout validation --------
 
 
 def test_append_reads_stored_codebooks_and_rejects_divergent(spark, tmp_path):
-    """Growing a binary/pq index with thresholds/codebooks omitted must
-    quantize the batch against the STORED sidecars (never re-train on
-    the batch — that silently mixes codebooks); explicit divergent
-    values raise; sidecars are only written by builds."""
+    """Growing a binary or pq index must encode the batch with the
+    STORED codec (never re-train on the batch — that silently mixes
+    codebooks); a codec naming a different representation raises BEFORE
+    anything is written; sidecars are only written by builds."""
     from hbase_taggregator_spark.operators import similarity as S
 
     emb = _emb(spark)
     a = emb.filter(F.col("vec_id") < 300)
     b = emb.filter(F.col("vec_id") >= 300)
-    path = str(tmp_path / "ivf")
-    S.write_ivf_index(a, _cents(emb), path, binary=True, pq=True,
-                      pq_refine_iters=0)
-    thr0 = S.read_ivf_thresholds(spark, path)
-    books0 = S.read_ivf_codebooks(spark, path)
-    # append WITHOUT passing thresholds/codebooks: stored ones apply
-    S.write_ivf_index(b, _cents(emb), path, binary=True, pq=True,
-                      pq_refine_iters=0, mode="append")
-    assert S.read_ivf_thresholds(spark, path) == thr0
-    assert S.read_ivf_codebooks(spark, path) == books0
-    idx = S.read_ivf_index(spark, path)
-    # the appended rows carry codes in the ORIGINAL codebook: quantize
-    # the full corpus at thr0 and compare words row-for-row
-    want = _rows(S.binary_quantize(emb, thresholds=thr0),
+    quant = S.coarse_quantizer(_cents(emb))
+    bin_path = str(tmp_path / "bin")
+    S.write_ivf_index(a, quant, bin_path, S.Codec("binary"))
+    _, bin0 = S.read_ivf_index(spark, bin_path)
+    S.write_ivf_index(b, quant, bin_path, S.Codec("binary"), mode="append")
+    idx, bin1 = S.read_ivf_index(spark, bin_path)
+    assert bin1.thresholds == bin0.thresholds
+    # the appended rows carry words in the ORIGINAL codebook: quantize
+    # the full corpus at the stored thresholds and compare row-for-row
+    want = _rows(S.binary_quantize(emb, thresholds=bin0.thresholds),
                  "vec_id", "w0", "w1")
     assert _rows(idx, "vec_id", "w0", "w1") == want
-    # explicit divergent values raise BEFORE anything is written: the
-    # index must be byte-for-byte untouched after each rejection (r12
-    # ADVICE — validation used to run after the append had persisted)
-    n0 = idx.count()
-    with pytest.raises(ValueError, match="differ from the stored"):
-        S.write_ivf_index(b, _cents(emb), path, binary=True, pq=True,
-                          thresholds=[0.0] * 64, mode="append")
-    with pytest.raises(ValueError, match="differ from the stored"):
-        S.write_ivf_index(b, _cents(emb), path, binary=True, pq=True,
-                          codebooks=[(s, c, [0.0] * 16)
-                                     for s in range(4) for c in range(16)],
-                          mode="append")
-    # representation-set mismatches raise too (r12 ADVICE): an append
+
+    pq_path = str(tmp_path / "pq")
+    S.write_ivf_index(a, quant, pq_path, S.Codec("pq"))
+    _, pq0 = S.read_ivf_index(spark, pq_path)
+    S.write_ivf_index(b, quant, pq_path, S.Codec("pq"), mode="append")
+    idx_pq, pq1 = S.read_ivf_index(spark, pq_path)
+    assert pq1.books == pq0.books
+    cols = ["vec_id"] + [f"code_{s}" for s in range(4)]
+    assert _rows(idx_pq, *cols) == _rows(
+        S.pq_encode(emb, pq0.books, 4), *cols
+    )
+
+    # representation mismatches raise before any write: an append
     # lacking the standing layout's codes would read back NULL words
     # and silently vanish from Hamming/ADC candidates
+    n0 = idx.count()
+    for codec in (S.Codec(), S.Codec("pq"), S.Codec("pq", residual=True)):
+        with pytest.raises(ValueError, match="does not match the standing"):
+            S.write_ivf_index(b, quant, bin_path, codec, mode="append")
     with pytest.raises(ValueError, match="does not match the standing"):
-        S.write_ivf_index(b, _cents(emb), path, mode="append")
-    with pytest.raises(ValueError, match="does not match the standing"):
-        S.write_ivf_index(b, _cents(emb), path, binary=True, mode="append")
-    after = S.read_ivf_index(spark, path)
+        S.write_ivf_index(b, quant, pq_path, S.Codec("binary"), mode="append")
+    after, bin2 = S.read_ivf_index(spark, bin_path)
     assert after.count() == n0
     assert _rows(after, "vec_id", "w0", "w1") == want
-    assert S.read_ivf_thresholds(spark, path) == thr0
-    assert S.read_ivf_codebooks(spark, path) == books0
+    assert bin2.thresholds == bin0.thresholds
 
 
 def test_band_index_append_contract_and_admission_layout_guard(

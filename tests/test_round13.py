@@ -1,13 +1,11 @@
 """Round-13 regression tests (VERDICT r12 "Next round" + r12 ADVICE):
 
-- the PQ broadcast strategy (VERDICT r12 #3/#4): past
-  ``PQ_INLINE_MAX_LITERALS`` codebook floats, ``pq_encode`` and the
+- the PQ broadcast codebook: ``pq_encode`` and the
   ADC LUT ship the codebooks via a BroadcastExchange instead of plan
   literals — ZERO codeword literals at production dials (plan-asserted
-  at m=16 × 256 codes × dim=512, where inline would inline 262k
+  at m=16 × 256 codes × dim=512, where literals would inline 262k
   doubles and hit the Catalyst plan-size ceiling the IVF family
-  documented), while running the identical decimal algebra — pinned
-  output-identical to inline on the real fixture.
+  documented); ``keep`` columns ride through the encode unchanged.
 - ``pq_code_census`` (VERDICT r12 #5): the dup-collapse detector
   fires (top_code_share ≈ 1) on a copy-block corpus and stays silent
   on the regular fixture.
@@ -15,8 +13,9 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
+
+from conftest import ivf_pq
 
 SF = "/root/testdata/sf0.001"
 
@@ -34,68 +33,29 @@ def _rows(df, *cols):
 # --- PQ broadcast strategy (zero plan literals) ------------------------------
 
 
-def test_pq_strategy_resolution_and_validation():
-    from hbase_taggregator_spark.operators import similarity as S
-
-    small = [(0, 0, [0.0] * 16)] * 4  # 64 floats
-    big = [(s, c, [0.0] * 32) for s in range(16) for c in range(256)]
-    assert S._resolve_pq_strategy("auto", small) == "inline"
-    assert S._resolve_pq_strategy("auto", big) == "broadcast"
-    assert S._resolve_pq_strategy("inline", big) == "inline"
-    assert S._resolve_pq_strategy("broadcast", small) == "broadcast"
-    with pytest.raises(ValueError, match="unknown pq_strategy"):
-        S._resolve_pq_strategy("arrow", small)
-
-
-def test_pq_broadcast_output_identical_to_inline(spark):
-    """Both strategies run the same decimal algebra — encode, flat ADC,
-    and the composed IVFADC stack must be row-identical on the real
-    fixture (refined books included, so the refine loop's encode is
-    covered through pq_refine_codebooks)."""
-    from hbase_taggregator_spark.operators import similarity as S
-
-    emb = _emb(spark)
-    books = S.pq_codebooks(emb, 4, 16)
-    a = S.pq_encode(emb, books, 4, pq_strategy="inline")
-    b = S.pq_encode(emb, books, 4, pq_strategy="broadcast")
-    cols = a.columns
-    assert b.columns == cols
-    assert _rows(a, *cols) == _rows(b, *cols)
-    q = emb.filter(F.col("vec_id") < 5)
-    x = S.pq_adc_topk(emb, q, k=5, pq_strategy="inline")
-    y = S.pq_adc_topk(emb, q, k=5, pq_strategy="broadcast")
-    assert _rows(x, *x.columns) == _rows(y, *y.columns)
-    u = S.ivf_pq_topk(emb, q, k=5, refine_iters=1, pq_strategy="inline")
-    v = S.ivf_pq_topk(emb, q, k=5, refine_iters=1, pq_strategy="broadcast")
-    assert _rows(u, *u.columns) == _rows(v, *v.columns)
-
-
 def test_pq_broadcast_keep_columns_ride_through(spark):
-    """The broadcast encode must carry `keep` columns (the refine
-    loop's vector payload, the composed stack's cent_id) in the same
-    positions as inline."""
+    """The encode must carry `keep` columns (the index build's vector,
+    norm and cell) through unchanged, after the codes, without changing
+    the codes."""
     from hbase_taggregator_spark.operators import similarity as S
 
-    emb = _emb(spark)
+    emb = _emb(spark).withColumn("tag", F.col("vec_id") * 3)
     books = S.pq_codebooks(emb, 4, 16)
-    a = S.pq_encode(emb, books, 4, keep=["embedding"], pq_strategy="inline")
-    b = S.pq_encode(
-        emb, books, 4, keep=["embedding"], pq_strategy="broadcast"
-    )
-    assert a.columns == b.columns
-    ra = sorted((r["vec_id"], r["code_0"], tuple(r["embedding"]))
-                for r in a.collect())
-    rb = sorted((r["vec_id"], r["code_0"], tuple(r["embedding"]))
-                for r in b.collect())
-    assert ra == rb
+    a = S.pq_encode(emb, books, 4)
+    b = S.pq_encode(emb, books, 4, keep=["embedding", "tag"])
+    codes = [f"code_{s}" for s in range(4)]
+    assert b.columns == ["vec_id", *codes, "embedding", "tag"]
+    assert _rows(b, "vec_id", *codes) == _rows(a, "vec_id", *codes)
+    src = {r["vec_id"]: (tuple(r["embedding"]), r["tag"]) for r in emb.collect()}
+    got = {r["vec_id"]: (tuple(r["embedding"]), r["tag"]) for r in b.collect()}
+    assert got == src
 
 
 def test_pq_broadcast_plan_has_zero_literals_at_production_dials(spark):
-    """The point of the strategy (VERDICT r12 #3): at m=16 × 256 codes
-    × dim=512 the inline plan would carry 131k codeword literals (262k
-    at dim=1024) — past Catalyst's practical plan ceiling. The
-    broadcast plan must be small, literal-free, JVM-only, and join the
-    codebook via BroadcastExchange."""
+    """At m=16 × 256 codes × dim=512 a literal plan would carry 131k
+    codeword literals (262k at dim=1024) — past Catalyst's practical
+    plan ceiling. The broadcast plan must be small, literal-free,
+    JVM-only, and join the codebook via BroadcastExchange."""
     from hbase_taggregator_spark.operators import similarity as S
 
     M, K, DIM = 16, 256, 512
@@ -113,7 +73,7 @@ def test_pq_broadcast_plan_has_zero_literals_at_production_dials(spark):
         for s in range(M)
         for c in range(K)
     ]
-    enc = S.pq_encode(corpus, books, M, dim=DIM)  # auto -> broadcast
+    enc = S.pq_encode(corpus, books, M, dim=DIM)
     plan = enc._jdf.queryExecution().executedPlan().toString()
     assert "123456789" not in plan
     assert "BroadcastHashJoin" in plan
@@ -123,7 +83,7 @@ def test_pq_broadcast_plan_has_zero_literals_at_production_dials(spark):
     q = corpus.limit(2).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qvec")
     )
-    lut = S._pq_lut(q, books, M, DIM, "query_id", "broadcast")
+    lut = S._pq_lut(q, books, M, DIM, "query_id")
     lplan = lut._jdf.queryExecution().executedPlan().toString()
     assert "123456789" not in lplan and "Python" not in lplan
 
@@ -131,38 +91,15 @@ def test_pq_broadcast_plan_has_zero_literals_at_production_dials(spark):
 # --- IVFADC+R (rerank_k) ------------------------------------------------------
 
 
-def test_ivf_pq_rerank_indexed_matches_in_memory(spark, tmp_path):
-    """The +R stage served from the standing pq=True layout (exact
-    pass reads candidate vectors and STORED norms from the index,
-    pruned to probed cells by the (cent_id, id) join) must be
-    row-identical to the in-memory rerank_k path, and big-enough
-    rerank_k must degenerate to exact L2 top-k restricted to probed
-    cells."""
+def test_ivf_pq_wide_rerank_degenerates_to_exact_l2(spark):
+    """rerank_k >= corpus with every cell probed: the ADC shortlist
+    covers every candidate, so the +R stage must return exact L2 top-k
+    (the exact pass reads candidate vectors and norms from the index)."""
     from hbase_taggregator_spark.operators import similarity as S
 
     emb = _emb(spark)
-    cents = emb.orderBy("vec_id").limit(16).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
-    )
     q = emb.filter(F.col("vec_id") < 5)
-    mem = S.ivf_pq_topk(
-        emb, q, k=5, m=4, n_codes=16, n_centroids=16, n_probe=4,
-        refine_iters=1, rerank_k=20,
-    )
-    assert mem.columns == ["query_id", "vec_id", "d2"]
-    path = str(tmp_path / "ivfpq")
-    S.write_ivf_index(emb, cents, path, pq=True, pq_m=4, pq_codes=16,
-                      pq_refine_iters=1)
-    idx = S.read_ivf_index(spark, path)
-    books = S.read_ivf_codebooks(spark, path)
-    served = S.ivf_pq_topk_indexed(
-        idx, q, cents, books, k=5, m=4, n_probe=4, rerank_k=20
-    )
-    cols = mem.columns
-    assert _rows(served, *cols) == _rows(mem, *cols)
-    # rerank_k >= corpus: the ADC shortlist covers every probed-cell
-    # candidate, so the result is exact L2 top-k over probed cells
-    wide = S.ivf_pq_topk(
+    wide = ivf_pq(
         emb, q, k=5, m=4, n_codes=16, n_centroids=16, n_probe=16,
         refine_iters=0, rerank_k=10_000,
     ).select("query_id", "vec_id")
@@ -176,7 +113,7 @@ def test_ivf_pq_rerank_indexed_matches_in_memory(spark, tmp_path):
 
 
 def test_twolevel_built_index_serves_identical_to_flat(spark, tmp_path):
-    """write_ivf_index(strategy='twolevel') at GUARANTEEING settings
+    """A two-level quantizer's index at GUARANTEEING settings
     (n_super_probe = n_super — every super-cell probed, so the
     candidate set is the full centroid set and the argmin is exact)
     must produce the same (id -> cent_id) assignment as the flat
@@ -191,15 +128,18 @@ def test_twolevel_built_index_serves_identical_to_flat(spark, tmp_path):
     q = emb.filter(F.col("vec_id") < 5)
     flat_path = str(tmp_path / "flat")
     tl_path = str(tmp_path / "tl")
-    S.write_ivf_index(emb, cents, flat_path)
+    quant = S.coarse_quantizer(cents)
+    S.write_ivf_index(emb, quant, flat_path)
     S.write_ivf_index(
-        emb, cents, tl_path, strategy="twolevel", n_super=4, n_super_probe=4
+        emb,
+        S.coarse_quantizer(cents, two_level=True, n_super=4, n_super_probe=4),
+        tl_path,
     )
-    flat = S.read_ivf_index(spark, flat_path)
-    tl = S.read_ivf_index(spark, tl_path)
+    flat, _ = S.read_ivf_index(spark, flat_path)
+    tl, _ = S.read_ivf_index(spark, tl_path)
     assert _rows(tl, "vec_id", "cent_id") == _rows(flat, "vec_id", "cent_id")
-    a = S.ivf_topk_indexed(flat, q, cents, k=5, n_probe=4)
-    b = S.ivf_topk_indexed(tl, q, cents, k=5, n_probe=4)
+    a = S.ivf_search(flat, q, quant, k=5, n_probe=4)
+    b = S.ivf_search(tl, q, quant, k=5, n_probe=4)
     assert _rows(b, *b.columns) == _rows(a, *a.columns)
 
 

@@ -1,21 +1,20 @@
 """Round-14 regression tests (r13 ADVICE guards on the standing-index
 append contract):
 
-- ``_ivf_sidecar_or_none`` maps ONLY the path-not-found condition to
-  'representation absent'; a sidecar that EXISTS but fails to read
+- the index reader maps ONLY an absent sidecar to 'representation
+  absent'; a sidecar that EXISTS but fails to read
   (empty dir from a crashed write, wrong columns) re-raises — a plain
   append against a binary/PQ index whose sidecar is corrupt must NOT
   pass validation and write rows lacking word/code columns.
-- an append with binary/pq=True against a path holding NO index at all
+- a binary/pq append against a path holding NO index at all
   raises the dedicated 'no standing index' error, not the misleading
   representation-mismatch message; a plain append to a fresh path keeps
   working as a first build (parquet append semantics).
 
 Plus the round's residual-IVFADC pins (VERDICT r13 #2): the residual
 flag routes a different encode with the same output contract; the
-cell-mean reference follows the decimal contract; the persisted
-pq_residual=True layout serves row-identical to in-memory (with and
-without rerank) and appends encode against the STORED means/books;
+cell-mean reference follows the decimal contract; appends to the
+persisted residual layout encode against the STORED means/books;
 and the clustered-fixture regime demonstration — residual codes must
 substantially outrank raw codes where the coarse quantizer explains
 the variance (tools/bench_pq_residual_clustered_r14.py at test size).
@@ -28,6 +27,8 @@ import shutil
 
 import pytest
 from pyspark.sql import functions as F
+
+from conftest import ivf_pq
 
 SF = "/root/testdata/sf0.001"
 
@@ -57,14 +58,16 @@ def test_corrupt_sidecar_fails_append_validation(spark, tmp_path):
     a = emb.filter(F.col("vec_id") < 300)
     b = emb.filter(F.col("vec_id") >= 300)
     path = str(tmp_path / "ivf")
-    S.write_ivf_index(a, _cents(emb), path, binary=True)
+    S.write_ivf_index(a, _cents(emb), path, S.Codec("binary"))
     # simulate the crashed sidecar write: directory present, no files
     shutil.rmtree(f"{path}/_thresholds")
     os.makedirs(f"{path}/_thresholds")
     with pytest.raises(AnalysisException):
         S.write_ivf_index(b, _cents(emb), path, mode="append")
     with pytest.raises(AnalysisException):
-        S.write_ivf_index(b, _cents(emb), path, binary=True, mode="append")
+        S.write_ivf_index(
+            b, _cents(emb), path, S.Codec("binary"), mode="append"
+        )
     # a sidecar with the WRONG columns is corruption too, not absence
     spark.range(3).write.mode("overwrite").parquet(f"{path}/_thresholds")
     with pytest.raises(AnalysisException):
@@ -81,15 +84,14 @@ def test_bootstrap_append_raises_dedicated_error(spark, tmp_path):
     emb = _emb(spark)
     b = emb.filter(F.col("vec_id") < 100)
     path = str(tmp_path / "nothing_here")
-    with pytest.raises(ValueError, match="no standing index"):
-        S.write_ivf_index(b, _cents(emb), path, binary=True, mode="append")
-    with pytest.raises(ValueError, match="no standing index"):
-        S.write_ivf_index(b, _cents(emb), path, pq=True, mode="append")
+    for codec in (S.Codec("binary"), S.Codec("pq")):
+        with pytest.raises(ValueError, match="no standing index"):
+            S.write_ivf_index(b, _cents(emb), path, codec, mode="append")
     assert not os.path.exists(path)  # rejected appends write nothing
     # a PLAIN append to a fresh path keeps its parquet first-build
     # semantics (no sidecar contract to violate)
     S.write_ivf_index(b, _cents(emb), path, mode="append")
-    assert S.read_ivf_index(spark, path).count() == b.count()
+    assert S.read_ivf_index(spark, path)[0].count() == b.count()
 
 
 # --- residual IVFADC (r13 VERDICT #2) ----------------------------------------
@@ -105,15 +107,14 @@ def test_ivf_pq_residual_routes_and_schemas(spark):
 
     emb = _emb(spark)
     q = emb.filter(F.col("vec_id") < 5)
-    raw = S.ivf_pq_topk(emb, q, k=5, refine_iters=1)
-    res = S.ivf_pq_topk(emb, q, k=5, refine_iters=1, residual=True)
+    raw = ivf_pq(emb, q, k=5, refine_iters=1)
+    res = ivf_pq(emb, q, k=5, refine_iters=1, residual=True)
     assert raw.columns == res.columns == ["query_id", "vec_id", "adc_dist"]
     rows_raw = sorted((r["query_id"], r["vec_id"]) for r in raw.collect())
     rows_res = sorted((r["query_id"], r["vec_id"]) for r in res.collect())
     assert len(rows_raw) == len(rows_res) == 25
     assert rows_raw != rows_res  # the flag routes a different encode
-    rr = S.ivf_pq_topk(emb, q, k=5, refine_iters=1, residual=True,
-                       rerank_k=10)
+    rr = ivf_pq(emb, q, k=5, refine_iters=1, residual=True, rerank_k=10)
     assert rr.columns == ["query_id", "vec_id", "d2"]
     assert rr.count() == 25
     # the residual reference is the decimal-contract cell mean
@@ -134,50 +135,33 @@ def test_ivf_pq_residual_routes_and_schemas(spark):
     assert abs(got[list(got)[0]][0] - want0) < 1e-9
 
 
-def test_residual_index_roundtrip_pins_in_memory(spark, tmp_path):
-    """The persisted pq_residual=True layout must serve row-identical
-    results to the in-memory residual stack (same corpus/centroids:
-    same assignment, same cell means, same residual books through the
-    parquet round-trip), with and without the +R rerank; appended rows
-    must encode against the STORED means + books (never re-trained on
-    the batch); representation-set mismatches raise."""
+def test_residual_append_encodes_with_stored_means_and_books(spark, tmp_path):
+    """Appended rows of a residual pq index must encode against the
+    STORED means + books (never re-trained on the batch); the sidecars
+    stay untouched; representation mismatches raise before any write."""
     from hbase_taggregator_spark.operators import similarity as S
 
     emb = _emb(spark)
-    q = emb.filter(F.col("vec_id") < 10)
+    quant = S.coarse_quantizer(_cents(emb))
     path = str(tmp_path / "rix")
-    S.write_ivf_index(emb, _cents(emb), path, pq=True, pq_residual=True,
-                      pq_refine_iters=1)
-    idx = S.read_ivf_index(spark, path)
-    books = S.read_ivf_codebooks(spark, path)
-    means = S.read_ivf_cell_means(spark, path)
-
-    def _r(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    served = S.ivf_pq_topk_indexed(idx, q, _cents(emb), books, k=5,
-                                   n_probe=4, residual_means=means)
-    mem = S.ivf_pq_topk(emb, q, k=5, n_probe=4, refine_iters=1,
-                        residual=True)
-    assert _r(served) == _r(mem)
-    sr = S.ivf_pq_topk_indexed(idx, q, _cents(emb), books, k=5, n_probe=4,
-                               residual_means=means, rerank_k=20)
-    mr = S.ivf_pq_topk(emb, q, k=5, n_probe=4, refine_iters=1,
-                       residual=True, rerank_k=20)
-    assert _r(sr) == _r(mr)
-
+    codec = S.write_ivf_index(
+        emb, quant, path, S.Codec("pq", refine_iters=1, residual=True)
+    )
+    _, stored = S.read_ivf_index(spark, path)
     # append: batch codes must be the stored-frame encode, byte-equal
     # to encoding the batch residuals against the STORED means + books
     batch = emb.filter(F.col("vec_id") >= 450)
-    S.write_ivf_index(batch, _cents(emb), path, pq=True, pq_residual=True,
-                      mode="append")
-    idx2 = S.read_ivf_index(spark, path).filter(F.col("vec_id") >= 450)
+    S.write_ivf_index(
+        batch, quant, path, S.Codec("pq", residual=True), mode="append"
+    )
+    idx2, after = S.read_ivf_index(spark, path)
+    idx2 = idx2.filter(F.col("vec_id") >= 450)
     assigned = S.ivf_assign(batch, _cents(emb), n_probe=1)
     want = S.pq_encode(
-        S._ivf_residuals(assigned, means, "embedding").select(
+        S._ivf_residuals(assigned, stored.means, "embedding").select(
             "vec_id", F.col("__rvec").alias("embedding")
         ),
-        books, 4,
+        stored.books, 4,
     )
     cols = ["vec_id"] + [f"code_{s}" for s in range(4)]
     # the batch re-appends ids the build already holds: both copies
@@ -186,18 +170,17 @@ def test_residual_index_roundtrip_pins_in_memory(spark, tmp_path):
     assert len(got_rows) == 100  # 50 originals + 50 appended
     assert sorted(set(got_rows)) == _rows_of(want, *cols)
     # sidecars untouched by the append
-    assert S.read_ivf_codebooks(spark, path) == books
-    assert _rows_of(S.read_ivf_cell_means(spark, path), "cent_id") == \
-        _rows_of(means, "cent_id")
+    assert after.books == stored.books == codec.books
+    assert _rows_of(after.means, "cent_id", "cvec") == \
+        _rows_of(stored.means, "cent_id", "cvec")
 
     # representation mismatches raise before any write
-    n0 = S.read_ivf_index(spark, path).count()
+    n0 = S.read_ivf_index(spark, path)[0].count()
     with pytest.raises(ValueError, match="does not match the standing"):
-        S.write_ivf_index(batch, _cents(emb), path, pq=True, mode="append")
-    with pytest.raises(ValueError, match="pq_residual=True requires"):
-        S.write_ivf_index(batch, _cents(emb), path, pq_residual=True,
-                          mode="append")
-    assert S.read_ivf_index(spark, path).count() == n0
+        S.write_ivf_index(batch, quant, path, S.Codec("pq"), mode="append")
+    with pytest.raises(ValueError, match="requires kind='pq'"):
+        S.Codec(residual=True)
+    assert S.read_ivf_index(spark, path)[0].count() == n0
 
 
 def _rows_of(df, *cols):
@@ -240,8 +223,8 @@ def test_residual_beats_raw_on_clustered_fixture(spark):
 
     kw = dict(k=5, m=4, n_codes=16, n_centroids=16, n_probe=4,
               refine_iters=1)
-    raw = rec(S.ivf_pq_topk(emb, q, **kw))
-    res = rec(S.ivf_pq_topk(emb, q, residual=True, **kw))
+    raw = rec(ivf_pq(emb, q, **kw))
+    res = rec(ivf_pq(emb, q, residual=True, **kw))
     # measured 0.08 / 0.56 on this box; F.sin is java.lang.Math.sin,
     # whose last ulp may differ across JVMs/architectures and flip a
     # near-tie at the rank-5 boundary, so pin the SEPARATION (what the
@@ -275,11 +258,10 @@ def test_residual_append_to_unpopulated_cell_raises(spark, tmp_path):
     )
     assert cell0.count() > 16 and cell1.count() > 0
     path = str(tmp_path / "orphan")
-    S.write_ivf_index(cell0, cents, path, pq=True, pq_residual=True,
-                      pq_refine_iters=0)
-    n0 = S.read_ivf_index(spark, path).count()
+    residual = S.Codec("pq", residual=True)
+    S.write_ivf_index(cell0, cents, path, residual)
+    n0 = S.read_ivf_index(spark, path)[0].count()
     batch = cell1.limit(1)
-    with pytest.raises(ValueError, match="no stored _cell_means entry"):
-        S.write_ivf_index(batch, cents, path, pq=True, pq_residual=True,
-                          mode="append")
-    assert S.read_ivf_index(spark, path).count() == n0  # untouched
+    with pytest.raises(ValueError, match="no residual cell mean"):
+        S.write_ivf_index(batch, cents, path, residual, mode="append")
+    assert S.read_ivf_index(spark, path)[0].count() == n0  # untouched

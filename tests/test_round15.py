@@ -10,14 +10,8 @@ factory is row-identical to its registered query, and each serving
 frame is a REAL distributed plan (exchanges present, zero Python-eval
 nodes — the properties the audit exists to witness).
 
-VERDICT r14 #3 (total residual appends): ``write_ivf_index(mode=
-'append', pq_residual=True, residual_orphans='admit')`` mints the
-orphan cells' residual reference points from the batch itself — the
-means land in the ``_cell_means`` sidecar BEFORE any row write, the
-orphan rows encode against them, and later appends to those cells see
-them as populated. The default policy stays ``'raise'`` (beside
-``test_residual_append_to_unpopulated_cell_raises`` in
-tests/test_round14.py).
+Plus the OPQ rotation pins: orthogonal, deterministic, balanced, and a
+real recall gain over residual-only and raw codes on low-rank data.
 """
 
 from __future__ import annotations
@@ -27,6 +21,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import ivf_pq
 from hbase_taggregator_spark import plans as P
 from hbase_taggregator_spark.queries import PLAN_FRAMES, QUERIES
 
@@ -80,86 +75,6 @@ def test_plan_frame_is_a_real_distributed_plan(spark, name):
         live = PLAN_FRAMES[name](spark, SF, d)
         assert P.count_nodes(live, "Exchange") > 0
         assert P.python_eval_count(live) == 0
-
-
-# --- total residual appends (VERDICT r14 #3) ---------------------------------
-
-
-def _orphan_fixture(spark, tmp_path):
-    """The r14 orphan setup: 2 cells, the build holds only cell 0's
-    members, so every cell-1 batch row is an orphan."""
-    from hbase_taggregator_spark.operators import similarity as S
-
-    emb = _emb(spark)
-    cents = emb.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
-    )
-    assigned = S.ivf_assign(emb, cents, n_probe=1)
-    cell0 = assigned.filter(F.col("cent_id") == 0).select(
-        "vec_id", "embedding"
-    )
-    cell1 = assigned.filter(F.col("cent_id") == 1).select(
-        "vec_id", "embedding"
-    )
-    assert cell0.count() > 16 and cell1.count() >= 2
-    path = str(tmp_path / "orphan_admit")
-    S.write_ivf_index(cell0, cents, path, pq=True, pq_residual=True,
-                      pq_refine_iters=0)
-    return S, emb, cents, cell0, cell1, path
-
-
-def test_residual_orphan_admit_makes_append_total(spark, tmp_path):
-    S, emb, cents, cell0, cell1, path = _orphan_fixture(spark, tmp_path)
-    books = S.read_ivf_codebooks(spark, path)
-    n0 = S.read_ivf_index(spark, path).count()
-    batch = cell1.orderBy("vec_id").limit(2)
-
-    S.write_ivf_index(batch, cents, path, pq=True, pq_residual=True,
-                      mode="append", residual_orphans="admit")
-
-    # every batch row landed (the drop-silently failure class is gone)
-    idx = S.read_ivf_index(spark, path)
-    assert idx.count() == n0 + 2
-    # the minted reference point is the batch's own decimal-contract
-    # Lloyd mean of the orphan cell, now standing in the sidecar
-    means = S.read_ivf_cell_means(spark, path)
-    got = {r["cent_id"]: r["cvec"] for r in means.collect()}
-    assert set(got) == {0, 1}
-    want = {
-        r["cent_id"]: r["cvec"]
-        for r in S._cell_mean_centroids(
-            S.ivf_assign(batch, cents, n_probe=1), "embedding"
-        ).collect()
-    }
-    assert got[1] == pytest.approx(want[1], abs=0.0)
-    # the appended codes encode the batch residuals against the MINTED
-    # mean through the STORED books — the standing-frame contract
-    # extended to first-arrival cells
-    enc_want = _rows(
-        S.pq_encode(
-            S._ivf_residuals(
-                S.ivf_assign(batch, cents, n_probe=1), means, "embedding"
-            ).select("vec_id", F.col("__rvec").alias("embedding")),
-            books, 4,
-        )
-    )
-    cols = ["vec_id"] + [f"code_{s}" for s in range(4)]
-    batch_ids = [r["vec_id"] for r in batch.collect()]
-    enc_got = _rows(
-        idx.filter(F.col("vec_id").isin(batch_ids)).select(*cols)
-    )
-    assert enc_got == enc_want
-    # codebooks untouched — admit mints MEANS, never codebooks
-    assert S.read_ivf_codebooks(spark, path) == books
-
-    # the cell is now populated: a later plain-policy append to it
-    # succeeds and encodes against the SAME minted mean
-    more = cell1.orderBy(F.desc("vec_id")).limit(1)
-    S.write_ivf_index(more, cents, path, pq=True, pq_residual=True,
-                      mode="append")
-    assert S.read_ivf_index(spark, path).count() == n0 + 3
-    assert _rows(S.read_ivf_cell_means(spark, path).select("cent_id")) == \
-        _rows(means.select("cent_id"))
 
 
 # --- OPQ-style rotation (VERDICT r14 #3 follow-on of the r13 stretch) --------
@@ -268,10 +183,9 @@ def test_opq_beats_plain_residual_on_lowrank(spark):
     rot = _opq_rotated_corpus(emb)
     rq = rot.filter(F.col("vec_id") < 10)
     # (a) at the gate's fixed rerank budget, rotation >= residual-only
-    plain = rec(S.ivf_pq_topk(emb, q, residual=True,
-                              rerank_k=OPQ_RERANK_K, **kw))
-    rotated = rec(S.ivf_pq_topk(rot, rq, residual=True,
-                                rerank_k=OPQ_RERANK_K, **kw))
+    plain = rec(ivf_pq(emb, q, residual=True, rerank_k=OPQ_RERANK_K, **kw))
+    rotated = rec(ivf_pq(rot, rq, residual=True, rerank_k=OPQ_RERANK_K,
+                         **kw))
     assert rotated >= plain
     assert rotated >= 0.9  # the gate floor, re-pinned here
 
@@ -327,19 +241,6 @@ def test_opq_raw_separation_at_census_size(spark):
     # energy, and does nothing for raw codes: measured 0.18 -> 0.20)
     rot = S.apply_rotation(emb, S.opq_rotation(emb, m=OPQ_M, dim=64))
     rq = rot.filter(F.col("vec_id") < 10)
-    raw = rec(S.ivf_pq_topk(emb, q, **kw))
-    raw_rot = rec(S.ivf_pq_topk(rot, rq, **kw))
+    raw = rec(ivf_pq(emb, q, **kw))
+    raw_rot = rec(ivf_pq(rot, rq, **kw))
     assert raw <= 0.4 and raw_rot >= raw + 0.2
-
-
-def test_residual_orphans_policy_validated(spark, tmp_path):
-    S, emb, cents, cell0, cell1, path = _orphan_fixture(spark, tmp_path)
-    batch = cell1.limit(1)
-    with pytest.raises(ValueError, match="unknown residual_orphans"):
-        S.write_ivf_index(batch, cents, path, pq=True, pq_residual=True,
-                          mode="append", residual_orphans="sidecar")
-    # default stays 'raise' — and the message now names the opt-in
-    with pytest.raises(ValueError, match="residual_orphans='admit'"):
-        S.write_ivf_index(batch, cents, path, pq=True, pq_residual=True,
-                          mode="append")
-    assert S.read_ivf_index(spark, path).count() == cell0.count()

@@ -1,23 +1,26 @@
 """Round-16 optimization tests: the two-level two-phase double/decimal
 top-k (the r15 deferred design, VERDICT r15 "Next round" #1).
 
-The salted key-only top-k now ranks candidates with a plain-double
-cosine and re-scores only ambiguous rows with the exact-decimal oracle
-algebra. These tests pin the parts the standing reference tests
-(test_round8/9's pure-Python mirrors) cannot reach:
+The salted key-only top-k ranks candidates with a plain-double cosine
+and re-scores only ambiguous rows with the exact-decimal oracle algebra.
+These tests pin the parts the pure-Python mirror tests cannot reach,
+each against the exact reference kept in the tests
+(``conftest.exact_two_level_pairs``: decimal ``dot`` over the candidate
+join, ranked per vector):
 
-- explicit output identity against the all-exact legacy aggregate
-  (``topk_salt=1``) on the real fixture, all n_probe regimes;
+- explicit output identity on the real fixture, all n_probe regimes;
 - the AMBIGUOUS path: duplicated centroid vectors make the top-1 gap
   exactly zero, forcing the decimal fallback, whose cent_id tiebreak
-  must match the legacy exact aggregate;
+  must match the exact ranking;
 - the UNTRUSTED path: a zero-norm corpus vector scores NULL under both
-  algebras and must keep the legacy NULL-negcos-first placement.
+  algebras and must keep the NULL-negcos-first placement.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+
+from conftest import exact_two_level_pairs
 
 SF = "/root/testdata/sf0.001"
 
@@ -40,9 +43,9 @@ def _assign_pairs(df, cents, **kw):
 
 
 def test_two_phase_matches_legacy_exact_all_probe_regimes(spark):
-    """The fast path's output SET must equal the all-exact legacy
-    aggregate's for n_probe 1 (argmin), 2 (salted top-k) and a probe
-    count past the candidate count (membership = everything)."""
+    """The fast path's output SET must equal the all-exact ranking's for
+    n_probe 1 (argmin), 2 (salted top-k) and a probe count past the
+    candidate count (membership = everything)."""
     emb = _toy_vectors(spark, n=60, dim=8)
     cents = emb.filter(F.col("vec_id") < 12).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
@@ -51,10 +54,7 @@ def test_two_phase_matches_legacy_exact_all_probe_regimes(spark):
         fast = _assign_pairs(
             emb, cents, n_super=4, n_super_probe=2, n_probe=n_probe
         )
-        exact = _assign_pairs(
-            emb, cents, n_super=4, n_super_probe=2, n_probe=n_probe,
-            topk_salt=1,
-        )
+        exact = exact_two_level_pairs(emb, cents, 4, 2, n_probe)
         assert fast == exact, f"n_probe={n_probe}"
 
 
@@ -63,7 +63,7 @@ def test_two_phase_tie_forces_decimal_fallback_and_matches(spark):
     winner's fast gap exactly 0 ≤ EPS for every corpus vector whose two
     nearest candidates are the twins — the decisive check must refuse
     the double ranking and the decimal fallback must break the tie by
-    cent_id, exactly like the legacy exact aggregate."""
+    cent_id, exactly like the exact ranking."""
     emb = _toy_vectors(spark, n=30, dim=8)
     base = emb.filter(F.col("vec_id") < 6).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
@@ -77,10 +77,7 @@ def test_two_phase_tie_forces_decimal_fallback_and_matches(spark):
         fast = _assign_pairs(
             emb, cents, n_super=3, n_super_probe=3, n_probe=n_probe
         )
-        exact = _assign_pairs(
-            emb, cents, n_super=3, n_super_probe=3, n_probe=n_probe,
-            topk_salt=1,
-        )
+        exact = exact_two_level_pairs(emb, cents, 3, 3, n_probe)
         assert fast == exact, f"n_probe={n_probe}"
         # the tie really is present: twins share a super cell only when
         # block slicing puts them together, so at least SOME picks must
@@ -91,7 +88,7 @@ def test_two_phase_tie_forces_decimal_fallback_and_matches(spark):
 def test_two_phase_zero_norm_vector_keeps_null_score_semantics(spark):
     """A zero-norm corpus vector's cosine is NULL under both algebras
     (the _nz guard); NULL negcos sorts FIRST in the struct order, so the
-    pick set must match the legacy exact aggregate bit-for-bit."""
+    pick set must match the exact ranking bit-for-bit."""
     rows = [(0, [0.0] * 8)] + [
         (i, [float(((i * 7 + j * 13) % 19) - 9) / 9.0 for j in range(8)])
         for i in range(1, 25)
@@ -104,10 +101,7 @@ def test_two_phase_zero_norm_vector_keeps_null_score_semantics(spark):
         fast = _assign_pairs(
             emb, cents, n_super=4, n_super_probe=4, n_probe=n_probe
         )
-        exact = _assign_pairs(
-            emb, cents, n_super=4, n_super_probe=4, n_probe=n_probe,
-            topk_salt=1,
-        )
+        exact = exact_two_level_pairs(emb, cents, 4, 4, n_probe)
         assert fast == exact, f"n_probe={n_probe}"
         assert any(v == 0 for (v, _) in fast), (
             "the zero-norm vector must still be assigned (NULL-first)"

@@ -302,25 +302,19 @@ def test_continuous_rollup_matches_direct(spark):
         continuous_rollup(events, T0, T_WEEK, 3600, 4000)
 
 
-def test_pq_encode_is_map_side(spark):
-    """The INLINE strategy, like ivf_assign, is a pure projection —
-    zero Exchange in the plan. Since r14, auto routes the default
-    dials (1024 codebook floats > PQ_INLINE_MAX_LITERALS=512) to the
-    BROADCAST strategy, whose contract is exactly ONE shuffle Exchange
-    (the partial-agg argmin, one row per input row) plus the codebook
+def test_pq_encode_is_one_partial_aggregation(spark):
+    """The encode's contract: exactly ONE shuffle Exchange (the
+    partial-agg argmin, one row per input row) plus the codebook
     BroadcastExchange — and zero codeword literals."""
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     books = S.pq_codebooks(emb, m=4, k=16)
-    codes = S.pq_encode(emb, books, m=4, pq_strategy="inline")
-    assert P.count_nodes(codes, "Exchange") == 0
-    bcodes = S.pq_encode(emb, books, m=4)  # auto -> broadcast since r14
-    plan = P.physical_plan(bcodes)
+    codes = S.pq_encode(emb, books, m=4)
+    plan = P.physical_plan(codes)
     assert plan.count("BroadcastExchange") == 1
     assert plan.count("Exchange") - plan.count("BroadcastExchange") == 1
-    for frame in (codes, bcodes):
-        row = frame.orderBy("vec_id").first()
-        # a codebook vector is its own nearest codeword in every subspace
-        assert [row[f"code_{s}"] for s in range(4)] == [row["vec_id"]] * 4
+    row = codes.orderBy("vec_id").first()
+    # a codebook vector is its own nearest codeword in every subspace
+    assert [row[f"code_{s}"] for s in range(4)] == [row["vec_id"]] * 4
 
 
 def test_pq_adc_reasonable_recall(spark):

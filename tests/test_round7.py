@@ -9,6 +9,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import ivf_assign_as
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -80,17 +82,13 @@ def _toy_vectors(spark, n=40, dim=8):
 
 @pytest.mark.parametrize("n_probe", [1, 2])
 def test_ivf_assign_expr_and_arrow_identical(spark, n_probe):
-    from hbase_taggregator_spark.operators.similarity import ivf_assign
-
     emb = _toy_vectors(spark)
     cents = emb.filter(F.col("vec_id") < 6).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
     )
     out = {}
     for strategy in ("expr", "arrow"):
-        rows = ivf_assign(
-            emb, cents, n_probe=n_probe, strategy=strategy
-        ).collect()
+        rows = ivf_assign_as(strategy, emb, cents, n_probe=n_probe).collect()
         out[strategy] = sorted((r["vec_id"], r["cent_id"]) for r in rows)
         assert len(rows) == 40 * n_probe
     assert out["expr"] == out["arrow"]
@@ -100,8 +98,6 @@ def test_ivf_assign_tie_falls_back_to_exact_on_both_strategies(spark):
     """Two byte-identical centroids under different ids give every row a
     zero fast-ranking gap — both strategies must route through the exact
     fallback and deterministically pick the LOWER centroid id."""
-    from hbase_taggregator_spark.operators.similarity import ivf_assign
-
     emb = _toy_vectors(spark, n=10)
     base = emb.filter(F.col("vec_id") == 3).select("embedding").collect()[0][0]
     cents = spark.createDataFrame(
@@ -109,7 +105,7 @@ def test_ivf_assign_tie_falls_back_to_exact_on_both_strategies(spark):
         "cent_id long, cvec array<float>",
     )
     for strategy in ("expr", "arrow"):
-        rows = ivf_assign(emb, cents, n_probe=1, strategy=strategy).collect()
+        rows = ivf_assign_as(strategy, emb, cents, n_probe=1).collect()
         assert {r["cent_id"] for r in rows} == {7}, strategy
 
 
@@ -130,8 +126,6 @@ def test_ivf_assign_auto_threshold_picks_expr_for_small_sets(spark):
         .toString()
     )
     assert "MapInPandas" not in plan and "Python" not in plan
-    with pytest.raises(ValueError):
-        ivf_assign(emb, cents, strategy="numpy")
 
 
 def test_ivf_assign_arrow_handles_null_vectors(spark):
@@ -143,8 +137,6 @@ def test_ivf_assign_arrow_handles_null_vectors(spark):
     from pyspark.sql.types import (
         ArrayType, FloatType, LongType, StructField, StructType,
     )
-
-    from hbase_taggregator_spark.operators.similarity import ivf_assign
 
     schema = StructType(
         [
@@ -159,7 +151,7 @@ def test_ivf_assign_arrow_handles_null_vectors(spark):
         [(10, [1.0, 0.1]), (20, [0.1, 1.0])], "cent_id long, cvec array<float>"
     )
     for strategy in ("expr", "arrow"):
-        rows = ivf_assign(emb, cents, n_probe=1, strategy=strategy).collect()
+        rows = ivf_assign_as(strategy, emb, cents, n_probe=1).collect()
         assert sorted((r["vec_id"], r["cent_id"]) for r in rows) == [
             (1, 10),
             (2, 10),
@@ -175,8 +167,6 @@ def test_ivf_assign_arrow_handles_ragged_vectors(spark):
     from pyspark.sql.types import (
         ArrayType, FloatType, LongType, StructField, StructType,
     )
-
-    from hbase_taggregator_spark.operators.similarity import ivf_assign
 
     schema = StructType(
         [
@@ -198,7 +188,7 @@ def test_ivf_assign_arrow_handles_ragged_vectors(spark):
     )
     out = {}
     for strategy in ("expr", "arrow"):
-        rows = ivf_assign(emb, cents, n_probe=1, strategy=strategy).collect()
+        rows = ivf_assign_as(strategy, emb, cents, n_probe=1).collect()
         out[strategy] = sorted((r["vec_id"], r["cent_id"]) for r in rows)
         assert len(rows) == 4, strategy
         assert dict(out[strategy])[1] == 10 and dict(out[strategy])[4] == 20

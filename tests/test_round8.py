@@ -12,6 +12,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import ivf_assign_as
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -48,7 +50,7 @@ def test_ivf_assign_arrow_ships_centroids_via_broadcast(spark, monkeypatch):
     cents = emb.filter(F.col("vec_id") < 6).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
     )
-    rows = S.ivf_assign(emb, cents, n_probe=1, strategy="arrow").collect()
+    rows = ivf_assign_as("arrow", emb, cents, n_probe=1).collect()
     assert len(rows) == 40
     payloads = [
         v for v in calls
@@ -101,7 +103,7 @@ def test_ivf_assign_arrow_full_batch_fallback_warns(spark):
         [(10, [1.0, 0.0]), (20, [0.0, 1.0])],  # dim 2
         "cent_id long, cvec array<double>",
     )
-    rows = S.ivf_assign(corpus, cents, strategy="arrow").collect()
+    rows = ivf_assign_as("arrow", corpus, cents).collect()
     # every row falls back; all-null negcos orders by position -> first id
     assert sorted((r["vec_id"], r["cent_id"]) for r in rows) == [
         (i, 10) for i in range(5)
@@ -336,7 +338,7 @@ def test_two_level_matches_python_reference(spark):
 def test_kmeans_refine_twolevel_passthrough_keeps_centroids_distributed(
     spark, monkeypatch
 ):
-    """kmeans_refine(strategy="twolevel") must run Lloyd with NO driver
+    """kmeans_refine(two_level=True) must run Lloyd with NO driver
     round-trip of the centroid set: nothing centroid-shaped may cross
     SparkContext.broadcast, and the refined output must still be a valid
     (cent_id, cvec) frame."""
@@ -357,7 +359,7 @@ def test_kmeans_refine_twolevel_passthrough_keeps_centroids_distributed(
     init = emb.filter(F.col("vec_id") < 32).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
     )
-    refined = S.kmeans_refine(emb, init, n_iter=1, strategy="twolevel")
+    refined = S.kmeans_refine(emb, init, n_iter=1, two_level=True)
     rows = refined.collect()
     assert 0 < len(rows) <= 32
     assert all(len(r["cvec"]) == 64 for r in rows)
@@ -410,7 +412,7 @@ def test_zero_norm_vectors_assign_and_dedup_without_raising(spark):
     for strategy in ("expr", "arrow"):
         got = dict(
             (r["vec_id"], r["cent_id"])
-            for r in S.ivf_assign(emb, cents, strategy=strategy).collect()
+            for r in ivf_assign_as(strategy, emb, cents).collect()
         )
         assert got[2] == 10, strategy  # null scores -> lowest position
         assert got[1] == 10 and got[3] == 20, strategy
@@ -476,7 +478,7 @@ def test_embedding_covariance_excludes_ragged_and_null(spark):
 
 
 def test_semdedup_twolevel_passthrough(spark):
-    """semdedup(assign_strategy='twolevel') must run the full drop
+    """semdedup over a two-level quantizer must run the full drop
     pipeline on the approximate assignment — same output CONTRACT
     (survivor ids + their cells), cells from the two-level quantizer."""
     from hbase_taggregator_spark.operators import similarity as S
@@ -485,7 +487,9 @@ def test_semdedup_twolevel_passthrough(spark):
     cents = emb.filter(F.col("vec_id") < 32).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
     )
-    out = S.semdedup(emb, cents, threshold=0.42, assign_strategy="twolevel")
+    out = S.semdedup(
+        emb, S.coarse_quantizer(cents, two_level=True), threshold=0.42
+    )
     rows = out.collect()
     assert 0 < len(rows) <= emb.count()
     assert set(out.columns) == {"vec_id", "cent_id"}
@@ -558,8 +562,6 @@ if _HYP:
         float32 vectors (including duplicate centroids when hypothesis
         generates repeats — forced ambiguity), expr and arrow must
         return IDENTICAL assignments."""
-        from hbase_taggregator_spark.operators.similarity import ivf_assign
-
         # no anchoring: all-zero vectors are fair game — the _nz guard
         # gives them NULL scores and both strategies must place them
         # identically (lowest-position centroid)
@@ -574,9 +576,7 @@ if _HYP:
         for strategy in ("expr", "arrow"):
             out[strategy] = sorted(
                 (r["vec_id"], r["cent_id"])
-                for r in ivf_assign(
-                    emb, cents, n_probe=1, strategy=strategy
-                ).collect()
+                for r in ivf_assign_as(strategy, emb, cents, n_probe=1).collect()
             )
         assert out["expr"] == out["arrow"]
 

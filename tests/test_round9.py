@@ -26,6 +26,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import ivf_assign_as
 from hbase_taggregator_spark import plans as P
 
 SF = "/root/testdata/sf0.001"
@@ -163,7 +164,7 @@ def test_two_level_full_probe_topk_equals_flat_assignment(spark):
     )
     flat = sorted(
         (r["vec_id"], r["cent_id"])
-        for r in S.ivf_assign(emb, cents, n_probe=3, strategy="expr").collect()
+        for r in ivf_assign_as("expr", emb, cents, n_probe=3).collect()
     )
     assert two == flat and len(two) == 50 * 3
 
@@ -175,7 +176,9 @@ def test_ivf_assign_twolevel_passthrough_accepts_n_probe(spark):
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
     )
-    out = S.ivf_assign(emb, cents, n_probe=2, strategy="twolevel")
+    out = S.ivf_assign(
+        emb, S.coarse_quantizer(cents, two_level=True), n_probe=2
+    )
     counts = [r["n"] for r in out.groupBy("vec_id").agg(
         F.count(F.lit(1)).alias("n")).collect()]
     assert counts and all(c <= 2 for c in counts)
@@ -227,7 +230,7 @@ def test_two_level_bucketed_corpus_joins_without_corpus_exchange(spark):
 
 
 def test_arrow_assign_preserves_cent_id_type(spark):
-    """strategy='auto' crossing ARROW_ASSIGN_MIN_NLIST must not change
+    """Crossing ARROW_ASSIGN_MIN_NLIST must not change
     the output schema: an int cent_id stays int (r8 hardcoded int64 →
     silent widening), and non-integral cent_ids work on the arrow path
     exactly as they do on expr."""
@@ -239,7 +242,7 @@ def test_arrow_assign_preserves_cent_id_type(spark):
         F.col("embedding").alias("cvec"),
     )
     for strat in ("expr", "arrow"):
-        out = S.ivf_assign(emb, cents_int, n_probe=1, strategy=strat)
+        out = ivf_assign_as(strat, emb, cents_int, n_probe=1)
         assert dict(out.dtypes)["cent_id"] == "int", (strat, out.dtypes)
 
     cents_str = emb.filter(F.col("vec_id") < 6).select(
@@ -248,15 +251,11 @@ def test_arrow_assign_preserves_cent_id_type(spark):
     )
     got = {
         (r["vec_id"], r["cent_id"])
-        for r in S.ivf_assign(
-            emb, cents_str, n_probe=1, strategy="arrow"
-        ).collect()
+        for r in ivf_assign_as("arrow", emb, cents_str, n_probe=1).collect()
     }
     want = {
         (r["vec_id"], r["cent_id"])
-        for r in S.ivf_assign(
-            emb, cents_str, n_probe=1, strategy="expr"
-        ).collect()
+        for r in ivf_assign_as("expr", emb, cents_str, n_probe=1).collect()
     }
     assert got == want and all(
         isinstance(c, str) and c.startswith("c") for _, c in got
@@ -273,8 +272,8 @@ def test_arrow_expr_agree_across_auto_threshold(spark):
     cents = emb.filter(F.col("vec_id") < 12).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
     )
-    a = S.ivf_assign(emb, cents, n_probe=2, strategy="arrow")
-    e = S.ivf_assign(emb, cents, n_probe=2, strategy="expr")
+    a = ivf_assign_as("arrow", emb, cents, n_probe=2)
+    e = ivf_assign_as("expr", emb, cents, n_probe=2)
     # dtypes (names + types) must agree; nullability legitimately differs
     # (explode of a UDF-produced array vs element_at of a literal)
     assert a.dtypes == e.dtypes
@@ -513,7 +512,7 @@ def test_kmeans_refine_threads_twolevel_sizing(spark, monkeypatch):
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
     )
     out = S.kmeans_refine(
-        emb, init, n_iter=1, strategy="twolevel", n_super=3, n_super_probe=2
+        emb, init, n_iter=1, two_level=True, n_super=3, n_super_probe=2
     )
     assert out.count() > 0
     assert seen["n_super"] == 3 and seen["n_super_probe"] == 2

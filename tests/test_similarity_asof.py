@@ -58,13 +58,15 @@ def test_ivf_scores_match_bruteforce_where_returned(spark, vecs):
     equal brute force; probing every list recovers brute force exactly."""
     brute = {(r["query_id"], r["vec_id"]): r["cosine"]
              for r in S.cosine_topk(vecs, vecs, k=4).collect()}
-    ivf = S.ivf_topk(vecs, vecs, k=4, n_centroids=3, n_probe=2).collect()
+    quant = S.coarse_quantizer(S.seed_centroids(vecs, 3))
+    index, _ = S.build_ivf_index(vecs, quant)
+    ivf = S.ivf_search(index, vecs, quant, k=4, n_probe=2).collect()
     assert len(ivf) > 0
     for r in ivf:
         assert r["cosine"] == pytest.approx(brute[(r["query_id"], r["vec_id"])], abs=1e-12)
     # n_probe = n_centroids → every inverted list probed → exact result
     full = {(r["query_id"], r["vec_id"]): r["cosine"]
-            for r in S.ivf_topk(vecs, vecs, k=4, n_centroids=3, n_probe=3).collect()}
+            for r in S.ivf_search(index, vecs, quant, k=4, n_probe=3).collect()}
     assert full == brute
 
 
@@ -77,30 +79,6 @@ def test_lsh_neardup_is_exact_within_buckets(spark, vecs):
     for r in approx:
         assert r["cosine"] == pytest.approx(exact[(r["id_a"], r["id_b"])], abs=1e-12)
     assert {(r["id_a"], r["id_b"]) for r in approx} <= set(exact)
-
-
-def test_multiprobe_recall_superset(spark, vecs):
-    """Multi-probe LSH probes Hamming-1 neighbor buckets: its result set
-    contains the single-probe results and can only add pairs (recall is
-    monotone in probes); scores stay exact."""
-    single = {(r["query_id"], r["vec_id"])
-              for r in S.ann_lsh_topk(vecs, vecs, k=4, n_planes=4, dim=3).collect()}
-    multi_rows = S.ann_lsh_topk(
-        vecs, vecs, k=4, n_planes=4, dim=3, multi_probe=4
-    ).collect()
-    multi = {(r["query_id"], r["vec_id"]) for r in multi_rows}
-    # top-k can push out lower-scored single-probe hits only when new,
-    # better candidates appear — per-query hit counts never decrease
-    from collections import Counter
-
-    per_q_single = Counter(q for q, _ in single)
-    per_q_multi = Counter(q for q, _ in multi)
-    for q in per_q_single:
-        assert per_q_multi[q] >= per_q_single[q]
-    brute = {(r["query_id"], r["vec_id"]): r["cosine"]
-             for r in S.cosine_topk(vecs, vecs, k=4).collect()}
-    for r in multi_rows:
-        assert r["cosine"] == pytest.approx(brute[(r["query_id"], r["vec_id"])], abs=1e-12)
 
 
 # ---------------------------------------------------------------------------
