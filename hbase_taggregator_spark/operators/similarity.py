@@ -27,6 +27,7 @@ from __future__ import annotations
 from dataclasses import dataclass, replace
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import types as T
 
 from hbase_taggregator_spark.operators.relational import top_k_per_group
 from hbase_taggregator_spark.util import ensure_parallelism, local_df
@@ -3436,18 +3437,21 @@ def _materialize_means_and_residual_books(
     Returns ``(mean_df, books)`` — the :func:`_materialize_cell_means`
     frame and the :func:`pq_codebooks`-format init list."""
     spark = assigned.sparkSession
-    # the fused collect keys rows by a long cast of id/cent_id; a
-    # non-integral id column would silently NULL under the cast (and
-    # corrupt the init-code ids) where pq_codebooks kept the raw value
-    # (r15 ADVICE) — validate up front with a clear error instead
+    # the fused collect keys rows by a long cast of id/cent_id; a column
+    # whose cast is not exact would silently NULL or truncate (and corrupt
+    # the init-code ids) where pq_codebooks kept the raw value — accept
+    # integers and decimal(p≤18, 0), reject the rest with a clear error
     for col_name in (id_col, "cent_id"):
-        t = assigned.schema[col_name].dataType.simpleString()
-        if t not in ("tinyint", "smallint", "int", "bigint"):
+        t = assigned.schema[col_name].dataType
+        if not (
+            isinstance(t, T.IntegralType)
+            or (isinstance(t, T.DecimalType) and t.scale == 0 and t.precision <= 18)
+        ):
             raise ValueError(
                 f"residual codebook init requires an integral {col_name!r} "
-                f"column (got {t}): the fused means+sample collect keys "
-                "rows by a long cast, which would silently NULL "
-                "non-integral ids"
+                f"column (got {t.simpleString()}): the fused means+sample "
+                "collect keys rows by a long cast, which would silently "
+                "NULL or truncate other ids"
             )
     tagged_means = _cell_mean_centroids(assigned, vec_col).select(
         F.lit(0).alias("__tag"),

@@ -20,6 +20,15 @@ coprocessor pipeline (/root/reference):
 - sorted ``{bucket_start_ms → value}`` result at the API edge, mirroring the
   client's ``ConcurrentSkipListMap`` (``TimeseriesAggregationClient.java:130``).
 
+Row order: like a SQL ``GROUP BY``, the bucketed frames — the verbs,
+:meth:`TimeseriesQuery.aggregate`, :func:`merge_rollups`,
+:func:`read_rollup`, :func:`continuous_rollup` and :func:`fill_gaps` —
+promise no row order. The one sorted edge is :meth:`TimeseriesQuery.to_map`,
+which sorts the collected buckets on the driver; a caller who needs ordered
+rows adds ``.orderBy("bucket_start_us", *dims)``. A distributed sort of a
+result of a few thousand rows would cost a range-partition sampling job and
+a sort stage per query.
+
 Physical shape (why this scales): bucket assignment is integer arithmetic on
 epoch-micros — a codegen'd projection, O(1) per row (the reference probes a
 bucket list linearly per cell, ``Max.java:26-28``). The groupBy compiles to
@@ -231,7 +240,7 @@ class TimeseriesQuery:
         extension point for aggregates beyond the reference's five verbs
         (decimal-exact sums, percentiles, sketches…). Same single-pass
         partial/final physical shape: filter → project bucket → groupBy →
-        agg → orderBy."""
+        agg; rows unordered (module docstring)."""
         self._check_range_only()
         return (
             self._rows()
@@ -239,7 +248,6 @@ class TimeseriesQuery:
             .groupBy("bucket_start_us", *self.dims)
             .agg(*agg_cols)
             .withColumn("bucket_start", F.timestamp_micros(F.col("bucket_start_us")))
-            .orderBy("bucket_start_us", *self.dims)
         )
 
     def agg(self, **aliases: str) -> DataFrame:
@@ -285,7 +293,8 @@ def fill_gaps(
 
     The sequence is generated JVM-side (one row, exploded) and the join key
     is the bucket integer — broadcast-sized for any sane bucket count
-    (a year of 15-min buckets is 35k rows)."""
+    (a year of 15-min buckets is 35k rows). Rows unordered (module
+    docstring)."""
     spark = agg_df.sparkSession
     n = (upper_us - t_min_us - 1) // interval_us
     full = spark.range(1).select(
@@ -300,9 +309,7 @@ def fill_gaps(
     out = F.broadcast(full).join(agg_df.drop("bucket_start"), "bucket_start_us", "left")
     for col, v in (fill or {}).items():
         out = out.withColumn(col, F.coalesce(F.col(col), F.lit(v)))
-    return out.withColumn(
-        "bucket_start", F.timestamp_micros(F.col("bucket_start_us"))
-    ).orderBy("bucket_start_us")
+    return out.withColumn("bucket_start", F.timestamp_micros(F.col("bucket_start_us")))
 
 
 class TimeseriesAggregator:
@@ -313,7 +320,7 @@ class TimeseriesAggregator:
     >>> tsa = TimeseriesAggregator(spark)
     >>> q = (tsa.table(events_df).range('2024-01-01', '2024-01-02')
     ...        .interval(900))
-    >>> q.max().show()            # DataFrame of {bucket_start, max}
+    >>> q.max().show()            # DataFrame of {bucket_start, max}, unordered
     >>> q.to_map(q.max())         # {bucket_start_ms: value} sorted dict
     """
 
@@ -419,7 +426,7 @@ def read_rollup(rollup: DataFrame, t_min: Any, interval_s: int) -> DataFrame:
     ``TimeseriesAggregationClient.java:547-557``). ``interval_s`` must be a
     multiple of the rollup's interval, on the grid started at ``t_min``.
     Returns {bucket_start_us, max_value, min_value, sum_value, count_value,
-    avg_value}."""
+    avg_value}, rows unordered (module docstring)."""
     regridded = rollup.select(
         _bucket_start(
             "bucket_start_us", to_epoch_us(t_min), interval_s * US_PER_SECOND
@@ -791,21 +798,18 @@ def merge_rollups(rollups: list[DataFrame]) -> DataFrame:
     and a common bucket grid (t_min values congruent modulo the interval);
     decimal re-summation keeps the merged state bit-identical to a
     from-scratch rollup. Shuffle: one partial/final aggregation over
-    bucket-count rows — independent of raw data size."""
+    bucket-count rows — independent of raw data size; rows unordered
+    (module docstring)."""
     if not rollups:
         raise ValueError("merge_rollups needs at least one rollup")
     merged = rollups[0]
     for r in rollups[1:]:
         merged = merged.unionByName(r)
-    return (
-        merged.groupBy("bucket_start_us")
-        .agg(
-            F.max("max_value").alias("max_value"),
-            F.min("min_value").alias("min_value"),
-            F.sum("sum_dec").alias("sum_dec"),
-            F.sum("count_value").alias("count_value"),
-        )
-        .orderBy("bucket_start_us")
+    return merged.groupBy("bucket_start_us").agg(
+        F.max("max_value").alias("max_value"),
+        F.min("min_value").alias("min_value"),
+        F.sum("sum_dec").alias("sum_dec"),
+        F.sum("count_value").alias("count_value"),
     )
 
 

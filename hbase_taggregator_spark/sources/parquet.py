@@ -16,11 +16,23 @@ read as raw int64 (``spark.sql.legacy.parquet.nanosAsLong``) and widened here;
 a filter on the *widened* column cannot push down, so :func:`load_table`
 accepts an optional time range and applies it to the raw storage column
 *before* conversion — that predicate reaches the scan.
+
+Schema memo: without a schema, ``spark.read.parquet`` runs a one-task Spark
+job to infer one from the files' footers — on every load. :func:`load_table`
+remembers each table's inferred schema, keyed by the table path, together
+with the fingerprint it was inferred under: every file below the path
+(relative name, size, ``st_mtime_ns``) plus the session's values of the
+parquet inference confs (:data:`_INFERENCE_CONFS`). A repeat load whose
+fingerprint matches passes the schema to ``spark.read.schema(…)`` and runs
+no job; any other load infers as before and stores the result. The schema
+is a property of the files, so the memo is shared by every session in the
+process.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -40,6 +52,55 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+#: Session confs that change the schema Spark infers from the same files.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+#: path → (fingerprint, schema), each entry replaced whole under the lock,
+#: so a hit never pairs one fingerprint with another's schema. Two loads
+#: racing on a miss may both infer; the last store wins.
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _fingerprint(spark: SparkSession, path: str) -> tuple | None:
+    """The files below ``path`` and the inference confs; ``None`` when the
+    listing finds no file (Spark then raises on its own, as without memo)."""
+    if os.path.isfile(path):
+        paths = [path]
+    else:
+        paths = [os.path.join(d, n) for d, _, names in os.walk(path) for n in names]
+    files = []
+    for p in paths:
+        try:
+            st = os.stat(p)
+        except FileNotFoundError:  # removed by a concurrent rewrite
+            continue
+        files.append((os.path.relpath(p, path), st.st_size, st.st_mtime_ns))
+    if not files:
+        return None
+    confs = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+    return tuple(sorted(files)), confs
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, skipping schema inference when the
+    files and confs are those of the last inference (module docstring).
+    The fingerprint is taken before inferring, so files that change during
+    the inference leave an entry the next load misses, never a stale hit."""
+    fp = _fingerprint(spark, path)
+    with _SCHEMAS_LOCK:
+        hit = _SCHEMAS.get(path)
+    if fp is not None and hit is not None and hit[0] == fp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if fp is not None:
+        with _SCHEMAS_LOCK:
+            _SCHEMAS[path] = (fp, df.schema)
+    return df
 
 
 def _normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
@@ -79,7 +140,7 @@ def load_table(
     """
     configure(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     if name == "events":
         if time_range is not None and isinstance(df.schema["ts"].dataType, T.LongType):
             lo_ns, hi_ns = time_range[0] * 1000, time_range[1] * 1000

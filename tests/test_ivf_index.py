@@ -113,6 +113,27 @@ def test_residual_codec_requires_exactly_its_means(spark):
         S.Codec("binary", residual=True)
 
 
+def test_residual_build_accepts_ids_with_an_exact_long_cast(spark):
+    """Residual training keys its fused means+sample collect by a long cast
+    of the id: a decimal(10,0) id trains the same codec and codes as the
+    bigint id, and ids whose cast could NULL or truncate are refused."""
+    from hbase_taggregator_spark.operators import similarity as S
+
+    emb = _emb(spark)
+    quant = S.coarse_quantizer(S.seed_centroids(emb, 16))
+    spec = S.Codec("pq", refine_iters=1, residual=True)
+    want_index, want = S.build_ivf_index(emb, quant, spec)
+    dec = emb.withColumn("vec_id", F.col("vec_id").cast("decimal(10,0)"))
+    index, got = S.build_ivf_index(dec, quant, spec)
+    assert got.books == want.books
+    as_long = index.withColumn("vec_id", F.col("vec_id").cast("long"))
+    assert _rows(as_long) == _rows(want_index)
+    for bad in ("decimal(19,0)", "decimal(10,2)", "double", "string"):
+        ids = emb.withColumn("vec_id", F.col("vec_id").cast(bad))
+        with pytest.raises(ValueError, match="requires an integral 'vec_id'"):
+            S.build_ivf_index(ids, quant, spec)
+
+
 def test_two_level_dials_must_equal_the_quantizers(spark):
     """A two-level quantizer built with n_super=10 must not pass silently
     when n_super=20 is requested (a smaller super set probes fewer cells

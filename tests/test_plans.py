@@ -3,6 +3,9 @@ asserted on real physical plans at sf0.001 (plan shape is sf-independent)."""
 
 from __future__ import annotations
 
+import re
+import uuid
+
 import pytest
 
 from hbase_taggregator_spark import plans as P
@@ -155,3 +158,77 @@ def test_profile_is_single_scan(q):
     """One scan feeds every per-column aggregate (no per-column rescans)."""
     df = q("profile_documents_columns")
     assert len(P.scan_schemas(df)) == 1
+
+
+# -- the per-query job floor ---------------------------------------------------
+
+
+def _bucketed_frames(spark):
+    """Every bucketed-core frame shape: the verbs, ``agg``, grouped ``agg``,
+    the rollup merge and read-back, and the gap fill."""
+    from hbase_taggregator_spark import TimeseriesAggregator
+    from hbase_taggregator_spark.operators.timeseries import (
+        continuous_rollup,
+        fill_gaps,
+        merge_rollups,
+        read_rollup,
+    )
+    from hbase_taggregator_spark.queries import T0, T_WEEK, US
+    from hbase_taggregator_spark.sources.parquet import load_table
+
+    events = load_table(spark, SF, "events")
+    q = TimeseriesAggregator(spark).table(events).range(T0, T_WEEK).interval(3600)
+    fine, _ = continuous_rollup(events, T0, T_WEEK, 3600, 3600)
+    return {
+        "max": q.max(),
+        "agg": q.agg(max="mx", avg="av", count="ct"),
+        "grouped agg": q.group_by("event_type").agg(max="mx", sum="sm"),
+        "merge_rollups": merge_rollups([fine, fine]),
+        "read_rollup": read_rollup(fine, T0, 86400),
+        "fill_gaps": fill_gaps(q.max(), T0 * US, T_WEEK * US, 3600 * US),
+    }
+
+
+def test_bucketed_frames_have_no_global_sort(spark):
+    """The bucketed core promises no row order (``to_map`` is the sorted
+    edge), so no plan pays a range-partition sampling job and sort stage."""
+    for name, df in _bucketed_frames(spark).items():
+        plan = P.physical_plan(df)
+        assert "Exchange rangepartitioning" not in plan, f"{name}:\n{plan}"
+        assert not re.search(r"Sort \[[^\]]*\], true", plan), f"{name}:\n{plan}"
+
+
+def _jobs_run(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` runs on the calling thread."""
+    sc = spark.sparkContext
+    group = f"job-floor-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    # job starts reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_load_and_query_job_floor(spark):
+    """A repeat ``load_table`` of an unchanged table infers no schema (0 jobs),
+    and a warm one-verb query collected by ``to_map`` runs the scan +
+    partial-aggregate job and the final-aggregate job, nothing else."""
+    from hbase_taggregator_spark import TimeseriesAggregator
+    from hbase_taggregator_spark.queries import T0
+    from hbase_taggregator_spark.sources.parquet import load_table
+
+    load_table(spark, SF, "events")
+    assert _jobs_run(spark, lambda: load_table(spark, SF, "events")) == 0
+
+    def query():
+        events = load_table(spark, SF, "events")
+        q = TimeseriesAggregator(spark).table(events).range(T0, T0 + 86400)
+        q = q.interval(900)
+        assert q.to_map(q.max())
+
+    assert _jobs_run(spark, query) <= 2
