@@ -1,5 +1,5 @@
-"""Embedding similarity search: brute-force cosine top-k and LSH-bucketed
-approximate variants over an `array<float>` column.
+"""Embedding similarity search over an `array<float>` column: exact
+cosine / L2 top-k and the compressed-index paths that scale it.
 
 Physical design for 100 TB of embeddings:
 
@@ -9,10 +9,19 @@ Physical design for 100 TB of embeddings:
   corpus), then `row_number` per query over (similarity, id) to keep k.
   The only shuffle carries Q×k candidate rows… per partition, coalesced by
   the window — still corpus-size-independent.
-- **random-hyperplane LSH** (the scale path): 16 fixed md5-derived
-  hyperplanes → 16-bit bucket; queries probe only their bucket (and
-  optionally neighboring buckets). Bucketing is a map-side projection; the
-  probe is an equi-join on the bucket key.
+- **the IVF index** (the scale path): a coarse quantizer assigns every
+  vector to a cell and a :class:`Codec` encodes it — flat, binary
+  (packed sign/mean bits, Hamming first pass) or PQ (codes, asymmetric
+  distance first pass). :func:`build_ivf_index` + :func:`ivf_search`
+  serve it in memory, :func:`write_ivf_index` / :func:`read_ivf_index`
+  persist it with the trained codec in sidecars; queries probe their
+  nearest cells and re-rank a bounded shortlist exactly. The binary
+  codec also drives the Hamming family without cells — the top-k scan,
+  the banded radius join, dedup and the standing band index's
+  admission — over the same codebook and sidecars.
+- **random-hyperplane LSH**: fixed md5-derived hyperplanes → a bucket
+  key; queries probe only their bucket. Bucketing is a map-side
+  projection; the probe is an equi-join on the bucket key.
 
 Dot products accumulate per-element products cast to DECIMAL(18,12) so the
 result is accumulation-order-free — bit-identical across engines (used by
@@ -126,6 +135,64 @@ def with_norm(df: DataFrame, vec_col: str = "embedding", out_col: str = "nrm") -
     return df.withColumn(out_col, norm(F.col(vec_col)))
 
 
+def _valid_vectors(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
+    """Rows whose vector is non-NULL, exactly ``dim`` long and free of
+    NULL elements — the one drop rule of every operator reading
+    components by position (:func:`random_projection`, the binary
+    codes and their mean thresholds). Spark's decimal sum NULL-poisons
+    where SQL SUM skips a NULL element and a NULL element's CASE bit
+    reads 0, so both engines drop such rows (the oracle via
+    ``list_filter``)."""
+    e = F.col(vec_col)
+    return df.filter(
+        e.isNotNull()
+        & (F.size(e) == dim)
+        & (F.size(F.filter(e, lambda x: x.isNull())) == 0)
+    )
+
+
+def _verified_pairs(
+    nd: DataFrame,
+    threshold: float,
+    id_col: str,
+    vec_col: str,
+    key: str | None = None,
+) -> DataFrame:
+    """The verify tail of the near-dup pair operators: rows of ``nd``
+    (id, vec, nrm[, key]) paired with ``id_a < id_b`` — all pairs via a
+    broadcast of ``nd``, or with ``key`` only pairs equal on it (an
+    equi-join) — kept where :func:`cos_ge` passes (a double dot
+    fast-rejects the dominant sub-threshold pairs) and scored with the
+    exact cosine: (id_a, id_b, cosine)."""
+    keys = [key] if key else []
+    a = nd.select(
+        *keys, F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"),
+        F.col("nrm").alias("__na"),
+    )
+    b = nd.select(
+        *keys, F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"),
+        F.col("nrm").alias("__nb"),
+    )
+    ordered = F.col("id_a") < F.col("id_b")
+    pairs = (
+        a.join(F.broadcast(b), ordered) if key is None
+        else a.join(b, key).filter(ordered)
+    )
+    return (
+        pairs.filter(
+            cos_ge(
+                F.col("__va"), F.col("__vb"),
+                F.col("__na"), F.col("__nb"), threshold,
+            )
+        )
+        .withColumn(
+            "cosine",
+            dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")),
+        )
+        .select("id_a", "id_b", "cosine")
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -143,6 +210,41 @@ def cosine_topk(
     id equals the query id — correct when queries are drawn FROM the corpus
     id space. Pass ``False`` for an unrelated query table, where an id
     collision would otherwise wrongly exclude a legitimate neighbor."""
+    return _exact_topk(
+        corpus, queries, k, "cosine", id_col, vec_col, query_id_col,
+        exclude_self,
+    )
+
+
+def _exact_score(metric: str, vec_col: str) -> Column:
+    """The exact metric between a query (``__qvec``, norm ``__qnrm``)
+    and a corpus row (``vec_col``, norm ``nrm``), over the stored norms:
+    ``"cosine"`` (decimal-exact dot / norms, ranked descending) or
+    ``"d2"`` (squared L2 |q|² + |x|² − 2·q·x, ranked ascending). Every
+    exact ranking and re-rank here scores with it."""
+    qdot = dot(F.col("__qvec"), F.col(vec_col))
+    if metric == "cosine":
+        return qdot / _nz(F.col("__qnrm") * F.col("nrm"))
+    return (
+        F.col("__qnrm") * F.col("__qnrm")
+        + F.col("nrm") * F.col("nrm")
+        - 2 * qdot
+    )
+
+
+def _exact_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    metric: str,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    exclude_self: bool,
+) -> DataFrame:
+    """Brute-force top-k by :func:`_exact_score` ``metric`` — output
+    (query_id, id, metric): the broadcast query vectors × every corpus
+    row, map-side, then one top-k shuffle per query (ties by id)."""
     q = with_norm(
         queries.select(
             F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qvec")
@@ -156,15 +258,13 @@ def cosine_topk(
     scored = (
         with_norm(ensure_parallelism(corpus), vec_col)
         .join(F.broadcast(q), pair_cond)
-        .withColumn(
-            "cosine",
-            dot(F.col("__qvec"), F.col(vec_col))
-            / _nz(F.col("__qnrm") * F.col("nrm")),
+        .select(
+            query_id_col, id_col, _exact_score(metric, vec_col).alias(metric)
         )
-        .select(query_id_col, id_col, "cosine")
     )
     return top_k_per_group(
-        scored, [query_id_col], "cosine", k, descending=True, tiebreak=[id_col]
+        scored, [query_id_col], metric, k,
+        descending=metric == "cosine", tiebreak=[id_col],
     )
 
 
@@ -195,31 +295,8 @@ def neardup_pairs(
                 f"(bucketed candidates, same output shape) at scale, or "
                 f"pass max_rows=None to force the baseline."
             )
-    nd = with_norm(ensure_parallelism(df), vec_col)
-    a = nd.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"),
-        F.col("nrm").alias("__na"),
-    )
-    b = nd.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"),
-        F.col("nrm").alias("__nb"),
-    )
-    return (
-        a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
-        # cos_ge fast-rejects the (dominant) sub-threshold pairs with a
-        # double dot; the exact decimal cosine is computed only for
-        # survivors, whose value the output carries anyway
-        .filter(
-            cos_ge(
-                F.col("__va"), F.col("__vb"),
-                F.col("__na"), F.col("__nb"), threshold,
-            )
-        )
-        .withColumn(
-            "cosine",
-            dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")),
-        )
-        .select("id_a", "id_b", "cosine")
+    return _verified_pairs(
+        with_norm(ensure_parallelism(df), vec_col), threshold, id_col, vec_col
     )
 
 
@@ -251,29 +328,8 @@ def lsh_neardup_pairs(
         F.col("__bn") <= max_bucket if max_bucket is not None else F.lit(True)
     )
     ok = bucket_n.filter((F.col("__bn") >= 2) & cap).select("bucket")
-    b = b.join(ok, "bucket")
-    a = b.select(
-        "bucket", F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"),
-        F.col("nrm").alias("__na"),
-    )
-    bb = b.select(
-        "bucket", F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"),
-        F.col("nrm").alias("__nb"),
-    )
-    return (
-        a.join(bb, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            cos_ge(
-                F.col("__va"), F.col("__vb"),
-                F.col("__na"), F.col("__nb"), threshold,
-            )
-        )
-        .withColumn(
-            "cosine",
-            dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")),
-        )
-        .select("id_a", "id_b", "cosine")
+    return _verified_pairs(
+        b.join(ok, "bucket"), threshold, id_col, vec_col, key="bucket"
     )
 
 
@@ -370,11 +426,7 @@ def random_projection(
                 "derive dim from — pass dim= explicitly"
             )
         dim = int(probed[0]["__d"])
-    d = df.filter(
-        e.isNotNull()
-        & (F.size(e) == dim)
-        & (F.size(F.filter(e, lambda x: x.isNull())) == 0)
-    )
+    d = _valid_vectors(df, vec_col, dim)
     scale = F.lit(float(math.sqrt(out_dim)))
     proj = F.array(
         *[
@@ -1469,9 +1521,13 @@ class Codec:
     An UNTRAINED codec (``thresholds`` / ``books`` / ``means`` None)
     carries the training dials ``m`` / ``n_codes`` / ``refine_iters``;
     binary thresholds train as the corpus :func:`dimension_means` (pass
-    ``thresholds`` for any other codebook, e.g. zeros for sign bits).
+    ``dim`` thresholds for any other codebook — sign bits are
+    ``Codec("binary", thresholds=[0.0] * dim)``).
     :func:`build_ivf_index` returns the trained codec;
-    :func:`read_ivf_index` returns the stored one."""
+    :func:`read_ivf_index` returns the stored one. The binary codec also
+    drives the cell-free Hamming family (:func:`binary_hamming_topk`,
+    :func:`binary_hamming_radius_pairs`, :func:`binary_dedup_survivors`
+    and the standing band index)."""
 
     kind: str = "flat"
     dim: int = 64
@@ -1490,6 +1546,11 @@ class Codec:
             raise ValueError(
                 "residual=True requires kind='pq' (residual codes ARE pq "
                 "codes, referenced to the cell means)"
+            )
+        if self.thresholds is not None and len(self.thresholds) != self.dim:
+            raise ValueError(
+                f"binary codec: {len(self.thresholds)} thresholds for "
+                f"dim={self.dim}"
             )
 
     @property
@@ -1555,13 +1616,8 @@ def build_ivf_index(
     if codec.kind == "flat":
         return assigned.select(*cols), codec
     if codec.kind == "binary":
-        if codec.thresholds is None:
-            thr = dimension_means(corpus, vec_col=vec_col, dim=codec.dim)
-            codec = replace(codec, thresholds=thr)
-        return (
-            _packed_words(assigned, vec_col, cols, codec.dim, codec.thresholds),
-            codec,
-        )
+        codec = _binary_codec(codec, corpus, vec_col)
+        return _packed_words(assigned, vec_col, cols, codec), codec
     m, dim = codec.m, codec.dim
     books, means = codec.books, codec.means
     trained_here = books is None
@@ -1689,20 +1745,12 @@ def ivf_search(
             .filter(not_self)
             .select(
                 query_id_col, id_col, "cent_id",
-                (
-                    dot(F.col("__qvec"), F.col(vec_col))
-                    / _nz(F.col("__qnrm") * F.col("nrm"))
-                ).alias("cosine"),
+                _exact_score("cosine", vec_col).alias("cosine"),
             )
         )
         score, descending = "cosine", True
     elif codec.kind == "binary":
-        qw = binary_quantize(
-            queries, vec_col, id_col, dim=codec.dim, thresholds=codec.thresholds
-        ).select(
-            F.col(id_col).alias(query_id_col),
-            *[F.col(w).alias(f"__q{w[1:]}") for w in codec.columns],
-        )
+        qw = _query_words(queries, codec, id_col, vec_col, query_id_col)
         qidx = probes.select(query_id_col, "cent_id").join(qw, query_id_col)
         first = (
             index.select(id_col, "cent_id", *codec.columns)
@@ -1715,21 +1763,7 @@ def ivf_search(
         )
         score, descending = "hamming", False
     else:
-        code_rows = index.select(
-            id_col,
-            "cent_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(F.lit(s).alias("s"), F.col(c).alias("code"))
-                        for s, c in enumerate(codec.columns)
-                    ]
-                )
-            ).alias("__c"),
-        ).select(
-            id_col, "cent_id",
-            F.col("__c.s").alias("s"), F.col("__c.code").alias("code"),
-        )
+        code_rows = _code_rows(index, codec.m, [id_col, "cent_id"])
         if codec.residual:
             qcells = _ivf_residuals(probes, codec.means, "__qvec").select(
                 query_id_col, "cent_id", F.col("__rvec").alias("__qvec")
@@ -1758,7 +1792,7 @@ def ivf_search(
         return top.select(query_id_col, id_col, score)
     return _exact_rerank(
         index, q, top.select(query_id_col, id_col, "cent_id"), k,
-        "l2" if codec.kind == "pq" else "cosine",
+        "d2" if codec.kind == "pq" else "cosine",
         id_col, vec_col, query_id_col,
     )
 
@@ -1779,34 +1813,22 @@ def _exact_rerank(
     id[, cent_id]); candidates join back to ``rows`` on every candidate
     key. Candidates broadcast INTO the join with the query vectors
     attached, so full-width vectors are never shuffled: read once,
-    filtered by the broadcast, scored map-side. ``metric`` is
-    ``"cosine"`` (decimal-exact dot over the stored norms, output
-    ``cosine`` descending) or ``"l2"`` (:func:`l2_topk`'s |q|² + |x|² −
-    2·q·x, output ``d2`` ascending — the "+R" of IVFADC+R)."""
-    qv = with_norm(q, "__qvec").select(
-        query_id_col, "__qvec", F.col("nrm").alias("__qnrm")
+    filtered by the broadcast, scored map-side. ``metric`` is an :func:`_exact_score` metric:
+    ``"cosine"`` (output ``cosine`` descending) or ``"d2"`` (output
+    ``d2`` ascending — the "+R" of IVFADC+R)."""
+    pairs = cands.join(
+        F.broadcast(with_norm(q, "__qvec", "__qnrm")), query_id_col
     )
-    pairs = cands.join(F.broadcast(qv), query_id_col)
     keys = [c for c in cands.columns if c != query_id_col]
-    if metric == "cosine":
-        score_name = "cosine"
-        score = dot(F.col("__qvec"), F.col(vec_col)) / _nz(
-            F.col("__qnrm") * F.col("nrm")
-        )
-    else:
-        score_name = "d2"
-        score = (
-            F.col("__qnrm") * F.col("__qnrm")
-            + F.col("nrm") * F.col("nrm")
-            - 2 * dot(F.col("__qvec"), F.col(vec_col))
-        )
     rers = (
         rows.select(*keys, vec_col, "nrm")
         .join(F.broadcast(pairs), keys)
-        .select(query_id_col, id_col, score.alias(score_name))
+        .select(
+            query_id_col, id_col, _exact_score(metric, vec_col).alias(metric)
+        )
     )
     return top_k_per_group(
-        rers, [query_id_col], score_name, k,
+        rers, [query_id_col], metric, k,
         descending=metric == "cosine", tiebreak=[id_col],
     )
 
@@ -1831,78 +1853,115 @@ def write_ivf_index(
     id_col: str = "vec_id",
 ) -> Codec:
     """Persist the STANDING IVF index: :func:`build_ivf_index`'s frame
-    written as parquet PARTITIONED BY ``cent_id``, one directory per
-    inverted list, with the trained codec in sidecars — ``_thresholds``
-    (binary), ``_codebooks`` (pq) and ``_cell_means`` (residual pq); the
-    underscore prefix hides them from the main parquet read. Returns
-    the trained codec.
+    PARTITIONED BY ``cent_id``, one directory per inverted list
+    (:func:`_write_index`), with the trained codec in sidecars —
+    ``_thresholds`` (binary), ``_codebooks`` (pq) and ``_cell_means``
+    (residual pq); the underscore prefix hides them from the main
+    parquet read. Returns the trained codec.
 
     This is the amortization step of every production ANN deployment:
-    assignment, codec training and encoding run ONCE at build time
-    instead of per query batch, and the cell-directory layout turns
-    probing into PARTITION PRUNING — a probe of ``n_probe`` cells reads
-    ``n_probe / nlist`` of the FILES, and the codec's first pass reads
-    only (id, words|codes) of their COLUMNS. Norms are stored so query
-    scoring never recomputes them. Read back with :func:`read_ivf_index`.
+    assignment, codec training and encoding run ONCE at build time, and
+    the cell directories turn probing into PARTITION PRUNING — a probe
+    of ``n_probe`` cells reads ``n_probe / nlist`` of the FILES, and
+    the codec's first pass only (id, words|codes) of their COLUMNS.
+    Norms are stored so query scoring never recomputes them. Read back
+    with :func:`read_ivf_index`.
 
-    ``mode="append"`` grows an existing index under the ONE-CODEBOOK
-    contract: the batch encodes with the STORED codec (thresholds,
-    books and cell means are never re-trained on a batch — a codebook
-    recomputed on a batch would put old and new rows in different
-    codebooks and corrupt every later comparison); ``codec`` must name
-    the stored representation (kind and residual), else ``ValueError``.
-    A residual append whose rows assign to cells the build never
-    populated raises (no stored mean exists for them). ALL append
-    validation runs BEFORE the first byte is written, so a rejected
-    append leaves the standing index untouched. The quantizer must be
-    the one the index was built with."""
+    ``mode="append"`` grows an existing index with the STORED codec
+    (:func:`_standing_codec`, shared with
+    :func:`write_binary_band_index`); a residual append whose rows
+    assign to cells the build never populated raises (no stored mean
+    exists for them). ALL append validation runs BEFORE the first byte
+    is written. The quantizer must be the one the index was built
+    with."""
     spark = corpus.sparkSession
     codec = codec or Codec()
-    if mode == "append" and _hadoop_path_exists(spark, path):
-        stored = _read_codec(spark, path)
-        if (codec.kind, codec.residual) != (stored.kind, stored.residual):
-            raise ValueError(
-                f"write_ivf_index(mode='append'): codec kind={codec.kind!r}, "
-                f"residual={codec.residual} does not match the standing "
-                f"index (kind={stored.kind!r}, residual={stored.residual}) — "
-                "appended rows must carry exactly the standing layout's "
-                "representation, or readers see NULL codes and silently "
-                "drop them from candidates"
-            )
-        codec = stored
-    elif mode == "append" and codec.kind != "flat":
-        raise ValueError(
-            f"write_ivf_index(mode='append'): no standing index at {path!r} "
-            "— build it first with mode='overwrite' (append grows an "
-            "existing index; it never trains a codec)"
-        )
+    if mode == "append":
+        codec = _standing_codec(spark, path, codec, "write_ivf_index")
     index, codec = build_ivf_index(corpus, quantizer, codec, vec_col, id_col)
-    # cluster by inverted list before the partitioned write — one file
-    # per cell instead of tasks × cells small files. The partition count
-    # is EXPLICIT (defaultParallelism): a keyed repartition with no count
-    # participates in AQE coalescing, which at small build sizes
-    # collapses the write to ONE task that opens the per-cell files
-    # sequentially (~30 ms per parquet writer init) — measured 4.9 s vs
-    # 1.6 s for the same one-file-per-bucket layout.
-    index.repartition(
-        spark.sparkContext.defaultParallelism, "cent_id"
-    ).write.mode(mode).partitionBy("cent_id").parquet(path)
-    if mode != "append":
-        _write_sidecars(spark, path, codec)
+    _write_index(index, path, mode, codec, ["cent_id"])
     return codec
 
 
-def _write_sidecars(spark, path: str, codec: Codec) -> None:
-    """Write the codec's sidecars AFTER the main write (an overwrite
-    build wipes the whole directory first). Each sidecar frame is born
-    in ONE slice (:func:`local_df`), so each write is one task and one
-    file with no coalesce — coalesce(1) over a default local frame
-    drains its slices serially through a single task's worker pipe
-    (measured ~5.5 s per kilobyte-scale sidecar; ~0.5 s this way). The
-    sidecars are independent (distinct subdirectories), so they submit
-    CONCURRENTLY from a small thread pool: each write is one single-task
-    job whose wall is mostly driver/commit latency."""
-    sidecars = []
+def _write_index(
+    frame: DataFrame,
+    path: str,
+    mode: str,
+    codec: Codec,
+    by: list[str],
+    extra: list | None = None,
+) -> None:
+    """Write a standing index: ``frame`` PARTITIONED BY ``by`` (one
+    directory per inverted list or band bucket), then, on a build, the
+    codec's sidecars (:func:`_write_sidecars`, plus ``extra``). An
+    append writes none: the stored codec it was validated against
+    (:func:`_standing_codec`) stays authoritative. Rows cluster by
+    directory before the write, into an EXPLICIT defaultParallelism
+    partitions: unclustered, every task opens a file in every directory
+    it sees (a 2048-bucket band build measured 250 s against 39 s
+    clustered); with no count, AQE coalesces small builds to ONE task
+    opening the files serially (4.9 s vs 1.6 s measured)."""
+    spark = frame.sparkSession
+    frame.repartition(spark.sparkContext.defaultParallelism, *by).write.mode(
+        mode
+    ).partitionBy(*by).parquet(path)
+    if mode != "append":
+        _write_sidecars(spark, path, codec, extra)
+
+
+def _standing_codec(spark, path: str, codec: Codec, writer: str) -> Codec:
+    """The codec an append to the standing index at ``path`` encodes
+    with: the STORED one (the one-codebook contract — a codebook
+    re-trained on a batch would put old and new rows in different
+    codebooks). ``codec`` must name the stored kind and residual flag
+    and, if it carries trained thresholds or books, equal the stored
+    ones; with no index at ``path`` only a flat codec (nothing to train)
+    may append. Anything else raises ``ValueError`` before the first
+    byte is written."""
+    if not _hadoop_path_exists(spark, path):
+        if codec.kind == "flat":
+            return codec
+        raise ValueError(
+            f"{writer}(mode='append'): no standing index at {path!r} — "
+            "build it first with mode='overwrite' (append grows an "
+            "existing index; it never trains a codec)"
+        )
+    stored = _read_codec(spark, path)
+    if (codec.kind, codec.residual) != (stored.kind, stored.residual):
+        raise ValueError(
+            f"{writer}(mode='append'): codec kind={codec.kind!r}, "
+            f"residual={codec.residual} does not match the standing "
+            f"index (kind={stored.kind!r}, residual={stored.residual}) — "
+            "appended rows must carry exactly the standing layout's "
+            "representation, or readers see NULL codes and silently "
+            "drop them from candidates"
+        )
+    if (
+        codec.thresholds is not None
+        and [float(v) for v in codec.thresholds] != stored.thresholds
+    ) or (codec.books is not None and sorted(codec.books) != stored.books):
+        raise ValueError(
+            f"{writer}(mode='append'): the codec's trained codebook differs "
+            "from the standing index's stored one — append with the "
+            "untrained codec (or the one read back) instead"
+        )
+    return stored
+
+
+def _write_sidecars(
+    spark, path: str, codec: Codec, extra: list | None = None
+) -> None:
+    """Write the codec's sidecars, plus any ``extra`` (name, frame)
+    pairs, AFTER the main write (an overwrite build wipes the whole
+    directory first). Each sidecar frame is born in ONE slice
+    (:func:`local_df`), so each write is one task and one file with no
+    coalesce — coalesce(1) over a default local frame drains its slices
+    serially through a single task's worker pipe (measured ~5.5 s per
+    kilobyte-scale sidecar; ~0.5 s this way). The sidecars are
+    independent (distinct subdirectories), so they submit CONCURRENTLY
+    from a small thread pool: each write is one single-task job whose
+    wall is mostly driver/commit latency."""
+    sidecars = list(extra or [])
     if codec.kind == "binary":
         sidecars.append((
             "_thresholds",
@@ -2258,10 +2317,10 @@ def dimension_means(
     df: DataFrame, vec_col: str = "embedding", dim: int = 64
 ) -> list[float]:
     """Per-dimension means of a vector column as plain Python floats —
-    the binarization thresholds for :func:`binary_quantize`'s
-    ``threshold="mean"`` mode, computed ONCE from the corpus and reused
-    verbatim for queries (quantizing queries against their own means
-    would put the two sides in different codebooks).
+    the thresholds an untrained binary :class:`Codec` trains to,
+    computed ONCE from the corpus and reused verbatim for queries
+    (quantizing queries against their own means would put the two sides
+    in different codebooks).
 
     Engine-portable by the standing mean contract
     (:func:`_decimal_mean_vectors`): exact DECIMAL(28,12) component sum
@@ -2269,18 +2328,12 @@ def dimension_means(
     bit-identical doubles and every ``v > mean`` comparison lands the
     same way on both engines. The collect is ``dim`` doubles — the
     declared build-collect-inline pattern (a few hundred bytes), same
-    as the Bloom/count-min sketch builds. Rows that are NULL, not
-    ``dim`` long, or contain a NULL element are excluded SYMMETRICALLY
-    with :func:`binary_quantize`'s filter (a NULL element would
-    NULL-poison Spark's decimal sum where SQL SUM skips it)."""
-    e = F.col(vec_col)
-    clean = df.filter(
-        e.isNotNull()
-        & (F.size(e) == dim)
-        & (F.size(F.filter(e, lambda x: x.isNull())) == 0)
-    )
+    as the Bloom/count-min sketch builds. Rows outside
+    :func:`_valid_vectors` are excluded, symmetrically with
+    :func:`binary_quantize`."""
     rows = (
-        clean.select(F.posexplode(vec_col).alias("__dim", "__v"))
+        _valid_vectors(df, vec_col, dim)
+        .select(F.posexplode(vec_col).alias("__dim", "__v"))
         .groupBy("__dim")
         .agg(
             (
@@ -2321,60 +2374,81 @@ def binary_quantize(
     :func:`dimension_means` output for the mean-threshold code). Bits
     pack into ``ceil(dim/32)`` 32-bit words carried as longs
     (``w0, w1, …``) — 32 B/vector → 8 B at dim=64, a 32× cut in every
-    downstream shuffle/scan byte, which is the entire point at 100 TB:
-    Hamming-over-bits retrieval (:func:`binary_hamming_topk`) moves 3%
-    of the float payload and re-ranks only survivors.
+    downstream shuffle/scan byte: Hamming-over-bits retrieval
+    (:func:`binary_hamming_topk`) moves 3% of the float payload and
+    re-ranks only survivors.
 
-    ENTIRELY map-side (zero shuffle, zero state): each word is a 32-term
-    CASE sum over array elements against literal thresholds — the
-    :func:`lsh_bucket` expression pattern, exact integer algebra the
-    oracle restates verbatim (comparisons of raw float32-widened values
-    against identically-computed double thresholds are deterministic
-    cross-engine; no arithmetic precedes the compare). Rows that are
-    NULL, wrong-length, or contain a NULL element are excluded — the
-    same symmetric-drop contract as :func:`random_projection` (a NULL
-    element's CASE would silently contribute a 0 bit on both engines,
-    but the row must ALSO be excluded from the mean build, so the
-    filter is one rule applied everywhere).
+    ENTIRELY map-side: each word is a 32-term CASE sum over array
+    elements against literal thresholds — exact integer algebra the
+    oracle restates verbatim (raw float32-widened values compared with
+    identically-computed double thresholds; no arithmetic precedes the
+    compare). Rows outside :func:`_valid_vectors` are excluded, the
+    same rule as the mean build.
 
     Output: (id_col, w0..w{n-1}) — key-only; callers re-attach payloads
     by ``id_col`` when needed (the re-rank step does)."""
-    return _packed_words(df, vec_col, [id_col], dim, thresholds)
+    codec = Codec(
+        "binary", dim=dim,
+        thresholds=[0.0] * dim if thresholds is None else thresholds,
+    )
+    return _packed_words(df, vec_col, [id_col], codec)
 
 
 def _packed_words(
-    df: DataFrame,
-    vec_col: str,
-    head: list[str],
-    dim: int,
-    thresholds: list[float] | None,
+    df: DataFrame, vec_col: str, head: list[str], codec: Codec
 ) -> DataFrame:
-    """:func:`binary_quantize` with any ``head`` columns ahead of the
-    words (the IVF index build carries id, vector, norm and cell)."""
-    if thresholds is None:
-        thresholds = [0.0] * dim
-    if len(thresholds) != dim:
-        raise ValueError(
-            f"binary_quantize: {len(thresholds)} thresholds for dim={dim}"
-        )
+    """:func:`binary_quantize` against a trained binary codec, with any
+    ``head`` columns ahead of the words (the IVF index build carries
+    id, vector, norm and cell)."""
     e = F.col(vec_col)
-    clean = df.filter(
-        e.isNotNull()
-        & (F.size(e) == dim)
-        & (F.size(F.filter(e, lambda x: x.isNull())) == 0)
-    )
-    n_words = (dim + BINARY_WORD_BITS - 1) // BINARY_WORD_BITS
     words = []
-    for w in range(n_words):
+    for w, name in enumerate(codec.columns):
         acc = F.lit(0).cast("long")
-        for j in range(min(BINARY_WORD_BITS, dim - w * BINARY_WORD_BITS)):
+        for j in range(min(BINARY_WORD_BITS, codec.dim - w * BINARY_WORD_BITS)):
             d = w * BINARY_WORD_BITS + j
             bit = F.when(
-                e[d] > F.lit(float(thresholds[d])), F.lit(1 << j)
+                e[d] > F.lit(float(codec.thresholds[d])), F.lit(1 << j)
             ).otherwise(F.lit(0))
             acc = acc + bit.cast("long")
-        words.append(acc.alias(f"w{w}"))
-    return clean.select(*head, *words)
+        words.append(acc.alias(name))
+    return _valid_vectors(df, vec_col, codec.dim).select(*head, *words)
+
+
+def _binary_codec(
+    codec: Codec | None, corpus: DataFrame, vec_col: str
+) -> Codec:
+    """A trained binary codec — the one training rule of the IVF build
+    and the Hamming family: an untrained codec (``None`` means
+    ``Codec("binary")``) trains its thresholds as the corpus
+    :func:`dimension_means`; a trained one is used as-is. Any other
+    codec kind raises."""
+    codec = codec or Codec("binary")
+    if codec.kind != "binary":
+        raise ValueError(
+            f"the Hamming family needs a binary codec, got kind={codec.kind!r}"
+        )
+    if codec.thresholds is None:
+        codec = replace(
+            codec,
+            thresholds=dimension_means(corpus, vec_col=vec_col, dim=codec.dim),
+        )
+    return codec
+
+
+def _query_words(
+    queries: DataFrame,
+    codec: Codec,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """The query side of a Hamming pass: (query_id, __q0..), packed
+    against the codec's (corpus) thresholds — one codebook, build and
+    probe."""
+    return _packed_words(queries, vec_col, [id_col], codec).select(
+        F.col(id_col).alias(query_id_col),
+        *[F.col(w).alias(f"__q{w[1:]}") for w in codec.columns],
+    )
 
 
 #: bits per multi-index Hamming band (default): each packed 32-bit word
@@ -2427,13 +2501,20 @@ def _explode_bands(
     )
 
 
-def _resolve_band_bits(dim: int, radius: int, band_bits: int | None) -> int:
-    """Pick (or validate) the band width so the pigeonhole guarantee
-    covers ``radius``: a code within ``r`` flipped bits of the query
-    shares at least one exact band whenever ``r < n_bands = dim /
-    band_bits``. ``None`` selects the COARSEST width that still
-    guarantees (fewest exploded rows); an explicit width that does not
-    guarantee raises rather than silently returning partial pairs."""
+def _resolve_band_bits(
+    dim: int, radius: int | None, band_bits: int | None
+) -> int:
+    """Pick (or validate) the band width — the one band-width rule. A
+    width must divide both ``dim`` and the packed word. Given a
+    ``radius``, the width must also make the pigeonhole guarantee cover
+    it: a code within ``r`` flipped bits of the query shares at least
+    one exact band whenever ``r < n_bands = dim / band_bits``; ``None``
+    selects the COARSEST width that still guarantees (fewest exploded
+    rows), and an explicit width that does not guarantee raises rather
+    than silently returning partial pairs. ``radius=None`` checks the
+    divisibility only (the band index is built before any radius is
+    known; the banded top-k stays exact at any valid width through its
+    verified fallback)."""
     candidates = [b for b in (32, 16, 8, 4, 2, 1) if b <= BINARY_WORD_BITS]
     if band_bits is None:
         for b in candidates:
@@ -2448,7 +2529,7 @@ def _resolve_band_bits(dim: int, radius: int, band_bits: int | None) -> int:
             f"band_bits={band_bits} must divide both dim={dim} and the "
             f"{BINARY_WORD_BITS}-bit packed word"
         )
-    if dim // band_bits <= radius:
+    if radius is not None and dim // band_bits <= radius:
         raise ValueError(
             f"band_bits={band_bits} gives {dim // band_bits} bands — the "
             f"pigeonhole guarantee needs more than radius={radius} bands; "
@@ -2494,77 +2575,72 @@ def _banded_candidates(
     ).distinct()
 
 
+def _hamming_scan_topm(
+    cb: DataFrame,
+    qb: DataFrame,
+    m: int,
+    n_words: int,
+    id_col: str,
+    query_id_col: str,
+    exclude_self: bool,
+) -> DataFrame:
+    """The exhaustive Hamming pass of the scan index and of the banded
+    index's verified fallback: broadcast query words ``qb`` × corpus
+    words ``cb``, XOR + bit_count map-side, each query's top ``m`` by
+    (hamming, id) — (query_id, id, hamming)."""
+    scored = (
+        cb.crossJoin(F.broadcast(qb))
+        .filter(
+            F.col(query_id_col) != F.col(id_col) if exclude_self else F.lit(True)
+        )
+        .select(query_id_col, id_col, _hamming_expr(n_words).alias("hamming"))
+    )
+    return top_k_per_group(
+        scored, [query_id_col], "hamming", m,
+        descending=False, tiebreak=[id_col],
+    )
+
+
 def binary_hamming_radius_pairs(
     df: DataFrame,
     radius: int,
-    dim: int = 64,
+    codec: Codec | None = None,
     band_bits: int | None = None,
-    threshold: str = "mean",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    thresholds: list[float] | None = None,
 ) -> DataFrame:
     """ALL corpus pairs within Hamming radius ``radius`` of each other
-    (over the packed :func:`binary_quantize` codes), found by the
-    multi-index banded self-join — COMPLETE by the pigeonhole principle:
-    two codes differing in ``r ≤ n_bands − 1`` bits cannot flip a bit in
-    every one of the ``n_bands`` disjoint bands, so they share at least
-    one band exactly and the banded equi-join surfaces the pair. The
-    same discipline as :func:`~..dedup.simhash` banding, applied to the
-    1-bit embedding codes — the near-duplicate sweep that replaces the
-    N² code cross at scale.
+    over the packed codes of the binary ``codec`` (untrained: trains on
+    ``df``), found by the multi-index banded self-join — COMPLETE by
+    the pigeonhole principle: two codes differing in ``r ≤ n_bands − 1``
+    bits cannot flip a bit in every one of the ``n_bands`` disjoint
+    bands, so they share a band exactly and the banded equi-join
+    surfaces the pair (:func:`~..dedup.simhash` banding's discipline,
+    replacing the N² code cross at scale).
 
-    Scale shape: explode each code into ``n_bands`` key-only (band_idx,
-    band_val, words) rows, ONE equi-join shuffle keyed on the band —
-    candidates are band-bucket pairs, not N²; the exact Hamming filter
-    runs map-side on the joined words and ``distinct`` collapses
-    multi-band matches. Guarantee radii come from the band count
-    (``_resolve_band_bits``: coarsest width that still covers
-    ``radius``); an explicit ``band_bits`` that cannot guarantee raises
-    rather than returning silently-partial pairs. At MIH's classic
-    operating point (substring ≈ log2 N bits) bucket sizes stay O(1);
-    the radius census (tools/bench_binary_r11.py) pairs candidate
-    counts against the N² cross at sf1.
+    Scale shape: each code explodes into ``n_bands`` key-only (band_idx,
+    band_val, words) rows, ONE equi-join shuffle keyed on the band, the
+    exact Hamming filter map-side on the joined words, and ``distinct``
+    collapses multi-band matches. ``band_bits`` resolves through
+    :func:`_resolve_band_bits` (coarsest width that covers ``radius``;
+    an explicit width that cannot guarantee raises rather than return
+    partial pairs). The radius census (tools/bench_binary_r11.json)
+    pairs candidate counts against the N² cross at sf1.
 
     Output: (id_a, id_b, hamming) with ``id_a < id_b``,
     ``hamming <= radius``."""
-    if thresholds is None and threshold not in ("mean", "zero"):
-        # same guard as binary_hamming_topk (r11 ADVICE): a typo like
-        # "means" must not silently fall through to the zero codebook
-        raise ValueError(f"unknown binary threshold: {threshold!r}")
+    dim = (codec or Codec("binary")).dim
     bb = _resolve_band_bits(dim, radius, band_bits)
-    n_bands = dim // bb
-    n_words = (dim + BINARY_WORD_BITS - 1) // BINARY_WORD_BITS
-    thr = (
-        thresholds
-        if thresholds is not None
-        else (
-            dimension_means(df, vec_col=vec_col, dim=dim)
-            if threshold == "mean"
-            else None
-        )
-    )
-    cb = ensure_parallelism(
-        binary_quantize(df, vec_col, id_col, dim=dim, thresholds=thr)
-    )
-    ce = _explode_bands(cb, n_bands, bb, "w")
-    a = ce.select(
-        F.col(id_col).alias("id_a"),
-        *[F.col(f"w{w}").alias(f"__a{w}") for w in range(n_words)],
-        "__bidx",
-        "__bval",
-    )
+    codec = _binary_codec(codec, df, vec_col)
+    cb = ensure_parallelism(_packed_words(df, vec_col, [id_col], codec))
+    ce = _explode_bands(cb, dim // bb, bb, "w")
+    a = ce.select(F.col(id_col).alias("id_a"), *codec.columns, "__bidx", "__bval")
     b = ce.select(
         F.col(id_col).alias("id_b"),
-        *[F.col(f"w{w}").alias(f"__b{w}") for w in range(n_words)],
+        *[F.col(w).alias(f"__b{w[1:]}") for w in codec.columns],
         F.col("__bidx").alias("__bbidx"),
         F.col("__bval").alias("__bbval"),
     )
-    ham = F.lit(0).cast("long")
-    for w in range(n_words):
-        ham = ham + F.bit_count(
-            F.col(f"__a{w}").bitwiseXOR(F.col(f"__b{w}"))
-        ).cast("long")
     return (
         a.join(
             b,
@@ -2572,7 +2648,10 @@ def binary_hamming_radius_pairs(
             & (F.col("__bval") == F.col("__bbval"))
             & (F.col("id_a") < F.col("id_b")),
         )
-        .select("id_a", "id_b", ham.alias("hamming"))
+        .select(
+            "id_a", "id_b",
+            _hamming_expr(len(codec.columns), "__b").alias("hamming"),
+        )
         .filter(F.col("hamming") <= radius)
         .distinct()
     )
@@ -2581,228 +2660,151 @@ def binary_hamming_radius_pairs(
 def binary_dedup_survivors(
     df: DataFrame,
     radius: int = 3,
-    dim: int = 64,
+    codec: Codec | None = None,
     band_bits: int | None = None,
-    threshold: str = "mean",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    thresholds: list[float] | None = None,
 ) -> DataFrame:
-    """Embedding near-duplicate DEDUP over the 1-bit codes: any two
-    vectors whose packed codes sit within Hamming ``radius`` are
-    duplicates, and the LARGER id of each close pair drops —
-    :func:`semdedup`'s survivor rule applied to the compressed
-    modality. This is the cheap first-line semantic dedup for a
-    training corpus: where SemDeDup moves full float vectors into
-    in-cell pair scoring, this pass moves 24 B codes through ONE banded
+    """Embedding near-duplicate DEDUP over the 1-bit codes of the binary
+    ``codec`` (untrained: trains on ``df``): the LARGER id of every code
+    pair within Hamming ``radius`` drops — :func:`semdedup`'s survivor
+    rule applied to the compressed modality, the cheap first-line
+    semantic dedup of a training corpus: 24 B codes through ONE banded
     equi-join (:func:`binary_hamming_radius_pairs` — complete by
-    pigeonhole at the chosen banding) and an anti-join; census at sf1 /
-    sf10 shows the banded candidate volume 2345× / 2520× below the N²
-    cross with the wall crossover by 200k codes
-    (tools/bench_binary_r11.json).
+    pigeonhole) and an anti-join, where SemDeDup moves full floats.
 
-    Drop semantics: ``id_b`` of every radius pair drops (the pair
-    stream has ``id_a < id_b``), so the minimum id of every duplicate
-    group always survives; transitive chains collapse toward the
-    smallest id in one pass exactly like ``semdedup``'s per-cell rule —
-    the survivor set is deterministic and restated verbatim by the
-    gate oracle (``embedding_binary_dedup_survivors``). Output:
-    (id_col) survivors — key-only; callers re-attach payloads by id
-    (the standing discipline)."""
+    The pair stream has ``id_a < id_b``, so the minimum id of every
+    duplicate group survives and transitive chains collapse toward it in
+    one pass, like ``semdedup``'s per-cell rule — deterministic, and
+    restated verbatim by the gate oracle
+    (``embedding_binary_dedup_survivors``). Output: (id_col) survivors
+    among :func:`_valid_vectors` — key-only."""
+    codec = _binary_codec(codec, df, vec_col)
     pairs = binary_hamming_radius_pairs(
-        df, radius=radius, dim=dim, band_bits=band_bits,
-        threshold=threshold, vec_col=vec_col, id_col=id_col,
-        thresholds=thresholds,
+        df, radius, codec, band_bits, vec_col, id_col
     )
     drops = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    e = F.col(vec_col)
-    clean = df.filter(
-        e.isNotNull()
-        & (F.size(e) == dim)
-        & (F.size(F.filter(e, lambda x: x.isNull())) == 0)
+    return (
+        _valid_vectors(df, vec_col, codec.dim)
+        .select(id_col)
+        .join(drops, id_col, "left_anti")
     )
-    return clean.select(id_col).join(drops, id_col, "left_anti")
 
 
 def write_binary_band_index(
     df: DataFrame,
     path: str,
-    dim: int = 64,
+    codec: Codec | None = None,
     band_bits: int = 4,
-    threshold: str = "mean",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    thresholds: list[float] | None = None,
     mode: str = "overwrite",
 ) -> None:
     """Persist the STANDING binary band index: every corpus code
     exploded to its ``dim/band_bits`` (band_idx, band_val) rows —
-    (id, w0.., band_idx, band_val) written as parquet PARTITIONED BY
-    (band_idx, band_val), one directory per band bucket — plus the
-    binarization thresholds as a ``_thresholds`` sidecar and the
-    (band_bits, dim) layout as a ``_layout`` sidecar. This is the
-    admission counterpart of :func:`write_ivf_index`: corpus
-    quantization AND band explosion are amortized to build time, and
-    the bucket-directory layout turns a batch's banded probe into
-    DYNAMIC PARTITION PRUNING — admitting a batch reads only the band
-    buckets the batch's own codes hash into (≤ |batch| × n_bands
-    directories), never the corpus-wide band table. At the default
-    4-bit bands that is 16 × 16 = 256 directories total; coarser
-    widths (16/32-bit bands) have up-to-65k-value domains — partition
-    those by ``band_idx`` alone via a future knob if ever needed (the
-    admission regime is fine bands, small radii).
+    (id, w0.., band_idx, band_val) PARTITIONED BY (band_idx, band_val),
+    one directory per band bucket (:func:`_write_index`) — with the
+    binary ``codec`` (untrained: trains on ``df``) in the IVF index's
+    ``_thresholds`` sidecar and the band width in ``_layout``. The
+    admission counterpart of :func:`write_ivf_index`: quantization and
+    band explosion are amortized to build time, and the bucket
+    directories turn a batch's banded probe into DYNAMIC PARTITION
+    PRUNING — admission reads only the ≤ |batch| × n_bands buckets the
+    batch's codes hash into (256 directories in all at the default
+    4-bit bands; the admission regime is fine bands, small radii).
 
-    Growth: ``mode="append"`` lands an admitted batch's band rows
-    inside the existing bucket directories, quantized against the
-    STORED thresholds automatically (explicit divergent thresholds or
-    a mismatched band layout RAISE — the one-codebook append contract,
-    same as :func:`write_ivf_index`)."""
-    if threshold not in ("mean", "zero"):
-        raise ValueError(f"unknown binary threshold: {threshold!r}")
-    if dim % band_bits != 0 or BINARY_WORD_BITS % band_bits != 0:
-        raise ValueError(
-            f"band_bits={band_bits} must divide both dim={dim} and the "
-            f"{BINARY_WORD_BITS}-bit packed word"
-        )
+    ``mode="append"`` lands an admitted batch's band rows inside the
+    existing bucket directories, quantized with the STORED codec
+    (:func:`_standing_codec`, shared with :func:`write_ivf_index`); a
+    band width or ``dim`` other than the stored layout's raises too,
+    before the first byte is written."""
+    spark = df.sparkSession
     if mode == "append":
-        # the one-codebook/one-layout append contract (r12 review, the
-        # write_ivf_index discipline): the batch quantizes against the
-        # STORED thresholds, and the band geometry must match the
-        # standing layout — a divergent explicit value raises instead
-        # of silently mixing codebooks or band domains
-        _idx, stored_thr, stored_bb, stored_dim = read_binary_band_index(
-            df.sparkSession, path
-        )
-        if (band_bits, dim) != (stored_bb, stored_dim):
+        given = codec or Codec("binary")
+        codec = _standing_codec(spark, path, given, "write_binary_band_index")
+        stored_bb = _band_bits(spark, path)
+        if (band_bits, given.dim) != (stored_bb, codec.dim):
             raise ValueError(
                 f"write_binary_band_index(mode='append'): layout "
-                f"(band_bits={band_bits}, dim={dim}) differs from the "
-                f"stored ({stored_bb}, {stored_dim})"
+                f"(band_bits={band_bits}, dim={given.dim}) differs from the "
+                f"stored ({stored_bb}, {codec.dim})"
             )
-        if thresholds is None:
-            thresholds = stored_thr
-        elif [float(v) for v in thresholds] != stored_thr:
-            raise ValueError(
-                "write_binary_band_index(mode='append'): explicit "
-                "thresholds differ from the stored _thresholds sidecar"
-            )
-    thr = (
-        thresholds
-        if thresholds is not None
-        else (
-            dimension_means(df, vec_col=vec_col, dim=dim)
-            if threshold == "mean"
-            else [0.0] * dim
-        )
-    )
-    n_bands = dim // band_bits
-    cb = ensure_parallelism(
-        binary_quantize(df, vec_col, id_col, dim=dim, thresholds=thr)
-    )
-    rows = _explode_bands(cb, n_bands, band_bits, "w").select(
+    codec = codec or Codec("binary")
+    _resolve_band_bits(codec.dim, None, band_bits)
+    codec = _binary_codec(codec, df, vec_col)
+    cb = ensure_parallelism(_packed_words(df, vec_col, [id_col], codec))
+    rows = _explode_bands(cb, codec.dim // band_bits, band_bits, "w").select(
         id_col,
-        *[f"w{w}" for w in range((dim + BINARY_WORD_BITS - 1) // BINARY_WORD_BITS)],
+        *codec.columns,
         F.col("__bidx").alias("band_idx"),
         F.col("__bval").alias("band_val"),
     )
-    # cluster rows by their target bucket BEFORE the partitioned write:
-    # without this every write task holds a file open in every bucket it
-    # sees (tasks × buckets small files — a file-listing floor on every
-    # later probe; the r12 census measured a 2048-bucket build at 250 s
-    # against 39 s clustered). The shuffle is key-only band rows — cheap
-    # at any scale — and oversized buckets still split across tasks by
-    # maxRecordsPerFile-style knobs downstream if ever needed.
-    rows = rows.repartition(
-        df.sparkSession.sparkContext.defaultParallelism,
-        "band_idx", "band_val",
-    )
-    rows.write.mode(mode).partitionBy("band_idx", "band_val").parquet(path)
-    spark = df.sparkSession
-    # sidecars AFTER the main write (overwrite wipes the directory);
-    # builds only — appends validated against the stored values above,
-    # which stay authoritative
-    if mode != "append":
-        # one-slice sidecar frames: single file, no coalesce (see
-        # write_ivf_index — coalesce(1) over a default local frame
-        # drains 32 Python slices serially, ~5.5 s per sidecar at r15)
-        local_df(
-            spark,
-            [(i, float(v)) for i, v in enumerate(thr)],
-            "i int, threshold double",
-        ).write.mode("overwrite").parquet(f"{path}/_thresholds")
-        local_df(
-            spark, [(band_bits, dim)], "band_bits int, dim int"
-        ).write.mode("overwrite").parquet(f"{path}/_layout")
+    layout = [("_layout", local_df(spark, [(band_bits,)], "band_bits int"))]
+    _write_index(rows, path, mode, codec, ["band_idx", "band_val"], layout)
 
 
-def read_binary_band_index(
-    spark, path: str
-) -> tuple[DataFrame, list[float], int, int]:
+def _band_bits(spark, path: str) -> int:
+    """The band width stored in a band index's ``_layout`` sidecar."""
+    return int(spark.read.parquet(f"{path}/_layout").first()["band_bits"])
+
+
+def read_binary_band_index(spark, path: str) -> tuple[DataFrame, Codec, int]:
     """Read a :func:`write_binary_band_index` layout back as
-    ``(band_rows, thresholds, band_bits, dim)``. The partition columns
-    are re-cast to their written types (band_idx INT, band_val BIGINT —
+    ``(band_rows, codec, band_bits)``. The partition columns are re-cast
+    to their written types (band_idx INT, band_val BIGINT —
     directory-name inference would alter them, the
-    :func:`read_ivf_index` discipline); the thresholds are the build
-    codebook every admission batch must quantize against. The frame
-    carries its (band_bits, dim) layout as ``band_idx`` column
-    METADATA, so :func:`binary_incremental_admitted` can reject a
-    mismatched width instead of silently joining misaligned band keys
-    (r12 review)."""
-    layout = spark.read.parquet(f"{path}/_layout").collect()[0]
-    bb, d = int(layout["band_bits"]), int(layout["dim"])
+    :func:`read_ivf_index` discipline); the codec is the stored build
+    codebook (:func:`_read_codec`) every admission batch must quantize
+    against. The frame carries its (band_bits, dim) layout as
+    ``band_idx`` column METADATA, so :func:`binary_incremental_admitted`
+    can reject a mismatched width instead of silently joining
+    misaligned band keys."""
+    bb = _band_bits(spark, path)
+    codec = _read_codec(spark, path)
     df = (
         spark.read.parquet(path)
         .withColumn("band_idx", F.col("band_idx").cast("int"))
         .withColumn("band_val", F.col("band_val").cast("bigint"))
-        .withMetadata("band_idx", {"band_bits": bb, "dim": d})
+        .withMetadata("band_idx", {"band_bits": bb, "dim": codec.dim})
     )
-    thr = [
-        float(r["threshold"])
-        for r in spark.read.parquet(f"{path}/_thresholds").orderBy("i").collect()
-    ]
-    return df, thr, bb, d
+    return df, codec, bb
 
 
 def binary_incremental_admitted(
     index: DataFrame,
     new: DataFrame,
-    thresholds: list[float],
+    codec: Codec,
     radius: int = 3,
-    dim: int = 64,
     band_bits: int = 4,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Admission dedup for an INCREMENTAL batch against a STANDING
-    binary band index (VERDICT r11 "Next round" #6 — the
-    :func:`~..dedup.incremental_dedup` production mode applied to the
-    1-bit codes): which ``new`` vectors survive, where a new vector
+    binary band index: which ``new`` vectors survive, where a new vector
     drops iff ANY partner with a smaller id sits within Hamming
     ``radius`` — an indexed corpus code (ID CONTRACT: every indexed id
-    precedes every batch id, the same id-monotonicity the standing
-    MinHash admission and the salted rejoin document) or an earlier
-    batch code. That drop rule makes admission EQUAL to re-running
-    :func:`binary_dedup_survivors` on corpus ∪ batch and keeping the
-    batch rows (unit-pinned, and the gate hashes it): the full-recompute
-    rule is non-iterative ("the larger id of every radius pair drops"),
-    so a batch id's fate depends only on smaller ids — all of which are
-    either indexed or in the batch.
+    precedes every batch id) or an earlier batch code. That makes
+    admission EQUAL to re-running :func:`binary_dedup_survivors` on
+    corpus ∪ batch and keeping the batch rows (unit-pinned and
+    gate-hashed): the drop rule is non-iterative, so a batch id's fate
+    depends only on smaller ids — all indexed or in the batch.
+    ``codec`` is the index's stored codec (:func:`read_binary_band_index`),
+    never one trained on the batch.
 
     Scale shape — per-batch cost ∝ |batch|, NEVER |corpus|: the batch
-    quantizes against the STORED thresholds (one codebook, build and
-    admit), explodes to ≤ |batch| × n_bands key-only band rows, and
-    BROADCASTS into an equi-join on the index's (band_idx, band_val)
-    PARTITION columns — dynamic partition pruning narrows the standing
-    scan to the batch's own band buckets (plan-asserted), so corpus
-    rows are READ ∝ probed-bucket occupancy, and nothing of the corpus
-    is recomputed. Batch-internal pairs come from the in-memory banded
+    quantizes against the STORED thresholds, explodes to ≤ |batch| ×
+    n_bands key-only band rows, and BROADCASTS into an equi-join on the
+    index's (band_idx, band_val) PARTITION columns — dynamic partition
+    pruning narrows the standing scan to the batch's own band buckets
+    (plan-asserted). Batch-internal pairs come from the in-memory banded
     self-join (:func:`binary_hamming_radius_pairs` at the index's
-    width — |batch|² banding, trivially small). Completeness by
-    pigeonhole requires the index width to guarantee ``radius``
-    (validated via :func:`_resolve_band_bits` — more bands than
-    ``radius``); the admitted set is exact, not approximate.
+    width). Completeness by pigeonhole requires the width to guarantee
+    ``radius`` (:func:`_resolve_band_bits`); the admitted set is exact.
 
     Returns the surviving batch ids (one column, ``id_col``)."""
+    codec.check_trained()
+    codec = _binary_codec(codec, new, vec_col)
+    dim = codec.dim
     bb = _resolve_band_bits(dim, radius, band_bits)
     meta = index.schema["band_idx"].metadata if "band_idx" in index.columns else {}
     if meta.get("band_bits") is not None and (
@@ -2811,42 +2813,34 @@ def binary_incremental_admitted(
         # a pigeonhole-VALID width that doesn't match the standing
         # layout would explode the batch into band keys that never
         # align with the index's buckets — near-duplicates would be
-        # silently ADMITTED (r12 review). read_binary_band_index
-        # stamps the layout into the column metadata checked here.
+        # silently ADMITTED. read_binary_band_index stamps the layout
+        # into the column metadata checked here.
         raise ValueError(
             f"binary_incremental_admitted: requested layout (band_bits="
             f"{bb}, dim={dim}) does not match the standing index's "
             f"({meta['band_bits']}, {meta.get('dim')})"
         )
-    n_bands = dim // bb
-    n_words = (dim + BINARY_WORD_BITS - 1) // BINARY_WORD_BITS
-    nb = binary_quantize(new, vec_col, id_col, dim=dim, thresholds=thresholds)
-    probe = _explode_bands(nb, n_bands, bb, "w").select(
+    nb = _packed_words(new, vec_col, [id_col], codec)
+    probe = _explode_bands(nb, dim // bb, bb, "w").select(
         F.col(id_col).alias("__new_id"),
-        *[F.col(f"w{w}").alias(f"__n{w}") for w in range(n_words)],
+        *[F.col(w).alias(f"__n{w[1:]}") for w in codec.columns],
         F.col("__bidx").alias("band_idx"),
         F.col("__bval").alias("band_val"),
     )
     # no distinct() on either rejection stream (or their union): the
     # left_anti join is insensitive to duplicate keys on its right
-    # side, and each dedup was a full extra exchange (r12 review)
+    # side, and each dedup was a full extra exchange
     rej_corpus = (
         index.join(F.broadcast(probe), ["band_idx", "band_val"])
-        .filter(_hamming_expr(n_words, "__n") <= radius)
+        .filter(_hamming_expr(len(codec.columns), "__n") <= radius)
         .select(F.col("__new_id").alias(id_col))
     )
     rej_batch = binary_hamming_radius_pairs(
-        new, radius=radius, dim=dim, band_bits=bb,
-        vec_col=vec_col, id_col=id_col, thresholds=thresholds,
+        new, radius, codec, bb, vec_col, id_col
     ).select(F.col("id_b").alias(id_col))
-    e = F.col(vec_col)
-    clean = new.filter(
-        e.isNotNull()
-        & (F.size(e) == dim)
-        & (F.size(F.filter(e, lambda x: x.isNull())) == 0)
-    )
     return (
-        clean.select(id_col)
+        _valid_vectors(new, vec_col, dim)
+        .select(id_col)
         .join(rej_corpus.unionByName(rej_batch), id_col, "left_anti")
     )
 
@@ -2856,106 +2850,71 @@ def binary_hamming_topk(
     queries: DataFrame,
     k: int = 5,
     rerank_k: int | None = None,
+    codec: Codec | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    dim: int = 64,
-    threshold: str = "mean",
     exclude_self: bool = True,
     index: str = "scan",
     band_bits: int = BINARY_BAND_BITS,
 ) -> DataFrame:
-    """Two-stage binary ANN: Hamming distance over the packed sign/mean
-    bits ranks the corpus per query (ascending ``Σ_w bit_count(cw XOR
-    qw)``, id tiebreak); with ``rerank_k`` set, the top ``rerank_k``
-    Hamming survivors re-rank by EXACT decimal cosine to the final
-    ``k`` — the standard binary-retrieval shape (compressed first pass,
-    exact second pass on a bounded candidate set).
+    """Two-stage binary ANN: Hamming distance over the packed bits of
+    the binary ``codec`` (untrained, the default: corpus
+    :func:`dimension_means` thresholds; queries use the CORPUS
+    thresholds — one codebook) ranks the corpus per query (ascending,
+    id tiebreak); with ``rerank_k`` set, the top ``rerank_k`` survivors
+    re-rank by EXACT decimal cosine to the final ``k``. Output:
+    (query_id_col, id_col, cosine) with ``rerank_k``, else
+    (query_id_col, id_col, hamming); ``rerank_k >= |corpus|``
+    degenerates to exact brute-force cosine top-k (unit-pinned).
 
-    Scale shape: the first pass is a broadcast cross of the nq query
-    words against the corpus WORDS ONLY (8 B/vector at dim=64 — never
-    the float payload), XOR + bit_count map-side, one top-k shuffle of
-    (query, id, hamming) triples. The re-rank joins the ≤ nq·rerank_k
-    candidate ids back to the corpus through a BROADCAST of the
-    candidate side, so the corpus full-width vectors are never
-    shuffled — read once, filtered by the broadcast, scored map-side.
-    ``threshold="mean"`` binarizes against the corpus'
-    :func:`dimension_means` (queries use the CORPUS thresholds — one
-    codebook); ``"zero"`` uses the sign bit.
-
-    Setting ``rerank_k >= |corpus|`` degenerates to exact brute-force
-    cosine top-k (every vector survives the first pass), which is the
-    equivalence the unit test pins. Output: (query_id_col, id_col,
-    cosine) with ``rerank_k``, else (query_id_col, id_col, hamming).
+    Scale shape: the first pass reads the corpus WORDS ONLY (8 B/vector
+    at dim=64 — never the float payload), XOR + bit_count map-side, one
+    top-k shuffle of (query, id, hamming) triples. The re-rank joins the
+    ≤ nq·rerank_k candidate ids back to the corpus through a BROADCAST
+    of the candidate side, so full-width vectors are never shuffled.
 
     ``index`` selects the first pass. ``"scan"`` (default) is the
-    compressed linear scan: a broadcast cross of the query words over
-    the corpus words — the right plan when shortlists are a sizable
-    corpus fraction. ``"banded"`` is the multi-index Hamming path
-    (VERDICT r10 "Next round" #1): candidates come from the banded
-    equi-join of :func:`binary_hamming_radius_pairs`'s discipline, and
-    EXACTNESS against the scan is kept by a per-query verified
-    fallback — a query's banded top-``m`` provably equals the
-    exhaustive top-``m`` iff it has ≥ ``m`` banded candidates at
-    Hamming ≤ ``n_bands − 1`` (every code inside the pigeonhole radius
-    IS in the banded set, so nothing closer can be missing); queries
-    failing that check re-scan exhaustively, IN-PLAN (the check is a
-    per-query aggregate over the candidate stream — no driver
-    branching). Both index settings therefore return IDENTICAL rows —
-    the ``similarity_binary_banded_dup_top1`` gate hashes the banded
-    path against the exhaustive oracle algebra. The banded path earns
-    its keep in the near-duplicate regime (dup/decontamination
-    shortlists, d ≤ 3 at the default 4×16-bit banding), where the
-    first pass touches band-bucket pairs instead of nq×N.
+    compressed linear scan — a broadcast cross of the query words over
+    the corpus words, the right plan when shortlists are a sizable
+    corpus fraction. ``"banded"`` takes candidates from the banded
+    equi-join (:func:`binary_hamming_radius_pairs`'s discipline) and
+    keeps EXACTNESS by a per-query verified fallback: a query's banded
+    top-``m`` provably equals the exhaustive top-``m`` iff it has ≥
+    ``m`` banded candidates at Hamming ≤ ``n_bands − 1`` (every code
+    inside the pigeonhole radius IS in the banded set); queries failing
+    that check re-scan exhaustively, IN-PLAN (a per-query aggregate over
+    the candidate stream — no driver branching). Both settings return
+    IDENTICAL rows; the banded one earns its keep in the near-duplicate
+    regime (d ≤ 3 at the default 4×16-bit banding), where the first pass
+    touches band-bucket pairs instead of nq×N.
 
     Measured quality (tools/bench_binary_r10.json): at the sf0.01 gate
-    fixture (500 vectors, shortlist = 10% of corpus) per-query recall@5
-    spans 0.2-1.0, mean 0.66 — the hash-matched
-    ``similarity_binary_hamming_recall_at_5`` gate; on the sf1
-    cluster-generated fixture 64 mean-threshold bits saturate recall at
-    1.0 even WITHOUT the re-rank (the artifact's interpretation_note
-    explains why walls there are scheduling-bound too). The quantity
-    that scales is the payload: the first pass moves 24 B/vector
-    against 512 B of floats."""
-    if threshold not in ("mean", "zero"):
-        raise ValueError(f"unknown binary threshold: {threshold!r}")
+    fixture (shortlist = 10% of the 500-vector corpus) per-query
+    recall@5 spans 0.2-1.0, mean 0.66; on the sf1 cluster-generated
+    fixture 64 mean-threshold bits saturate recall at 1.0 even without
+    the re-rank."""
     if index not in ("scan", "banded"):
         raise ValueError(f"unknown binary index: {index!r}")
-    thr = (
-        dimension_means(corpus, vec_col=vec_col, dim=dim)
-        if threshold == "mean"
-        else None
-    )
+    if index == "banded":
+        # no guarantee check: the verified per-query fallback keeps the
+        # result exact at ANY valid width
+        band_bits = _resolve_band_bits(
+            (codec or Codec("binary")).dim, None, band_bits
+        )
+    codec = _binary_codec(codec, corpus, vec_col)
     # parallelism is ensured on the PACKED words, not the raw corpus:
     # repartitioning full-width vectors would shuffle the exact payload
     # this operator exists to avoid (the packing itself is a trivial
     # projection that runs fine at scan parallelism; the per-pair
     # Hamming work downstream is what needs the spread). Plan-asserted:
     # no plain Exchange in this plan ever carries the vector column.
-    cb = ensure_parallelism(
-        binary_quantize(corpus, vec_col, id_col, dim=dim, thresholds=thr)
-    )
-    n_words = (dim + BINARY_WORD_BITS - 1) // BINARY_WORD_BITS
-    qb = binary_quantize(
-        queries, vec_col, id_col, dim=dim, thresholds=thr
-    ).select(
-        F.col(id_col).alias(query_id_col),
-        *[F.col(f"w{w}").alias(f"__q{w}") for w in range(n_words)],
-    )
+    cb = ensure_parallelism(_packed_words(corpus, vec_col, [id_col], codec))
+    n_words = len(codec.columns)
+    qb = _query_words(queries, codec, id_col, vec_col, query_id_col)
     m = rerank_k or k
     if index == "banded":
-        # same candidate set as _resolve_band_bits (r11 ADVICE): a width
-        # not dividing the packed word would map bands past the last
-        # word (unresolvable column) and band_bits > 32 would divide by
-        # zero in _explode_bands — raise the contract error instead. No
-        # guarantee check here: the verified per-query fallback keeps
-        # the result exact at ANY valid width.
-        if dim % band_bits != 0 or BINARY_WORD_BITS % band_bits != 0:
-            raise ValueError(
-                f"band_bits={band_bits} must divide both dim={dim} and "
-                f"the {BINARY_WORD_BITS}-bit packed word"
-            )
-        n_bands = dim // band_bits
+        n_bands = codec.dim // band_bits
         cands = _banded_candidates(
             cb, qb, n_words, n_bands, band_bits,
             id_col, query_id_col, exclude_self,
@@ -2989,39 +2948,15 @@ def binary_hamming_topk(
             F.broadcast(flags.filter(~F.col("__ok")).select(query_id_col)),
             query_id_col,
         )
-        fb_scored = (
-            cb.crossJoin(F.broadcast(fb_qb))
-            .filter(
-                F.col(query_id_col) != F.col(id_col)
-                if exclude_self
-                else F.lit(True)
-            )
-            .select(
-                query_id_col, id_col, _hamming_expr(n_words).alias("hamming")
-            )
-        )
-        fb_topm = top_k_per_group(
-            fb_scored, [query_id_col], "hamming", m,
-            descending=False, tiebreak=[id_col],
+        fb_topm = _hamming_scan_topm(
+            cb, fb_qb, m, n_words, id_col, query_id_col, exclude_self
         )
         first = banded_part.select(
             query_id_col, id_col, "hamming"
         ).unionByName(fb_topm.select(query_id_col, id_col, "hamming"))
     else:
-        scored = (
-            cb.crossJoin(F.broadcast(qb))
-            .filter(
-                F.col(query_id_col) != F.col(id_col)
-                if exclude_self
-                else F.lit(True)
-            )
-            .select(
-                query_id_col, id_col, _hamming_expr(n_words).alias("hamming")
-            )
-        )
-        first = top_k_per_group(
-            scored, [query_id_col], "hamming", m,
-            descending=False, tiebreak=[id_col],
+        first = _hamming_scan_topm(
+            cb, qb, m, n_words, id_col, query_id_col, exclude_self
         )
     if rerank_k is None:
         return first
@@ -3051,27 +2986,8 @@ def l2_topk(
     PQ/ADC recall. ||q−x||² = |q|² + |x|² − 2·q·x reuses the precomputed
     norms and the decimal-exact dot — identical IEEE arithmetic to the
     oracle's restatement, and still map-side over the broadcast queries."""
-    q = with_norm(
-        queries.select(
-            F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qvec")
-        ),
-        "__qvec",
-        "__qnrm",
-    )
-    cond = F.col(query_id_col) != F.col(id_col) if exclude_self else F.lit(True)
-    scored = (
-        with_norm(ensure_parallelism(corpus), vec_col)
-        .join(F.broadcast(q), cond)
-        .withColumn(
-            "d2",
-            F.col("__qnrm") * F.col("__qnrm")
-            + F.col("nrm") * F.col("nrm")
-            - 2 * dot(F.col("__qvec"), F.col(vec_col)),
-        )
-        .select(query_id_col, id_col, "d2")
-    )
-    return top_k_per_group(
-        scored, [query_id_col], "d2", k, descending=False, tiebreak=[id_col]
+    return _exact_topk(
+        corpus, queries, k, "d2", id_col, vec_col, query_id_col, exclude_self
     )
 
 
@@ -3626,7 +3542,7 @@ def pq_refine_codebooks(
     oracle's restatement. The collect is m·k·(dim/m) doubles.
 
     Returns codebooks in the :func:`pq_codebooks` format, so
-    :func:`pq_encode` / :func:`pq_adc_topk` consume them unchanged."""
+    :func:`pq_encode` and :func:`build_ivf_index` consume them unchanged."""
     sub = dim // m
     books = codebooks
     for _ in range(iters):
@@ -3679,6 +3595,19 @@ def pq_refine_codebooks(
     return books
 
 
+def _code_rows(codes: DataFrame, m: int, head: list[str]) -> DataFrame:
+    """One (head..., s, code) row per subspace code of a pq-coded frame
+    (``code_0..code_{m-1}``) — a map-side explode of a literal-struct
+    array, key-only."""
+    entries = [
+        F.struct(F.lit(s).alias("s"), F.col(f"code_{s}").alias("code"))
+        for s in range(m)
+    ]
+    return codes.select(*head, F.explode(F.array(*entries)).alias("__c")).select(
+        *head, "__c.s", "__c.code"
+    )
+
+
 def pq_code_census(
     codes: DataFrame, m: int = 4, id_col: str = "vec_id"
 ) -> DataFrame:
@@ -3702,19 +3631,7 @@ def pq_code_census(
     (s, code) key-only rows, partial-agg counts, two tiny exchanges
     (≤ m×n_codes rows) — safe to run on the full corpus at any
     scale."""
-    pairs = codes.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("s"), F.col(f"code_{s}").alias("code")
-                    )
-                    for s in range(m)
-                ]
-            )
-        ).alias("__c")
-    ).select(F.col("__c.s").alias("s"), F.col("__c.code").alias("code"))
-    counts = pairs.groupBy("s", "code").agg(
+    counts = _code_rows(codes, m, []).groupBy("s", "code").agg(
         F.count(F.lit(1)).alias("__n")
     )
     return (
@@ -3727,77 +3644,6 @@ def pq_code_census(
             ).alias("top_code_share"),
         )
         .orderBy("s")
-    )
-
-
-def pq_adc_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    m: int = 4,
-    n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    dim: int = 64,
-    exclude_self: bool = True,
-    refine_iters: int = 0,
-) -> DataFrame:
-    """Asymmetric-distance PQ top-k: the corpus is scanned as codes only
-    (m ints/vector), each query precomputes an m×n_codes lookup table of
-    exact subspace distances, and the approximate distance is the sum of
-    m table lookups — the classic ADC scheme (Jégou et al., PQ for
-    nearest neighbor search; public method). Physical shape at 100 TB:
-    codes shuffle once exploded to (id, s, code); the LUT (Q×m×n_codes
-    rows) broadcasts; the per-pair distance is a 4-term decimal-exact sum
-    — no raw vectors move after encoding.
-
-    ``refine_iters`` Lloyd-refines the sampling-init codebooks per
-    subspace before encoding (:func:`pq_refine_codebooks` — one
-    distributed assign→mean pass each): the production codebook-quality
-    knob the sampling init always under-delivers on; the gate runs at
-    1, and the sf1 hard-fixture census pairs refined vs sampling-init
-    recall (tools/bench_pq_r12.py).
-
-    KNOWN REGIME LIMIT (measured census): on dup-heavy corpora, refinement
-    collapses copy blocks to tied codes and recall craters (0.04 →
-    0.008 on the hard fixture) with every hash green — run
-    :func:`pq_code_census` on the encode output and, if any
-    subspace's ``top_code_share`` nears 1.0, route to the
-    binary/Hamming family or dedup the corpus before training."""
-    books = pq_codebooks(corpus, m, n_codes, id_col, vec_col, dim)
-    if refine_iters:
-        books = pq_refine_codebooks(
-            corpus, books, m, id_col, vec_col, dim, iters=refine_iters
-        )
-    codes = pq_encode(
-        ensure_parallelism(corpus), books, m, id_col, vec_col, dim
-    )
-    q = queries.select(
-        F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qvec")
-    )
-    lut = _pq_lut(q, books, m, dim, query_id_col)
-    code_rows = codes.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(s).alias("s"), F.col(f"code_{s}").alias("code"))
-                    for s in range(m)
-                ]
-            )
-        ).alias("__c"),
-    ).select(id_col, F.col("__c.s").alias("s"), F.col("__c.code").alias("code"))
-    scored = (
-        code_rows.join(F.broadcast(lut), ["s", "code"])
-        .filter(
-            F.col(query_id_col) != F.col(id_col) if exclude_self else F.lit(True)
-        )
-        .groupBy(query_id_col, id_col)
-        .agg(F.sum(F.col("dist").cast(DEC)).cast("double").alias("adc_dist"))
-    )
-    return top_k_per_group(
-        scored, [query_id_col], "adc_dist", k, descending=False, tiebreak=[id_col]
     )
 
 

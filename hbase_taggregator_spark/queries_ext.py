@@ -3206,10 +3206,15 @@ def _q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     LUT, ADC ranking, exact-L2 ground truth — so PQ is hash-gated end
     to end (r12: re-gated with the refined codebooks per VERDICT r11
     #4; refined-vs-init recall censused at the sf1 hard fixture in
-    tools/bench_pq_r12.json)."""
+    tools/bench_pq_r12.json). The search is the IVF index's pq pass over
+    ONE cell, so every query probes every corpus code."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    pq = S.pq_adc_topk(emb, queries, k=5, m=4, n_codes=16, refine_iters=1)
+    one_cell = S.coarse_quantizer(S.seed_centroids(emb, 1))
+    index, codec = S.build_ivf_index(
+        emb, one_cell, S.Codec("pq", m=4, n_codes=16, refine_iters=1)
+    )
+    pq = S.ivf_search(index, queries, one_cell, codec, k=5, n_probe=1)
     exact = S.l2_topk(emb, queries, k=5).select("query_id", "vec_id")
     hits = (
         exact.join(pq.select("query_id", "vec_id"),

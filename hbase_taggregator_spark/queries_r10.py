@@ -172,7 +172,7 @@ def _q_binary_hamming_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     approx = binary_hamming_topk(
-        emb, queries, k=RECALL_K, rerank_k=BINARY_RERANK_K, threshold="mean"
+        emb, queries, k=RECALL_K, rerank_k=BINARY_RERANK_K
     )
     return _recall_vs_exact(emb, queries, approx, k=RECALL_K)
 

@@ -84,7 +84,7 @@ def _q_banded_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return binary_hamming_radius_pairs(
-        emb, radius=BANDED_RADIUS, band_bits=4, threshold="mean"
+        emb, radius=BANDED_RADIUS, band_bits=4
     ).orderBy("id_a", "id_b")
 
 
@@ -117,7 +117,7 @@ def _q_binary_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return binary_dedup_survivors(
-        emb, radius=BANDED_RADIUS, band_bits=4, threshold="mean"
+        emb, radius=BANDED_RADIUS, band_bits=4
     ).orderBy("vec_id")
 
 
@@ -160,7 +160,7 @@ def _q_banded_dup_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     queries = emb.filter(F.col("vec_id") < 10)
     return binary_hamming_topk(
-        dup, queries, k=1, threshold="mean", index="banded"
+        dup, queries, k=1, index="banded"
     ).orderBy("query_id")
 
 

@@ -158,9 +158,9 @@ def _binary_admitted_frame(
     write_binary_band_index(
         corpus, f"{workdir}/bands", band_bits=ADMIT_BAND_BITS
     )
-    idx, thr, bb, dim = read_binary_band_index(spark, f"{workdir}/bands")
+    idx, codec, bb = read_binary_band_index(spark, f"{workdir}/bands")
     return binary_incremental_admitted(
-        idx, batch, thr, radius=ADMIT_RADIUS, dim=dim, band_bits=bb
+        idx, batch, codec, radius=ADMIT_RADIUS, band_bits=bb
     ).orderBy("vec_id")
 
 

@@ -28,6 +28,8 @@ import json
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from hbase_taggregator_spark.sources.rowkey import bytes_to_int
+
 HBASE_FORMAT = "org.apache.hadoop.hbase.spark"
 
 #: schema of the cell-level fixture input to :func:`load_hbase_fixture` —
@@ -81,11 +83,7 @@ def _cell_decode(value: Column, typ: str) -> Column:
     if typ == "string":
         return decode_value(value, "utf8")
     if typ == "int":
-        # 4-byte big-endian signed int32 (Bytes.toInt)
-        raw = F.conv(F.hex(value), 16, 10).cast("long")
-        return (
-            F.when(raw >= 0x80000000, raw - 0x100000000).otherwise(raw)
-        ).cast("int")
+        return bytes_to_int(value).cast("int")
     raise ValueError(
         f"unsupported catalog type {typ!r}; have binary/bigint/double/string/int"
     )

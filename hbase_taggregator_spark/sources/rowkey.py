@@ -31,6 +31,17 @@ def mask_span(mask: str) -> tuple[int, int]:
     return first, last - first + 1
 
 
+def bytes_to_int(span: Column, length: int = 4) -> Column:
+    """HBase ``Bytes.toInt`` of a big-endian byte span, as a long: the
+    span's bytes fill the HIGH-order positions of the 4-byte int32 (a
+    ``length < 4`` span zero-pads on the right, i.e. shifts left), then
+    the int32 sign wraps."""
+    raw = F.conv(F.hex(span), 16, 10).cast("long")
+    if length < 4:
+        raw = raw * F.lit(256 ** (4 - length)).cast("long")
+    return F.when(raw >= INT32_SIGN, raw - INT32_WRAP).otherwise(raw)
+
+
 def rowkey_seconds(rowkey: Column | str, mask: str) -> Column:
     """Decode embedded big-endian int32 epoch-seconds from a binary rowkey.
 
@@ -47,12 +58,9 @@ def rowkey_seconds(rowkey: Column | str, mask: str) -> Column:
             f"mask '1'-span is {length} bytes; the reference decodes exactly "
             "a 4-byte int32 (AggregationBuilder.java:109-115)"
         )
-    raw = F.conv(F.hex(F.substring(key, off + 1, length)), 16, 10).cast("long")
     # the reference copies span bytes into the HIGH-order positions of a
     # 4-byte buffer, so a short span is left-shifted into the int32 top bytes
-    if length < 4:
-        raw = raw * F.lit(256 ** (4 - length)).cast("long")
-    signed = F.when(raw >= INT32_SIGN, raw - INT32_WRAP).otherwise(raw)
+    signed = bytes_to_int(F.substring(key, off + 1, length), length)
     return F.when(F.length(key) == len(mask), signed).otherwise(F.lit(0))
 
 

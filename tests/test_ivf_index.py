@@ -8,7 +8,11 @@
   codec's words or codes;
 - a residual codec cannot be searched without exactly its cell means;
 - a prebuilt two-level quantizer must carry exactly the dials an entry
-  point is given.
+  point is given;
+- the binary band index persists its codec through the IVF index's
+  sidecars, and an append to either index passes one check before the
+  first byte is written: no standing index, or a trained codebook that
+  differs from the stored one, raises.
 """
 
 from __future__ import annotations
@@ -164,3 +168,64 @@ def test_two_level_dials_must_equal_the_quantizers(spark):
         emb, cents, n_super=10, n_super_probe=4, shared=quant
     )
     assert 0 < got.count() <= emb.count()
+
+
+def test_band_index_persists_its_codec_in_the_ivf_sidecars(spark, tmp_path):
+    """The band index's stored codec reads back through the IVF index's
+    codec reader, exactly as written."""
+    from hbase_taggregator_spark.operators import similarity as S
+
+    emb = _emb(spark)
+    path = str(tmp_path / "bands")
+    S.write_binary_band_index(emb, path, band_bits=4)
+    _, codec, band_bits = S.read_binary_band_index(spark, path)
+    assert band_bits == 4
+    assert codec.kind == "binary" and codec.dim == 64
+    assert codec.thresholds == S.dimension_means(emb)
+    assert S._read_codec(spark, path).thresholds == codec.thresholds
+
+
+def test_append_without_a_standing_band_index_raises(spark, tmp_path):
+    """An append to a path holding no band index is a missing build: it
+    raises ValueError (as write_ivf_index does) before writing anything,
+    instead of failing inside Spark on the absent layout sidecar."""
+    import os
+
+    from hbase_taggregator_spark.operators import similarity as S
+
+    emb = _emb(spark)
+    path = str(tmp_path / "nothing_here")
+    with pytest.raises(ValueError, match="no standing index"):
+        S.write_binary_band_index(emb, path, band_bits=4, mode="append")
+    assert not os.path.exists(path)
+
+
+def test_append_rejects_a_divergent_trained_codebook(spark, tmp_path):
+    """A trained codec given to an append must equal the stored one:
+    other thresholds (band index) or other books (pq IVF index) raise
+    and leave the standing index untouched; the stored codec itself
+    passes."""
+    from hbase_taggregator_spark.operators import similarity as S
+
+    emb = _emb(spark)
+    a = emb.filter(F.col("vec_id") < 300)
+    b = emb.filter(F.col("vec_id") >= 300)
+    bands = str(tmp_path / "bands")
+    S.write_binary_band_index(a, bands, band_bits=4)
+    _, stored, _ = S.read_binary_band_index(spark, bands)
+    sign = S.Codec("binary", thresholds=[0.0] * 64)
+    with pytest.raises(ValueError, match="differs from the standing"):
+        S.write_binary_band_index(b, bands, sign, band_bits=4, mode="append")
+    n0 = spark.read.parquet(bands).count()
+    S.write_binary_band_index(b, bands, stored, band_bits=4, mode="append")
+    assert spark.read.parquet(bands).count() == n0 + b.count() * 16
+
+    quant = S.coarse_quantizer(S.seed_centroids(emb, 16))
+    ivf = str(tmp_path / "pq")
+    books = S.write_ivf_index(a, quant, ivf, S.Codec("pq")).books
+    moved = [(s, code, [v + 1.0 for v in vals]) for s, code, vals in books]
+    with pytest.raises(ValueError, match="differs from the standing"):
+        S.write_ivf_index(
+            b, quant, ivf, S.Codec("pq", books=moved), mode="append"
+        )
+    assert S.read_ivf_index(spark, ivf)[0].count() == a.count()

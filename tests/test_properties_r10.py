@@ -78,7 +78,8 @@ def test_hamming_shortlist_matches_python_under_random_vectors(
     queries = emb.filter(F.col("vec_id") < 2)
     got = {}
     for r in S.binary_hamming_topk(
-        emb, queries, k=rerank_k, rerank_k=None, dim=dim, threshold="zero"
+        emb, queries, k=rerank_k, rerank_k=None,
+        codec=S.Codec("binary", dim=dim, thresholds=[0.0] * dim),
     ).collect():
         got.setdefault(r["query_id"], []).append((r["vec_id"], r["hamming"]))
     for v in got.values():

@@ -185,8 +185,8 @@ def test_twolevel_recall_gate_shape(spark):
 
 
 def test_binary_quantize_matches_python_reference(spark):
-    """Packed words equal a pure-Python bit-pack under both threshold
-    modes — one flipped bit anywhere fails."""
+    """Packed words equal a pure-Python bit-pack under sign and mean
+    thresholds — one flipped bit anywhere fails."""
     from hbase_taggregator_spark.operators import similarity as S
 
     dim = 40  # spans two words, second one partial
@@ -218,7 +218,7 @@ def test_binary_hamming_full_rerank_equals_exact_cosine_topk(spark):
     binq = sorted(
         (r["query_id"], r["vec_id"])
         for r in S.binary_hamming_topk(
-            emb, queries, k=3, rerank_k=40, dim=8, threshold="mean"
+            emb, queries, k=3, rerank_k=40, codec=S.Codec("binary", dim=8)
         ).collect()
     )
     exact = sorted(
@@ -270,8 +270,8 @@ def test_binary_quantize_validates_inputs(spark):
     emb = _toy_vectors(spark, n=5, dim=8)
     with pytest.raises(ValueError, match="thresholds"):
         S.binary_quantize(emb, dim=8, thresholds=[0.0] * 4)
-    with pytest.raises(ValueError, match="threshold"):
-        S.binary_hamming_topk(emb, emb.limit(1), threshold="median")
+    with pytest.raises(ValueError, match="binary codec"):
+        S.binary_hamming_topk(emb, emb.limit(1), codec=S.Codec("pq", dim=8))
     empty = emb.filter(F.col("vec_id") < 0)
     with pytest.raises(ValueError, match="dimension_means"):
         S.dimension_means(empty, dim=8)

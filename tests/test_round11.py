@@ -72,7 +72,8 @@ def test_banded_radius_pairs_equal_exhaustive(spark):
         )
         got = _rows(
             S.binary_hamming_radius_pairs(
-                emb, radius=radius, band_bits=band_bits, thresholds=thr
+                emb, radius=radius, band_bits=band_bits,
+                codec=S.Codec("binary", thresholds=thr),
             ),
             "id_a", "id_b", "hamming",
         )

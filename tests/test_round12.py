@@ -1,7 +1,7 @@
 """Round-12 regression tests (VERDICT r11 "Next round" + r11 ADVICE):
 
-- r11 ADVICE guards: ``binary_hamming_radius_pairs`` raises on an
-  unknown threshold string (no silent zero-codebook fallthrough);
+- r11 ADVICE guards: the binary family refuses a codec of another
+  kind (no silent fallthrough to some other codebook);
   ``binary_hamming_topk(index="banded")`` raises the contract error on
   band widths that don't divide the packed word (no ZeroDivisionError /
   unresolvable-column crash); ``read_ivf_index`` returns ``cent_id`` at
@@ -43,23 +43,21 @@ def _cents(emb, n=16):
 # --- r11 ADVICE guards -------------------------------------------------------
 
 
-def test_radius_pairs_rejects_unknown_threshold(spark):
-    """A typo like threshold='means' must raise, not silently quantize
-    against the zero codebook (binary_hamming_topk already raised;
-    radius_pairs and dedup_survivors now share the guard)."""
+def test_binary_family_rejects_non_binary_codec(spark):
+    """A codec of another kind must raise, not silently quantize
+    against some other codebook (radius_pairs, dedup_survivors and the
+    top-k share the one guard in their codec resolution)."""
     from hbase_taggregator_spark.operators import similarity as S
 
     emb = _emb(spark)
-    with pytest.raises(ValueError, match="unknown binary threshold"):
-        S.binary_hamming_radius_pairs(emb, radius=3, threshold="means")
-    with pytest.raises(ValueError, match="unknown binary threshold"):
-        S.binary_dedup_survivors(emb, radius=3, threshold="MEAN")
-    # explicit thresholds bypass the mode string entirely — still valid
-    thr = [0.0] * 64
+    with pytest.raises(ValueError, match="needs a binary codec"):
+        S.binary_hamming_radius_pairs(emb, radius=3, codec=S.Codec("pq"))
+    with pytest.raises(ValueError, match="needs a binary codec"):
+        S.binary_dedup_survivors(emb, radius=3, codec=S.Codec())
+    # a trained binary codec (sign bits) is used as given — still valid
+    sign = S.Codec("binary", thresholds=[0.0] * 64)
     assert (
-        S.binary_hamming_radius_pairs(
-            emb, radius=3, threshold="whatever", thresholds=thr
-        ).columns
+        S.binary_hamming_radius_pairs(emb, radius=3, codec=sign).columns
         == ["id_a", "id_b", "hamming"]
     )
 
@@ -160,11 +158,11 @@ def test_binary_admission_equals_full_recompute(spark, tmp_path):
         batch = emb.filter(F.col("vec_id") >= split)
         path = str(tmp_path / f"bands{split}")
         S.write_binary_band_index(corpus, path, band_bits=4)
-        idx, thr, bb, dim = S.read_binary_band_index(spark, path)
-        assert (bb, dim, len(thr)) == (4, 64, 64)
+        idx, codec, bb = S.read_binary_band_index(spark, path)
+        assert (bb, codec.dim, len(codec.thresholds)) == (4, 64, 64)
         got = _rows(
             S.binary_incremental_admitted(
-                idx, batch, thr, radius=15, dim=dim, band_bits=bb
+                idx, batch, codec, radius=15, band_bits=bb
             ),
             "vec_id",
         )
@@ -172,7 +170,7 @@ def test_binary_admission_equals_full_recompute(spark, tmp_path):
             r
             for r in _rows(
                 S.binary_dedup_survivors(
-                    emb, radius=15, band_bits=4, thresholds=thr
+                    emb, radius=15, codec=codec, band_bits=4
                 ),
                 "vec_id",
             )
@@ -193,19 +191,19 @@ def test_binary_admission_prunes_and_validates(spark, tmp_path):
     batch = emb.filter(F.col("vec_id") >= 400)
     path = str(tmp_path / "bands")
     S.write_binary_band_index(corpus, path, band_bits=4)
-    idx, thr, bb, dim = S.read_binary_band_index(spark, path)
+    idx, codec, bb = S.read_binary_band_index(spark, path)
     plan = (
-        S.binary_incremental_admitted(idx, batch, thr, radius=15,
+        S.binary_incremental_admitted(idx, batch, codec, radius=15,
                                       band_bits=bb)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "dynamicpruning" in plan and "Python" not in plan
     # 16-bit bands (4 bands) cannot guarantee radius 15
     with pytest.raises(ValueError, match="pigeonhole"):
-        S.binary_incremental_admitted(idx, batch, thr, radius=15,
+        S.binary_incremental_admitted(idx, batch, codec, radius=15,
                                       band_bits=16)
-    with pytest.raises(ValueError, match="unknown binary threshold"):
-        S.write_binary_band_index(corpus, path, threshold="means")
+    with pytest.raises(ValueError, match="needs a binary codec"):
+        S.write_binary_band_index(corpus, path, S.Codec("pq"))
 
 
 def test_binary_band_index_append_grows_in_place(spark, tmp_path):
@@ -220,14 +218,15 @@ def test_binary_band_index_append_grows_in_place(spark, tmp_path):
     full_path = str(tmp_path / "full")
     incr_path = str(tmp_path / "incr")
     thr = S.dimension_means(corpus)
-    S.write_binary_band_index(emb, full_path, band_bits=4, thresholds=thr)
-    S.write_binary_band_index(corpus, incr_path, band_bits=4, thresholds=thr)
+    codec = S.Codec("binary", thresholds=thr)
+    S.write_binary_band_index(emb, full_path, codec, band_bits=4)
+    S.write_binary_band_index(corpus, incr_path, codec, band_bits=4)
     S.write_binary_band_index(
-        batch, incr_path, band_bits=4, thresholds=thr, mode="append"
+        batch, incr_path, codec, band_bits=4, mode="append"
     )
-    f, thr_f, _, _ = S.read_binary_band_index(spark, full_path)
-    i, thr_i, _, _ = S.read_binary_band_index(spark, incr_path)
-    assert thr_f == thr_i == thr
+    f, codec_f, _ = S.read_binary_band_index(spark, full_path)
+    i, codec_i, _ = S.read_binary_band_index(spark, incr_path)
+    assert codec_f.thresholds == codec_i.thresholds == thr
     cols = ["vec_id", "w0", "w1", "band_idx", "band_val"]
     assert _rows(i, *cols) == _rows(f, *cols)
 
@@ -264,27 +263,33 @@ def test_pq_refine_structure_and_empty_cluster_carryover(spark):
 
 
 def test_pq_adc_refine_iters_zero_is_the_sampling_init_path(spark):
-    """refine_iters=0 must be byte-identical to the pre-r12 behavior
-    (the sampling-init books drive encode and LUT directly)."""
+    """A pq codec with refine_iters=0 (the default) trains exactly the
+    sampling-init books, which drive encode and LUT directly; one
+    Lloyd pass changes the ranking. Searched over one cell, so the ADC
+    pass scores every corpus code."""
     from hbase_taggregator_spark.operators import similarity as S
 
     emb = _emb(spark)
     q = emb.filter(F.col("vec_id") < 3)
-    a = _rows(
-        S.pq_adc_topk(emb, q, k=5, m=4, n_codes=16),
-        "query_id", "vec_id", "adc_dist",
-    )
-    b = _rows(
-        S.pq_adc_topk(emb, q, k=5, m=4, n_codes=16, refine_iters=0),
-        "query_id", "vec_id", "adc_dist",
-    )
+    one_cell = S.coarse_quantizer(S.seed_centroids(emb, 1))
+
+    def search(**dials):
+        index, codec = S.build_ivf_index(
+            emb, one_cell, S.Codec("pq", m=4, n_codes=16, **dials)
+        )
+        rows = _rows(
+            S.ivf_search(index, q, one_cell, codec, k=5, n_probe=1),
+            "query_id", "vec_id", "adc_dist",
+        )
+        return rows, codec.books
+
+    a, books_a = search()
+    b, books_b = search(refine_iters=0)
     assert a == b and len(a) == 15
+    assert books_a == books_b == S.pq_codebooks(emb, m=4, k=16)
     # refined books change the ranking on the real fixture (the
     # refinement is not a no-op) while keeping the output shape
-    c = _rows(
-        S.pq_adc_topk(emb, q, k=5, m=4, n_codes=16, refine_iters=1),
-        "query_id", "vec_id", "adc_dist",
-    )
+    c, _ = search(refine_iters=1)
     assert len(c) == 15 and c != a
 
 
@@ -293,11 +298,10 @@ def test_pq_adc_refine_iters_zero_is_the_sampling_init_path(spark):
 
 def test_ivf_pq_degenerates_to_pq_adc_when_probing_everything(spark):
     """n_probe == n_centroids probes every cell, so the cell
-    restriction admits ALL (query, id) pairs and the composed stack
-    must rank exactly like plain pq_adc_topk over the same books —
-    the ivf_binary→binary degeneracy pin applied to the PQ axis."""
-    from hbase_taggregator_spark.operators import similarity as S
-
+    restriction admits ALL (query, id) pairs and the 8-cell search must
+    rank exactly like the plain PQ ADC scan — the one-cell index, over
+    the same books (the books train on the corpus, not the cells) — the
+    ivf_binary→binary degeneracy pin applied to the PQ axis."""
     emb = _emb(spark)
     q = emb.filter(F.col("vec_id") < 4)
     got = _rows(
@@ -305,7 +309,7 @@ def test_ivf_pq_degenerates_to_pq_adc_when_probing_everything(spark):
         "query_id", "vec_id", "adc_dist",
     )
     want = _rows(
-        S.pq_adc_topk(emb, q, k=5, m=4, n_codes=16),
+        ivf_pq(emb, q, k=5, m=4, n_codes=16, n_centroids=1, n_probe=1),
         "query_id", "vec_id", "adc_dist",
     )
     assert got == want and len(got) == 20
@@ -432,14 +436,15 @@ def test_band_index_append_contract_and_admission_layout_guard(
     batch = emb.filter(F.col("vec_id") >= 400)
     path = str(tmp_path / "bands")
     S.write_binary_band_index(corpus, path, band_bits=4)
-    idx, thr, bb, dim = S.read_binary_band_index(spark, path)
-    # append without thresholds: stored codebook applies (equal to the
-    # explicit-stored-thresholds append pinned in the earlier test)
+    idx, codec, bb = S.read_binary_band_index(spark, path)
+    # append with an untrained codec: the stored codebook applies (equal
+    # to the explicit-stored-thresholds append pinned in the earlier test)
     S.write_binary_band_index(batch, path, band_bits=4, mode="append")
-    idx2, thr2, _, _ = S.read_binary_band_index(spark, path)
-    assert thr2 == thr and idx2.count() == idx.count() + batch.count() * 16
+    idx2, codec2, _ = S.read_binary_band_index(spark, path)
+    assert codec2.thresholds == codec.thresholds
+    assert idx2.count() == idx.count() + batch.count() * 16
     with pytest.raises(ValueError, match="layout"):
         S.write_binary_band_index(batch, path, band_bits=8, mode="append")
     with pytest.raises(ValueError, match="does not match the standing"):
-        S.binary_incremental_admitted(idx, batch, thr, radius=15,
+        S.binary_incremental_admitted(idx, batch, codec, radius=15,
                                       band_bits=2)

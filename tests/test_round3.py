@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import ivf_pq
 from hbase_taggregator_spark import plans as P
 from hbase_taggregator_spark.functions.decoders import (
     scaled_decimal_decoder,
@@ -319,10 +320,11 @@ def test_pq_encode_is_one_partial_aggregation(spark):
 
 def test_pq_adc_reasonable_recall(spark):
     """ADC ranking over 4 codes must beat random: recall@5 vs exact L2 on
-    the fixture well above the ~5/N chance level."""
+    the fixture well above the ~5/N chance level. One cell probed by
+    every query: the pq pass scores every corpus code."""
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 10)
-    pq = S.pq_adc_topk(emb, queries, k=5)
+    pq = ivf_pq(emb, queries, k=5, n_centroids=1, n_probe=1)
     exact = S.l2_topk(emb, queries, k=5).select("query_id", "vec_id")
     hits = exact.join(
         pq.select("query_id", "vec_id"), ["query_id", "vec_id"], "left_semi"
