@@ -3,8 +3,8 @@
 ``entry(spark)`` smoke-runs the flagship query at sf0.001; ``queries()``
 exposes every implemented operator from SURVEY.md §2 as
 (spark, sf_dir) → DataFrame; ``oracle_sql()`` gives the DuckDB-equivalent
-SQL per query. All implementations live in
-:mod:`hbase_taggregator_spark.queries`.
+SQL per query. The implementations live in the catalog package,
+:mod:`hbase_taggregator_spark.catalog`, one module per domain.
 """
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from hbase_taggregator_spark.queries import ORACLES, QUERIES  # noqa: E402
+from hbase_taggregator_spark.catalog import ORACLES, QUERIES  # noqa: E402
 from hbase_taggregator_spark.session import configure  # noqa: E402
 
 

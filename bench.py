@@ -6,12 +6,10 @@ The printed line is deliberately COMPACT (suite totals + the slowest five
 queries + a pointer): every prior round's driver artifact ended up with
 "parsed": null because the full 136-query line outgrew the driver's tail
 capture. The complete per-query dict (sf0.1 + sf1 + ratios + run counts)
-is written by this script itself to $SPARK_GRAFT_BENCH_OUT. The DEFAULT
-is the gitignored tools/bench_local_r15_driver.json so a driver regen
-never overwrites the round's committed artifact (VERDICT r14 #2 — the
-r13 per-round-filename fix still collided when the driver re-ran the
-SAME round); the committed run sets SPARK_GRAFT_BENCH_OUT explicitly to
-tools/bench_local_r15.json.
+is written by this script itself to $SPARK_GRAFT_BENCH_OUT. The default
+is the gitignored tools/bench_local_r16_driver_c<cpus>.json (one file
+per core count), so a re-run never overwrites a committed artifact; set
+SPARK_GRAFT_BENCH_OUT to keep a run elsewhere.
 
 Each query is forced end-to-end with the noop sink (full computation, no
 driver collect — the number measures the distributed plan, not result
@@ -30,7 +28,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from hbase_taggregator_spark.queries import QUERIES  # noqa: E402
+from hbase_taggregator_spark.catalog import QUERIES  # noqa: E402
 from hbase_taggregator_spark.session import get_spark  # noqa: E402
 
 #: queries timed by the driver each round; extend as operators land
@@ -339,12 +337,12 @@ SF1_SUBSET = [
     # below uses the same matched setup), so the md5 oracle contract
     # costs ~11% of funnel wall at this shape; banding+self-join 1.8s,
     # verify+anti-join 1.6s. r6 adds a SECOND decade of evidence
-    # (tools/bench_scale_r6.json, sf1→sf10): candidate pairs grow 104×
+    # (bench_scale_r6.json in git history, sf1→sf10): candidate pairs grow 104×
     # by fixture construction while funnel wall grows 12.7× —
     # ~candidates^0.55, i.e. sub-linear in the quantity that bounds the
     # shuffle. (Semdedup's r6 23.8× point predates the r7 Arrow
     # assignment; its current decade evidence lives in
-    # tools/bench_scale_r7.json.)
+    # bench_scale_r7.json in git history.)
     "dedup_funnel_survivors",
     "text_repetition_features",
     "similarity_lsh_neardup_pairs",
@@ -367,7 +365,7 @@ SF1_SUBSET = [
     # adaptive-nlist SemDeDup (isqrt(N) centroids, O(N^1.5 d) total) plus
     # the r7 production cell-capped sizing (nlist = N//100, pair work
     # LINEAR in N) — decade evidence with a measured in-cell pair census
-    # in tools/bench_scale_r7.json: cellcap pairs grow ~9.3x per decade,
+    # in bench_scale_r7.json (git history): cellcap pairs grow ~9.3x per decade,
     # wall ~9.1x; isqrt pairs grow 33.7x. Both ride ivf_assign's Arrow
     # ranking at sf1+ centroid counts (expr path below 128 centroids).
     "semdedup_survivors",
@@ -563,11 +561,11 @@ def main() -> None:
         # VERDICT r7 "What's wrong" #2: in-suite numbers carry suite
         # ordering + ambient (~10%) drift; for graph_pagerank_suppliers
         # the CANONICAL operator timing is the isolated alternating
-        # min-of-5 A/B (tools/ab_pagerank_r7b.py: 4.0 s at sf0.1) — cite
+        # min-of-5 A/B (ab_pagerank_r7b.py in git history: 4.0 s at sf0.1) — cite
         # that, not this dict, when quoting the operator
         "notes": {
             "graph_pagerank_suppliers": "in-suite; canonical isolated A/B"
-            " = tools/ab_pagerank_r7b.py (4.0s sf0.1 min-of-5)",
+            " = ab_pagerank_r7b.py in git history (4.0s sf0.1 min-of-5)",
             # the re-warm is a methodology difference: these queries are
             # not comparable to suites timed without it
             **{

@@ -335,7 +335,7 @@ def dedup_funnel(
     — same candidates up to hash-family noise, identical verify rule.
     Gate queries keep the md5 oracle contract.
 
-    Census-paired scale evidence (r10, ``tools/bench_funnel_r10.json``):
+    Census-paired scale evidence (r10, ``bench_funnel_r10.json`` in git history):
     per-stage bound quantities next to min-of-N walls at sf1 AND sf10
     (the two-level decade discipline). At the gate parameters with the
     xxhash64 production path: docs ×10 grows candidate pairs ×104.5

@@ -72,7 +72,7 @@ def pagerank(
     scale (alternating min-of-5 A/B at sf0.1, full gate query through
     the noop sink: checkpoint-only 4.0 s vs checkpoint+2 persists
     4.3 s, with every warm checkpoint-only run at or below its
-    counterpart — tools/ab_pagerank_r7b.py). The checkpoint trade-off
+    counterpart — ab_pagerank_r7b.py in git history). The checkpoint trade-off
     (shared with ``duplicate_components``): local checkpoints are
     unreplicated, so on a multi-executor cluster a lost executor fails
     the job instead of recomputing — acceptable for a short
@@ -90,7 +90,7 @@ def pagerank(
     identical checkpoint-rooted subtrees per iteration — the planner's
     choice, not a guarantee, and the A/B that justified it is a
     single-JVM sf0.1 measurement (checkpoint-only 4.0 s vs
-    checkpoint+persists 4.3 s, tools/ab_pagerank_r7b.py). On a
+    checkpoint+persists 4.3 s, ab_pagerank_r7b.py in git history). On a
     multi-executor cluster with AQE the distinct-union and out-degree
     aggregate may be recomputed every unrolled iteration; re-measure
     there, and flip this flag if they are. Callers who enable it own

@@ -1206,7 +1206,7 @@ def ivf_assign_two_level(
     APPROXIMATE by construction: a vector's true nearest centroid can
     live in an unprobed super-cell (recall improves with
     ``n_super_probe``). Measured trade at nlist=10⁴ / n_super=100 over
-    the 20k-vector sf1 corpus (``tools/bench_twolevel_r9.json``):
+    the 20k-vector sf1 corpus (``bench_twolevel_r9.json`` in git history):
     agreement with flat (exact) assignment 0.888 / 0.922 / 0.956 /
     0.990 / 0.999 at n_super_probe = 1 / 2 / 4 / 8 / 16, with candidate
     pairs 4.2M / 4.9M / 6.3M / 15.6M / 33.0M: the default of 4 sits at
@@ -1236,7 +1236,7 @@ def ivf_assign_two_level(
     survivors per vector. Both stages run KEY-ONLY — (id, salt, struct)
     rows, never the vector payload — and the payload (vec, nrm) rejoins
     by ``id_col`` afterwards. Census at nlist=10⁴
-    (``tools/bench_twolevel_r10.json``, ``topk_buffer_census``): the
+    (``bench_twolevel_r10.json`` in git history, ``topk_buffer_census``): the
     unsalted per-vector buffer bound tracks the candidate count; the
     salted bounds don't.
 
@@ -2624,7 +2624,7 @@ def binary_hamming_radius_pairs(
     collapses multi-band matches. ``band_bits`` resolves through
     :func:`_resolve_band_bits` (coarsest width that covers ``radius``;
     an explicit width that cannot guarantee raises rather than return
-    partial pairs). The radius census (tools/bench_binary_r11.json)
+    partial pairs). The radius census (bench_binary_r11.json in git history)
     pairs candidate counts against the N² cross at sf1.
 
     Output: (id_a, id_b, hamming) with ``id_a < id_b``,
@@ -2889,7 +2889,7 @@ def binary_hamming_topk(
     regime (d ≤ 3 at the default 4×16-bit banding), where the first pass
     touches band-bucket pairs instead of nq×N.
 
-    Measured quality (tools/bench_binary_r10.json): at the sf0.01 gate
+    Measured quality (bench_binary_r10.json in git history): at the sf0.01 gate
     fixture (shortlist = 10% of the 500-vector corpus) per-query
     recall@5 spans 0.2-1.0, mean 0.66; on the sf1 cluster-generated
     fixture 64 mean-threshold bits saturate recall at 1.0 even without
@@ -3618,7 +3618,7 @@ def pq_code_census(
     collapse to ONE code per subspace, ADC ties across the block, and
     top-k membership inside a tie is id-arbitrary — recall craters
     (measured 0.04 → 0.008 on the r12 hard fixture,
-    tools/bench_pq_r12.json) while every row-algebra hash stays green.
+    bench_pq_r12.json in git history) while every row-algebra hash stays green.
 
     Output, one row per subspace: ``(s, n_codes_used,
     top_code_share)`` — ``top_code_share`` is the fraction of the
@@ -3792,9 +3792,9 @@ def semdedup(
     count, not the corpus's. This is a MEASURED operating point, not
     prose: the ``semdedup_survivors_cellcap`` gate query runs the
     cell-capped regime across the committed sf1→sf10 decade with an
-    in-cell pair census (`tools/bench_scale_r7.json`: pairs grow ~9.3×
+    in-cell pair census (bench_scale_r7.json in git history: pairs grow ~9.3×
     per 10× vectors, wall ~9.1×, vs 33.7× pair growth for the isqrt(N)
-    sizing); `queries_r7.py` derives why the fixture-scale cap is 100
+    sizing); ``catalog/similarity.py`` derives why the fixture-scale cap is 100
     (N/4096 only binds above N = 4096²). The large-nlist assignment cost
     this sizing implies is handled by :func:`ivf_assign`'s Arrow
     form (broadcast-shipped centroids) up to ``TWO_LEVEL_MIN_NLIST``,

@@ -117,19 +117,22 @@ def bucketed_stream_agg(
     )
 
 
+#: stateful-operator partitions of a bounded stream (see :func:`_run_bounded`)
+STATE_PARTITIONS = 4
+
+
 def _run_bounded(
     spark: SparkSession,
     writer: DataStreamWriter,
     name: str,
     timeout_s: int,
-    n_state_partitions: int,
 ) -> None:
     """Drain a bounded source: start ``writer`` with the availableNow
     trigger and wait for it to stop. A query still running after
     ``timeout_s`` is stopped and raises TimeoutError, so a hung trigger
     never passes off a partial sink as the result.
 
-    ``spark.sql.shuffle.partitions`` is scoped to ``n_state_partitions``
+    ``spark.sql.shuffle.partitions`` is scoped to :data:`STATE_PARTITIONS`
     while the query STARTS: the stateful-operator partition count — hence
     the number of state-store instances — is frozen at query start from
     this conf. Local bounded replays don't need 32 state stores each paying
@@ -137,7 +140,7 @@ def _run_bounded(
     gate while cutting the fixed per-batch state overhead ~8×. Results are
     partitioning-independent — a latency knob, never a semantics knob."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
     try:
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination(timeout_s)
@@ -153,7 +156,6 @@ def run_to_memory(
     agg: DataFrame,
     query_name: str,
     timeout_s: int = 300,
-    n_state_partitions: int = 4,
     output_mode: str = "complete",
 ) -> DataFrame:
     """Execute a streaming query to completion over a bounded source
@@ -164,7 +166,6 @@ def run_to_memory(
         agg.writeStream.format("memory").queryName(query_name).outputMode(output_mode),
         query_name,
         timeout_s,
-        n_state_partitions,
     )
     return spark.table(query_name)
 
@@ -175,13 +176,13 @@ def run_to_parquet(
     path: str,
     checkpoint: str,
     timeout_s: int = 300,
-    n_state_partitions: int = 4,
 ) -> None:
     """Execute a complete-mode streaming aggregation with a ``foreachBatch``
-    parquet sink: every microbatch idempotently overwrites ``path`` with the
-    full current result. Overwrite-by-batch is the restart-safe pattern for
-    object-store sinks without transactional append — replaying a batch
-    after a failure rewrites the same content instead of duplicating it."""
+    parquet sink: every microbatch overwrites ``path`` with the full current
+    result, so a replayed batch rewrites the same content instead of
+    duplicating it. The sink is not atomic: ``mode("overwrite")`` deletes
+    ``path`` before it writes, so a crash mid-batch leaves readers an empty
+    or partial directory until the next batch completes (ROADMAP item 3)."""
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(path)
@@ -193,5 +194,4 @@ def run_to_parquet(
         .option("checkpointLocation", checkpoint),
         f"foreachBatch -> {path}",
         timeout_s,
-        n_state_partitions,
     )

@@ -118,3 +118,27 @@ def ivf_pq(corpus, queries, k=5, m=4, n_codes=16, n_centroids=16,
         index, queries, quant, codec, k=k, n_probe=n_probe,
         rerank_k=rerank_k,
     )
+
+
+def import_catalog_module_first(mod: str) -> None:
+    """In a fresh interpreter, import ``catalog.<mod>`` before anything else
+    of the catalog: all 203 queries must be there, the gate order first in
+    ``QUERIES`` and ``ORACLES``, and every query must have an oracle (the
+    rows-only census is empty)."""
+    import pathlib
+    import subprocess
+    import sys
+
+    code = (
+        f"import hbase_taggregator_spark.catalog.{mod}\n"
+        "from hbase_taggregator_spark.catalog import GATE_ORDER, ORACLES, QUERIES\n"
+        "names = list(QUERIES)\n"
+        "assert len(names) == 203, len(names)\n"
+        "assert len(set(GATE_ORDER)) == 50\n"
+        "assert names[:50] == GATE_ORDER, 'gate order not applied'\n"
+        "assert list(ORACLES)[:50] == GATE_ORDER\n"
+        "rows_only = [n for n in names if n not in ORACLES]\n"
+        "assert not rows_only, rows_only\n"
+    )
+    subprocess.run([sys.executable, "-c", code], check=True,
+                   cwd=pathlib.Path(__file__).resolve().parents[1], timeout=300)

@@ -9,7 +9,7 @@ import uuid
 import pytest
 
 from hbase_taggregator_spark import plans as P
-from hbase_taggregator_spark.queries import QUERIES
+from hbase_taggregator_spark.catalog import QUERIES
 
 SF = "/root/testdata/sf0.001"
 
@@ -50,7 +50,7 @@ def test_q3_q5_broadcast_dimensions(q):
 
 def test_events_time_range_pushdown(spark):
     """An explicit ``time_range`` reaches the scan as a pushed ``ts`` filter."""
-    from hbase_taggregator_spark.queries import T0, T_WEEK, US
+    from hbase_taggregator_spark.catalog.registry import T0, T_WEEK, US
     from hbase_taggregator_spark.sources.parquet import load_table
 
     df = load_table(spark, SF, "events", time_range=(T0 * US, T_WEEK * US))
@@ -63,7 +63,7 @@ def test_bucketed_query_range_prunes_a_plain_load(spark):
     range to the parquet scan. In taggregator mode the pushed upper bound
     is the end of the trailing bucket (``upper_bound_us``), not t_max."""
     from hbase_taggregator_spark import TimeseriesAggregator
-    from hbase_taggregator_spark.queries import T0, T_WEEK
+    from hbase_taggregator_spark.catalog.registry import T0, T_WEEK
     from hbase_taggregator_spark.sources.parquet import load_table
 
     # pushed timestamp literals print as java.sql.Timestamp, rendered by
@@ -173,7 +173,7 @@ def _bucketed_frames(spark):
         merge_rollups,
         read_rollup,
     )
-    from hbase_taggregator_spark.queries import T0, T_WEEK, US
+    from hbase_taggregator_spark.catalog.registry import T0, T_WEEK, US
     from hbase_taggregator_spark.sources.parquet import load_table
 
     events = load_table(spark, SF, "events")
@@ -219,7 +219,7 @@ def test_warm_load_and_query_job_floor(spark):
     and a warm one-verb query collected by ``to_map`` runs the scan +
     partial-aggregate job and the final-aggregate job, nothing else."""
     from hbase_taggregator_spark import TimeseriesAggregator
-    from hbase_taggregator_spark.queries import T0
+    from hbase_taggregator_spark.catalog.registry import T0
     from hbase_taggregator_spark.sources.parquet import load_table
 
     load_table(spark, SF, "events")

@@ -172,7 +172,7 @@ def test_ivf_search_twolevel_quantizer_matches_flat_under_full_probe(spark):
 
 
 def test_twolevel_recall_gate_shape(spark):
-    from hbase_taggregator_spark import queries as q
+    from hbase_taggregator_spark import catalog as q
 
     out = q.QUERIES["similarity_twolevel_recall_at_5"](spark, SF).collect()
     assert len(out) == 10
@@ -253,7 +253,7 @@ def test_binary_hamming_corpus_vectors_never_shuffle(spark):
 
 
 def test_binary_hamming_gate_shape_and_quality(spark):
-    from hbase_taggregator_spark import queries as q
+    from hbase_taggregator_spark import catalog as q
 
     out = q.QUERIES["similarity_binary_hamming_recall_at_5"](spark, SF).collect()
     assert len(out) == 10

@@ -17,7 +17,8 @@ cell-mean reference follows the decimal contract; appends to the
 persisted residual layout encode against the STORED means/books;
 and the clustered-fixture regime demonstration — residual codes must
 substantially outrank raw codes where the coarse quantizer explains
-the variance (tools/bench_pq_residual_clustered_r14.py at test size).
+the variance (the fixture of bench_pq_residual_clustered_r14.py, in git
+history, at test size).
 """
 
 from __future__ import annotations
@@ -192,8 +193,8 @@ def test_residual_beats_raw_on_clustered_fixture(spark):
     testdata corpus can't show it — its cells explain only ~6-9% of
     variance): on a deterministic 16-cluster fixture (centers
     sin((c+1)(i+1)), members + 0.05·sin-noise — the
-    tools/bench_pq_residual_clustered_r14.py construction at reduced
-    size) the coarse quantizer explains ~99% of energy, raw codes
+    construction of bench_pq_residual_clustered_r14.py, in git history,
+    at reduced size) the coarse quantizer explains ~99% of energy, raw codes
     waste their resolution re-describing the shared center, and
     residual codes must SUBSTANTIALLY outrank them. Fully
     deterministic (no RNG anywhere in fixture or pipeline), so the

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from conftest import ivf_pq
 from hbase_taggregator_spark import plans as P
-from hbase_taggregator_spark.queries import PLAN_FRAMES, QUERIES
+from hbase_taggregator_spark.catalog import PLAN_FRAMES, QUERIES
 
 SF = "/root/testdata/sf0.001"
 
@@ -153,12 +153,12 @@ def test_opq_beats_plain_residual_on_lowrank(spark):
     on the rank-8 correlated fixture at the tight 32-bit budget,
     rotation must (a) not lose to residual-only at the fixed rerank
     budget and (b) SUBSTANTIALLY beat raw codes without rerank — the
-    census separations (tools/bench_opq_clustered_r15.json: raw 0.18
+    census separations (bench_opq_clustered_r15.json in git history: raw 0.18
     vs raw+opq 0.62 no-rerank; residual 0.96 vs residual+opq 1.00 at
     rerank 20), pinned with loose bands (F.sin ulp variance across
     JVMs can flip a rank-5 near-tie)."""
     from hbase_taggregator_spark.operators import similarity as S
-    from hbase_taggregator_spark.queries_r15 import (
+    from hbase_taggregator_spark.catalog.similarity import (
         OPQ_M,
         OPQ_NCODES,
         OPQ_NLIST,
@@ -199,7 +199,7 @@ def test_opq_raw_separation_at_census_size(spark):
     bands. Built from spark.range — same construction as
     _lowrank_corpus, independent of the sf fixture size."""
     from hbase_taggregator_spark.operators import similarity as S
-    from hbase_taggregator_spark.queries_r15 import (
+    from hbase_taggregator_spark.catalog.similarity import (
         OPQ_AMP,
         OPQ_M,
         OPQ_NCODES,

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import ivf_pq
+from conftest import import_catalog_module_first, ivf_pq
 from hbase_taggregator_spark import plans as P
 from hbase_taggregator_spark.functions.decoders import (
     scaled_decimal_decoder,
@@ -290,7 +290,7 @@ def test_continuous_rollup_matches_direct(spark):
     """Coarse-from-fine must equal coarse-from-raw bit-for-bit (decimal
     re-summation), and reject non-nesting intervals."""
     from hbase_taggregator_spark.operators.timeseries import continuous_rollup
-    from hbase_taggregator_spark.queries import QUERIES, T0, T_WEEK
+    from hbase_taggregator_spark.catalog.registry import T0, T_WEEK
     from hbase_taggregator_spark.sources.parquet import load_table
 
     events = load_table(spark, SF, "events")
@@ -1062,24 +1062,9 @@ def test_fuzzy_entity_resolution_merges_chains(spark):
 
 
 def test_queries_r3_direct_import_is_safe():
-    """Importing the late-wave module FIRST must not trip the gate-window
-    assert mid-circular-import (regression: AssertionError 'gate window
-    names drifted'). Needs a fresh interpreter — this process already has
-    the package imported."""
-    import subprocess
-    import sys
-
-    code = (
-        "import hbase_taggregator_spark.queries_r3 as r3\n"
-        "from hbase_taggregator_spark import queries as q\n"
-        "from hbase_taggregator_spark.queries_ext import _GATE_WINDOW\n"
-        "names = list(q.QUERIES)\n"
-        "assert names[:50] == list(_GATE_WINDOW), 'window not applied'\n"
-        "print(len(names))\n"
-    )
-    out = subprocess.run(
-        [sys.executable, "-c", code],
-        capture_output=True, text=True, cwd="/root/repo", timeout=120,
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    assert int(out.stdout.strip()) >= 150
+    """The late-wave queries (asof, band joins, dedup, profiling) now sit
+    mostly in the relational catalog module; importing it FIRST must still
+    leave the gate order applied (regression: AssertionError 'gate window
+    names drifted' mid-circular-import). Needs a fresh interpreter — this
+    process already has the package imported."""
+    import_catalog_module_first("relational")

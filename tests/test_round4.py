@@ -9,6 +9,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import import_catalog_module_first
 from hbase_taggregator_spark import plans as P
 from hbase_taggregator_spark.operators import similarity as S
 from hbase_taggregator_spark.operators import sketch as K
@@ -215,56 +216,32 @@ def test_decode_pixels_spark_path(spark):
         assert r["pixel_checksum"] == sum((i + 1) * p for i, p in enumerate(px))
 
 
-# --- gate window applies on every import entry point -----------------------
+# --- gate order applies on every import entry point ------------------------
 
 
 @pytest.mark.parametrize(
     "mod",
     [
-        "queries",
-        "queries_ext",
-        "queries_r3",
-        "queries_r4",
-        "queries_r5",
-        "queries_r6",
-        "queries_r7",
-        "queries_r8",
-        "queries_r9",
-        "queries_r10",
-        "queries_r11",
+        # id: the module that used to register the queries; value: the
+        # catalog module that now holds most of them
+        pytest.param("relational", id="queries"),
+        pytest.param("relational", id="queries_ext"),
+        pytest.param("relational", id="queries_r3"),
+        pytest.param("text", id="queries_r4"),
+        pytest.param("text", id="queries_r5"),
+        pytest.param("timeseries", id="queries_r6"),
+        pytest.param("text", id="queries_r7"),
+        pytest.param("similarity", id="queries_r8"),
+        pytest.param("similarity", id="queries_r9"),
+        pytest.param("similarity", id="queries_r10"),
+        pytest.param("similarity", id="queries_r11"),
     ],
 )
 def test_gate_window_applied_on_every_import_path(mod):
-    """All import-time window applies are tolerant (no module is
-    guaranteed to finish last on every entry point), so the ordering —
-    and name-drift detection — must be asserted per path in a fresh
-    interpreter."""
-    import subprocess
-    import sys
-
-    code = (
-        f"import hbase_taggregator_spark.{mod}\n"
-        "from hbase_taggregator_spark import queries as q\n"
-        "from hbase_taggregator_spark.queries_ext import _GATE_WINDOW\n"
-        "names = list(q.QUERIES)\n"
-        "assert len(set(_GATE_WINDOW)) == 50\n"
-        "assert names[:50] == list(_GATE_WINDOW), 'window not applied'\n"
-        # r8: the rows-only census is ZERO — every registered query has
-        # a DuckDB oracle (HLL++ promoted to an error-bound gate,
-        # single-probe LSH-ANN to a full restatement, LTTB's sequential
-        # pick to a recursive CTE over its exact integer algebra)
-        "ROWS_ONLY = set()\n"
-        "missing = [n for n in _GATE_WINDOW"
-        " if n not in q.ORACLES and n not in ROWS_ONLY]\n"
-        "assert not missing, f'window names without oracle: {missing}'\n"
-        "print(len(names))\n"
-    )
-    out = subprocess.run(
-        [sys.executable, "-c", code],
-        capture_output=True, text=True, cwd="/root/repo", timeout=120,
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    assert int(out.stdout.strip()) >= 157
+    """Whichever catalog module an entry point imports first, the gate
+    order and the oracle census must hold, so they are asserted per path
+    in a fresh interpreter."""
+    import_catalog_module_first(mod)
 
 
 # --- HBase connector row-shape contract without the jar --------------------
@@ -297,7 +274,7 @@ def test_hbase_fixture_row_shape_through_table_from_rowkey(spark):
     same events with second-floored timestamps — any error in the cell
     pivot, the double round-trip, or the mask decode breaks equality."""
     from hbase_taggregator_spark.operators.timeseries import TimeseriesAggregator
-    from hbase_taggregator_spark.queries import T0, T_WEEK
+    from hbase_taggregator_spark.catalog.registry import T0, T_WEEK
     from hbase_taggregator_spark.sources.hbase import (
         hbase_catalog,
         load_hbase_fixture,
@@ -429,7 +406,7 @@ def test_engine_bucketed_view_matches_dataframe_path(spark):
     from hbase_taggregator_spark.operators.timeseries import (
         TimeseriesAggregator,
     )
-    from hbase_taggregator_spark.queries import T0, T_WEEK
+    from hbase_taggregator_spark.catalog.registry import T0, T_WEEK
 
     eng = Engine(spark, SF)
     eng.register_bucketed_view(

@@ -1,6 +1,5 @@
-"""Round-5 tests: circular-import-proof oracle fragments, adaptive
-semdedup nlist, ivf_assign two-phase (double-prune / exact-fallback)
-argmax, simhash_pairs max_bucket recall contract, Jackson-lenient JSON
+"""Round-5 tests: adaptive semdedup nlist, ivf_assign two-phase
+(double-prune / exact-fallback) argmax, simhash_pairs max_bucket recall contract, Jackson-lenient JSON
 quarantine contract, and the round-5 operators — incremental admission
 dedup (batch + streaming foreachBatch composition), temperature source
 mixing, boilerplate removal, intra-document segment dedup, PageRank,
@@ -9,54 +8,12 @@ fixtures and algebraic properties."""
 
 from __future__ import annotations
 
-import subprocess
-import sys
-
 from pyspark.sql import functions as F
 
 from hbase_taggregator_spark.operators import dedup as D
 from hbase_taggregator_spark.operators import similarity as S
 
 SF = "/root/testdata/sf0.001"
-
-
-# --- oracle_fragments is a leaf: importable everywhere, imports nothing ----
-
-
-def test_oracle_fragments_is_a_leaf_module():
-    """The shared SQL fragments must not pull in pyspark or any package
-    module — that independence is what makes every entry point into the
-    query-module ring safe (the r4 regression: queries_r4 importing
-    _SQL_SHINGLES5 from a partially initialized queries_r3)."""
-    code = (
-        "import sys\n"
-        "import hbase_taggregator_spark.oracle_fragments as of\n"
-        # none of the query-ring modules may load as a side effect
-        "bad = [m for m in sys.modules if m.startswith('hbase_taggregator_spark.queries')]\n"
-        "assert not bad, bad\n"
-        "assert of._SQL_SHINGLES5 and of._SQL_E and of._SQL_TOKENS\n"
-        "assert 'WITH t AS' in of._simhash_sql()\n"
-        # and the module source itself imports nothing from the package
-        "import ast, inspect\n"
-        "tree = ast.parse(inspect.getsource(of))\n"
-        "for node in ast.walk(tree):\n"
-        "    if isinstance(node, ast.Import):\n"
-        "        assert not any(a.name.startswith('hbase_') for a in node.names)\n"
-        "    elif isinstance(node, ast.ImportFrom):\n"
-        "        assert not (node.module or '').startswith('hbase_')\n"
-    )
-    subprocess.run([sys.executable, "-c", code], check=True, cwd="/root/repo")
-
-
-def test_every_query_module_is_directly_importable():
-    """Each module in the registration ring must import cleanly as the
-    FIRST package import of a fresh interpreter."""
-    for mod in ("queries", "queries_ext", "queries_r3", "queries_r4", "queries_r5"):
-        subprocess.run(
-            [sys.executable, "-c", f"import hbase_taggregator_spark.{mod}"],
-            check=True,
-            cwd="/root/repo",
-        )
 
 
 # --- ivf_assign: double-prune fast path is bit-identical to exact ----------

@@ -181,7 +181,7 @@ def test_lttb_catalog_query_matches_pinned_reference_exactly(spark):
     row equality against the pinned pure-Python reference implementation
     per series, upgrading it from shape-properties to an
     oracle-equivalent gate."""
-    from hbase_taggregator_spark.queries import QUERIES
+    from hbase_taggregator_spark.catalog import QUERIES
 
     from reference_sim import lttb_reference
 
@@ -193,7 +193,7 @@ def test_lttb_catalog_query_matches_pinned_reference_exactly(spark):
         )
 
     import pyspark.sql.functions as SF_  # noqa: N812
-    from hbase_taggregator_spark.queries import T0, T_WEEK, US
+    from hbase_taggregator_spark.catalog.registry import T0, T_WEEK, US
     from hbase_taggregator_spark.sources.parquet import load_table
 
     raw = (
@@ -316,7 +316,7 @@ def test_every_oracle_sql_executes_in_duckdb():
     engine-dialect slips) in seconds instead of a full gate run."""
     import duckdb
 
-    from hbase_taggregator_spark.queries import ORACLES
+    from hbase_taggregator_spark.catalog import ORACLES
     from hbase_taggregator_spark.sources.parquet import TABLES
 
     con = duckdb.connect()
@@ -346,7 +346,8 @@ def test_hbase_rowshape_gate_decoy_discipline(spark):
     by exactly +1000×count. A pivot regression therefore cannot pass
     the gate oracle."""
     from hbase_taggregator_spark.functions.decoders import encode_value
-    from hbase_taggregator_spark.queries import QUERIES, T0, T_WEEK, US
+    from hbase_taggregator_spark.catalog import QUERIES
+    from hbase_taggregator_spark.catalog.registry import T0, T_WEEK, US
     from hbase_taggregator_spark.sources.hbase import (
         hbase_catalog,
         load_hbase_fixture,

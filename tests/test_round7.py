@@ -204,7 +204,7 @@ def test_semdedup_cellcap_sizing_regimes():
     makes the sf1→sf10 ratio measure the cell-capped regime."""
     import math
 
-    from hbase_taggregator_spark.queries_r7 import SEMDEDUP_CELL_CAP
+    from hbase_taggregator_spark.catalog.similarity import SEMDEDUP_CELL_CAP
 
     cap = SEMDEDUP_CELL_CAP
     assert max(16, 500 // cap) == 16  # sf0.01: floor (tiny corpus)
@@ -217,7 +217,7 @@ def test_semdedup_cellcap_query_matches_isqrt_drop_semantics(spark):
     is cosine ≥ threshold); only the cell geometry differs, so survivor
     SETS may differ but the structural invariants may not: vec 0 always
     survives, and a corpus with near-duplicates loses rows."""
-    from hbase_taggregator_spark.queries import QUERIES
+    from hbase_taggregator_spark.catalog import QUERIES
 
     a = {
         r["vec_id"]

@@ -592,7 +592,7 @@ def test_repeated_substrings_paper_k50_matches_reference(spark):
     cliques across groups, so 50-token windows genuinely repeat ACROSS
     the long documents — 867 duplicated occurrences in this slice) and
     pin the ENTIRE output against the pure-Python reference at k=50.
-    The census-paired k=50 timing lives in tools/bench_k50_r8.py."""
+    The census-paired k=50 timing lives in bench_k50_r8.py in git history."""
     from hbase_taggregator_spark.operators.text import (
         dedup_repeated_substrings,
     )

@@ -304,7 +304,7 @@ def test_standardize_constant_dimension_is_zero_and_oracle_parity(
     dimension pinned at the brute-forced negative-variance constant."""
     import duckdb
 
-    from hbase_taggregator_spark import queries as Q
+    from hbase_taggregator_spark import catalog as Q
 
     dim = 64
     base = [
@@ -346,7 +346,7 @@ def test_hll_gate_empty_table_returns_verdict(spark, tmp_path):
     """On an empty lineitem the exact distinct counts are 0; the
     relative-error division must be guarded (ANSI would raise) and the
     degenerate verdict is exact equality — TRUE for an empty sketch."""
-    from hbase_taggregator_spark import queries as Q
+    from hbase_taggregator_spark import catalog as Q
 
     sf_dir = str(tmp_path)
     spark.createDataFrame(
@@ -443,7 +443,7 @@ def test_null_element_vectors_drop_on_both_new_operators(spark, tmp_path):
 
     import duckdb
 
-    from hbase_taggregator_spark import queries as Q
+    from hbase_taggregator_spark import catalog as Q
 
     base = [float(((j * 13) % 19) - 9) / 19.0 for j in range(64)]
     null_mid = list(base)

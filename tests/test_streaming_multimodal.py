@@ -198,7 +198,7 @@ def test_transform_with_state_profile_or_env_gate(spark):
             stream = replay_parquet_stream(spark, f"{d}/src", max_files_per_trigger=1)
             run_to_memory(
                 spark, user_activity_profile_stream(stream), "tws_gate",
-                timeout_s=180, n_state_partitions=2, output_mode="update",
+                timeout_s=180, output_mode="update",
             )
             got = {
                 r.user_id: (r.n_events, r.n_value_buckets)

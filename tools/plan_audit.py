@@ -17,7 +17,7 @@ pushdown shape of the production serving path instead of the
 LocalTableScan the registered callable returns (VERDICT r14 #1). Those
 rows carry a trailing ``serving=yes`` marker.
 
-Usage: python tools/plan_audit.py [sf_dir] > tools/plan_audit_r15.txt
+Usage: python tools/plan_audit.py [sf_dir]   (the audit goes to stdout)
 """
 
 from __future__ import annotations
@@ -30,10 +30,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from hbase_taggregator_spark import plans as P  # noqa: E402
-from hbase_taggregator_spark.queries import (  # noqa: E402
-    PLAN_FRAMES,
-    QUERIES,
-)
+from hbase_taggregator_spark.catalog import PLAN_FRAMES, QUERIES  # noqa: E402
 from hbase_taggregator_spark.session import get_spark  # noqa: E402
 
 
