@@ -32,12 +32,10 @@ def _wrap_dec() -> Column:
 
 
 def _be_bytes_to_long(c: Column) -> Column:
-    """8-byte big-endian signed long (Bytes.toLong). conv() parses the hex
-    as unsigned; the sign bit is restored with exact decimal arithmetic
-    (the constants don't fit a Java long literal)."""
-    unsigned = F.conv(F.hex(c), 16, 10).cast("decimal(20,0)")
-    signed = F.when(unsigned >= _sign_dec(), unsigned - _wrap_dec()).otherwise(unsigned)
-    return signed.cast("long")
+    """8-byte big-endian signed long (Bytes.toLong). A negative target base
+    makes conv() read the 64-bit value as signed, so one conv per row
+    decodes it; a shorter input reads as unsigned, an empty one as NULL."""
+    return F.conv(F.hex(c), 16, -10).cast("long")
 
 
 def _long_to_be_bytes(c: Column) -> Column:

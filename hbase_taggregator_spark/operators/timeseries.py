@@ -349,14 +349,17 @@ class TimeseriesAggregator:
         """Start a query from HBase-shaped input: binary rowkey with an
         embedded int32 epoch-seconds timestamp selected by ``mask``, plus an
         optional int32 seconds-offset qualifier column — the reference's
-        key-embedded-timestamp mode (``AggregationBuilder.java:84-120``)."""
+        key-embedded-timestamp mode (``AggregationBuilder.java:84-120``).
+        The time column is decoded once per row: the range filter and the
+        bucket both read the one decoded value."""
         from hbase_taggregator_spark.sources.rowkey import rowkey_timestamp
 
         if isinstance(df, str):
             df = self.spark.table(df)
-        df = df.withColumn(
-            "__event_ts", rowkey_timestamp(rowkey_col, mask, qualifier_col)
-        )
+        # a withColumn is inlined into both range comparisons and the bucket;
+        # a filter on a generator's output stays above it, so one decode serves all
+        ts = rowkey_timestamp(rowkey_col, mask, qualifier_col)
+        df = df.select("*", F.explode(F.array(ts)).alias("__event_ts"))
         return TimeseriesQuery(df=df, ts_col="__event_ts", value_col=value_col)
 
 

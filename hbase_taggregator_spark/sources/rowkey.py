@@ -10,13 +10,14 @@ error log).
 
 Here both directions are pure column expressions (hex/conv/substring), so
 they run JVM-side inside whole-stage codegen — no Python in the scan path.
+The decode evaluates the span's ``conv`` once per row: the high-order
+placement and the int32 sign wrap are one shift pair on that value.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-INT32_SIGN = 0x80000000
 INT32_WRAP = 0x100000000
 
 
@@ -35,11 +36,11 @@ def bytes_to_int(span: Column, length: int = 4) -> Column:
     """HBase ``Bytes.toInt`` of a big-endian byte span, as a long: the
     span's bytes fill the HIGH-order positions of the 4-byte int32 (a
     ``length < 4`` span zero-pads on the right, i.e. shifts left), then
-    the int32 sign wraps."""
+    the int32 sign wraps. One shift pair does both on the span's single
+    ``conv``: left until the span's first byte tops the long, then an
+    arithmetic right shift by 32. A NULL span stays NULL."""
     raw = F.conv(F.hex(span), 16, 10).cast("long")
-    if length < 4:
-        raw = raw * F.lit(256 ** (4 - length)).cast("long")
-    return F.when(raw >= INT32_SIGN, raw - INT32_WRAP).otherwise(raw)
+    return F.shiftright(F.shiftleft(raw, 64 - 8 * length), 32)
 
 
 def rowkey_seconds(rowkey: Column | str, mask: str) -> Column:

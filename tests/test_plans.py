@@ -232,3 +232,36 @@ def test_warm_load_and_query_job_floor(spark):
         assert q.to_map(q.max())
 
     assert _jobs_run(spark, query) <= 2
+
+
+@pytest.mark.parametrize("cutoff", ["strict", "taggregator"])
+def test_rowkey_query_decodes_once(spark, tmp_path_factory, cutoff):
+    """The HBase-layout time column is decoded once per row: the range
+    filter and the bucket read one decoded attribute, so the grouped
+    five-verb plan holds a single ``conv``."""
+    from pyspark.sql import functions as F
+
+    from hbase_taggregator_spark import TimeseriesAggregator
+    from hbase_taggregator_spark.sources.rowkey import encode_rowkey
+
+    t0, hour = 1_700_000_000, 3600
+    path = str(tmp_path_factory.mktemp("rowkey") / "events_hbase.parquet")
+    spark.range(48).select(
+        encode_rowkey(b"series01", F.lit(t0) + F.col("id") * hour).alias("rowkey"),
+        (F.col("id") * 75 % hour).cast("int").alias("qualifier"),
+        F.col("id").cast("double").alias("value"),
+        (F.col("id") % 5).cast("string").alias("event_type"),
+    ).write.parquet(path)
+    q = (
+        TimeseriesAggregator(spark)
+        .table_from_rowkey(spark.read.parquet(path), "000000001111",
+                           qualifier_col="qualifier")
+        .range(t0 + hour, t0 + 40 * hour - 1800).interval(hour).mode(cutoff)
+        .group_by("event_type")
+    )
+    df = q.agg(max="max", min="min", sum="sum", avg="avg", count="count")
+    plan = P.physical_plan(df)
+    assert plan.count("conv(") == 1, plan
+    events_us = [(t0 + i * hour + i * 75 % hour) * 10**6 for i in range(48)]
+    in_range = sum(q.t_min_us <= t < q.upper_bound_us() for t in events_us)
+    assert df.agg(F.sum("count")).first()[0] == in_range

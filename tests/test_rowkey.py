@@ -3,6 +3,8 @@ key-embedded-timestamp aggregation path (AggregationBuilder.java:84-120)."""
 
 from __future__ import annotations
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -92,3 +94,53 @@ def test_rowkey_mode_aggregation_matches_reference(spark, hbase_shaped):
     got = q.to_map(q.max())
     exp = ref_aggregate(golden_cells_py(), "max", t_min, t_max, 900, "key")
     assert got == exp
+
+
+def _bytes_to_int(key: bytes | None, mask: str) -> int:
+    """``getTimestampFromRowKeyAsSeconds`` restated: the mask's first-'1' to
+    last-'1' bytes fill the high-order end of a 4-byte buffer read by
+    ``Bytes.toInt``; a NULL key or one whose length differs from the mask's
+    is 0 (``AggregationBuilder.java:104-115``)."""
+    if key is None or len(key) != len(mask):
+        return 0
+    span = key[mask.index("1"):mask.rindex("1") + 1]
+    return int.from_bytes(span.ljust(4, b"\x00"), "big", signed=True)
+
+
+@pytest.mark.parametrize(
+    "mask", ["000000001111", "1111", "0001110", "0110", "00010"]
+)
+def test_decode_matches_bytes_to_int(spark, mask):
+    """``rowkey_seconds``, ``rowkey_timestamp`` and ``table_from_rowkey`` against
+    the Python restatement over seeded random rowkeys: sign-bit spans, keys
+    of the wrong length, NULL keys and negative qualifiers; the generator
+    keeps one row per input row, a NULL qualifier giving a NULL time."""
+    rng = random.Random(f"rowkey-{mask}")
+    n = len(mask)
+    keys = [b"\x80" * n, b"\xff" * n, b"\x7f" * n, None, b"", b"\x01" * (n + 1)]
+    for _ in range(300):
+        size = n if rng.random() < 0.8 else rng.randrange(0, n + 3)
+        keys.append(rng.randbytes(size))
+    quals = [rng.randrange(-(2**31), 2**31) for _ in keys]
+    quals[-1] = None
+    rows = list(zip(range(len(keys)), keys, quals))
+    df = spark.createDataFrame(rows, "i int, rowkey binary, qualifier int")
+    got = {
+        r["i"]: (r["s"], r["t"])
+        for r in df.select(
+            "i",
+            rowkey_seconds("rowkey", mask).alias("s"),
+            F.unix_seconds(rowkey_timestamp("rowkey", mask, "qualifier")).alias("t"),
+        ).collect()
+    }
+    want = {
+        i: (_bytes_to_int(k, mask), None if q is None else _bytes_to_int(k, mask) + q)
+        for i, k, q in rows
+    }
+    assert got == want
+    generated = TimeseriesAggregator(spark).table_from_rowkey(
+        df, mask, qualifier_col="qualifier"
+    ).df.select("i", F.unix_seconds("__event_ts").alias("t")).collect()
+    assert sorted((r["i"], r["t"]) for r in generated) == sorted(
+        (i, t) for i, (_, t) in want.items()
+    )
